@@ -3,16 +3,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.get("graft-bench")
     // Warm the JVM/codegen/scan paths so the first measured query
     // reflects steady state, not session startup. Each warmup is
     // isolated: one failing must not skip the others — a skipped
@@ -292,8 +283,7 @@ object Bench {
         // the MASTER's core count (the env contract the driver scales),
         // not availableProcessors(): the r18 8-core artifact printed 32
         // inside, poisoning every scaling read of the JSON
-        s""""cpus":${scala.util.Try(cpus.trim.toInt)
-          .getOrElse(Runtime.getRuntime.availableProcessors())},""" +
+        s""""cpus":${spark.sparkContext.defaultParallelism},""" +
         s""""failed":${fmtList(failed)},"sf":"$sfDir"}"""
     }
     java.nio.file.Files.write(

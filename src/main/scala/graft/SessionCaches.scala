@@ -27,18 +27,81 @@ object SessionCaches {
   def register(spark: SparkSession)(cleanup: () => Unit): Unit =
     cleanups.computeIfAbsent(spark, { s =>
       s.sparkContext.addSparkListener(new SparkListener {
-        override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit = {
-          val q = cleanups.remove(s)
-          if (q != null) q.forEach { f => try f() catch { case _: Throwable => () } }
-        }
+        override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit = endSession(s)
       })
       new ConcurrentLinkedQueue[() => Unit]()
     }).add(cleanup)
+
+  /** Run and drop `spark`'s cleanups — what its application end does. */
+  private[graft] def endSession(spark: SparkSession): Unit = {
+    val q = cleanups.remove(spark)
+    if (q != null) q.forEach { f => try f() catch { case _: Throwable => () } }
+  }
 
   /** Number of sessions currently holding registered cleanups (spec
     * observable).
     */
   private[graft] def trackedSessions: Int = cleanups.size
+
+  /** Cleanups waiting on `spark`'s application end (spec observable:
+    * a memo must register once per entry, not once per miss).
+    */
+  private[graft] def pendingCleanups(spark: SparkSession): Int =
+    Option(cleanups.get(spark)).fold(0)(_.size)
+
+  /** One build-once memo site: a value per (session, key), built on
+    * first use, with ONE cleanup per entry that drops it and runs
+    * `release` on it (e.g. `unpersist`) when the session ends.
+    *
+    * Each site owns its own map: `computeIfAbsent` throws on re-entry
+    * into the same map, and builds call other memos
+    * (`Curation.dedupCanonical` → `dedupClusters`, `Opq.model` →
+    * `Pca.fit`); one map per site also keeps unrelated multi-second
+    * builds off each other's bin lock.
+    */
+  final class Memo[K, V] private[SessionCaches] (release: V => Unit) {
+    private val entries = new ConcurrentHashMap[(SparkSession, K), V]()
+    private val tracked = ConcurrentHashMap.newKeySet[(SparkSession, K)]()
+
+    // one cleanup per (session, key), however often the entry is rebuilt
+    private def track(key: (SparkSession, K)): Unit =
+      if (tracked.add(key)) register(key._1) { () =>
+        tracked.remove(key)
+        Option(entries.remove(key)).foreach(release)
+      }
+
+    /** The value for `k`, built once per (session, k). */
+    def apply(spark: SparkSession, k: K)(build: => V): V =
+      entries.computeIfAbsent((spark, k), { key =>
+        val v = build
+        track(key)
+        v
+      })
+
+    /** The value for `k` while `valid` accepts it, else a fresh `build`
+      * that replaces it — the signature-validated form for state that
+      * moves within a session (manifest listings, index versions,
+      * export head tokens). Still one entry and one cleanup per
+      * (session, k), however many states it sees; a superseded value
+      * is dropped without `release` (a reader may still hold it).
+      */
+    def refresh(spark: SparkSession, k: K)(valid: V => Boolean)(build: => V): V = {
+      val key = (spark, k)
+      val cur = entries.get(key)
+      if (cur != null && valid(cur)) cur
+      else {
+        val v = entries.compute(key, (_, prev) =>
+          if (prev != null && valid(prev)) prev else build)
+        track(key)
+        v
+      }
+    }
+
+    /** Drop the entry for `k` (without `release`); the next use rebuilds. */
+    def invalidate(spark: SparkSession, k: K): Unit = entries.remove((spark, k))
+  }
+
+  def memo[K, V](release: V => Unit = (_: V) => ()): Memo[K, V] = new Memo(release)
 
   /** A bounded, thread-safe LRU map for VALUE-keyed memo caches whose
     * key space grows with history (delete-file path sets, chain file
@@ -55,22 +118,4 @@ object SessionCaches {
         override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean =
           size() > maxEntries
       })
-
-  /** The build-once PERSISTED-FRAME memo every session cache shares
-    * (OTLP parses, proto round-trip frames, …): compute + persist on
-    * first use per (session, key), register the unpersist cleanup,
-    * serve the cached frame afterwards — one copy of the pattern
-    * instead of a hand-rolled block per cache (the persisted twin of
-    * [[graft.sources.FixtureBuild.once]]).
-    */
-  def memoPersist[K](cache: ConcurrentHashMap[(SparkSession, K),
-                       org.apache.spark.sql.DataFrame],
-                     spark: SparkSession, k: K)
-                    (build: => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    cache.computeIfAbsent((spark, k), { key =>
-      register(spark) { () =>
-        Option(cache.remove(key)).foreach(_.unpersist(false))
-      }
-      build.persist()
-    })
 }

@@ -29,33 +29,23 @@ object Clustering {
     * re-scanning parquet every iteration.
     */
   def centroids(spark: SparkSession, dir: String, k: Int, iters: Int = 5): Array[(Int, Seq[Double])] =
-    centroidCache.computeIfAbsent((spark, embeddingsSig(spark, dir), k, iters), { key =>
-      graft.SessionCaches.register(spark)(() => { centroidCache.remove(key); () })
+    centroidCache(spark, (embeddingsSig(spark, dir), k, iters)) {
       centroidsOf(spark,
         Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding").as("v")),
         k, iters)
-    })
+    }
 
   /** Listing signature of the embeddings table under `dir` — the memo
     * key component that invalidates [[centroids]] if the corpus parquet
-    * is replaced mid-session (the [[graft.sources.LogSync]] registry
-    * caches' name:len:mtime discipline; contract corpora are immutable,
+    * is replaced mid-session ([[graft.sources.LogSync.registryListingSig]],
+    * the registry caches' name:len:mtime walk; contract corpora are immutable,
     * but the memo must not silently serve a model trained on a prior
     * corpus if that assumption is ever broken).
     */
-  private def embeddingsSig(spark: SparkSession, dir: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/embeddings.parquet")
-    try {
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val it = fs.listFiles(p, true)
-      val b = Seq.newBuilder[String]
-      while (it.hasNext) {
-        val s = it.next()
-        b += s"${s.getPath}:${s.getLen}:${s.getModificationTime}"
-      }
-      b.result().sorted.mkString(s"$dir|", "|", "")
-    } catch { case _: java.io.IOException => s"$dir|unlistable" }
-  }
+  private def embeddingsSig(spark: SparkSession, dir: String): String =
+    Option(graft.sources.LogSync.registryListingSig(spark,
+      new org.apache.hadoop.fs.Path(s"$dir/embeddings.parquet"))._1)
+      .getOrElse(s"$dir|unlistable")
 
   /** EXPLICITLY-TIMED TRAINING for the bench: the k-means model behind
     * `dedup_semantic`/`contamination_semantic` (k=16) and `emb_kmeans`
@@ -92,8 +82,7 @@ object Clustering {
     * (retraining, rotated corpora) must always train fresh.
     */
   private val centroidCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Int, Int),
-      Array[(Int, Seq[Double])]]()
+    graft.SessionCaches.memo[(String, Int, Int), Array[(Int, Seq[Double])]]()
 
   /** [[centroids]] over an arbitrary `(vec_id, v)` working set — the
     * entry point index RETRAINING uses (the corpus then lives in the

@@ -225,10 +225,7 @@ object Curation {
     * checks exact agreement with a local union-find at small sf.
     */
   def dedupClusters(spark: SparkSession, dir: String, maxIters: Int = 20): DataFrame =
-    clusterCache.computeIfAbsent((spark, dir, maxIters), { key =>
-      graft.SessionCaches.register(spark)(() => { clusterCache.remove(key); () })
-      dedupClustersBuild(spark, dir, maxIters)
-    })
+    clusterCache(spark, (dir, maxIters))(dedupClustersBuild(spark, dir, maxIters))
 
   /** Build-once memo for [[dedupClusters]] — the [[dedupRank]]
     * `rankCache` discipline applied to the labels: the iteration ends
@@ -239,8 +236,7 @@ object Curation {
     * query — the round-6 bench showed dedup_keep's cold path paying
     * the chain ~3× its warm time.
     */
-  private val clusterCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Int), DataFrame]()
+  private val clusterCache = graft.SessionCaches.memo[(String, Int), DataFrame]()
 
   /** Conditional broadcast for near-dup control tables — the
     * [[graft.sources.LakeDml]] `maxRewriteFiles` honesty discipline
@@ -346,10 +342,7 @@ object Curation {
     * under AQE exactly as in [[dedupClusters]].
     */
   def dedupRank(spark: SparkSession, dir: String, iters: Int = 5): DataFrame =
-    rankCache.computeIfAbsent((spark, dir, iters), { key =>
-      graft.SessionCaches.register(spark)(() => { rankCache.remove(key); () })
-      dedupRankBuild(spark, dir, iters)
-    })
+    rankCache(spark, (dir, iters))(dedupRankBuild(spark, dir, iters))
 
   /** Build-once memo for [[dedupRank]]: the K-round iteration ends in a
     * materializing localCheckpoint, so the cached value is a tiny
@@ -358,8 +351,7 @@ object Curation {
     * Same immutable-corpus-per-session contract and [[graft
     * .SessionCaches]] lifecycle as the shared edge set it derives from.
     */
-  private val rankCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Int), DataFrame]()
+  private val rankCache = graft.SessionCaches.memo[(String, Int), DataFrame]()
 
   private def dedupRankBuild(spark: SparkSession, dir: String, iters: Int): DataFrame = {
     val edges = Dedup.ngramJaccard(spark, dir).select(col("da"), col("db"))
@@ -428,18 +420,14 @@ object Curation {
     * composition, not just the pieces.
     */
   def dedupCanonical(spark: SparkSession, dir: String): DataFrame =
-    canonCache.computeIfAbsent((spark, dir), { key =>
-      graft.SessionCaches.register(spark)(() => { canonCache.remove(key); () })
-      dedupCanonicalBuild(spark, dir).localCheckpoint()
-    })
+    canonCache(spark, dir)(dedupCanonicalBuild(spark, dir).localCheckpoint())
 
   /** Build-once memo: the keeper table is consumed by the contract
     * query AND by [[dedupKeep]] (where [[broadcastIfSmall]]'s count
     * would otherwise execute the whole aggregation chain a second
     * time); the checkpoint flattens it to a cluster-cardinality frame.
     */
-  private val canonCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val canonCache = graft.SessionCaches.memo[String, DataFrame]()
 
   private def dedupCanonicalBuild(spark: SparkSession, dir: String): DataFrame = {
     val lab = dedupClusters(spark, dir)

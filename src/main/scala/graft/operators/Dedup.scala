@@ -91,12 +91,9 @@ object Dedup {
     * J ≥ 0.8 would require ~all of both documents to be stop-phrases.
     */
   def ngramJaccard(spark: SparkSession, dir: String, dfCap: Int = 100): DataFrame =
-    edgeCache.computeIfAbsent((spark, dir, dfCap), { key =>
-      graft.SessionCaches.register(spark) { () =>
-        Option(edgeCache.remove(key)).foreach(_.unpersist(false))
-      }
+    edgeCache(spark, (dir, dfCap)) {
       ngramJaccardOn(Tables.documents(spark, dir), dfCap).persist()
-    })
+    }
 
   /** The near-dup edge set is the SHARED INTERMEDIATE of the whole
     * dedup stage family — the pairwise report consumes it directly,
@@ -116,7 +113,7 @@ object Dedup {
     * a rewritten corpus takes a new dir or session.
     */
   private val edgeCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Int), DataFrame]()
+    graft.SessionCaches.memo[(String, Int), DataFrame](_.unpersist(false))
 
   /** df-capped inverted index (doc_id, s): shingles in more than
     * `dfCap` documents are stop-phrases and dropped, so no index

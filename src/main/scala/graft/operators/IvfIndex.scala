@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -40,8 +38,7 @@ import graft.sources.Tables
 object IvfIndex {
 
   /** (activeVersion, centroids) per (session, dir). */
-  private val built =
-    new ConcurrentHashMap[(SparkSession, String), (Int, Array[(Int, Seq[Double])])]()
+  private val built = graft.SessionCaches.memo[String, (Int, Array[(Int, Seq[Double])])]()
 
   private[graft] def root(dir: String): String =
     s"/tmp/graft_ivfv_${Integer.toHexString(dir.hashCode & 0x7fffffff)}"
@@ -128,33 +125,23 @@ object IvfIndex {
   private def ensureAttempt(spark: SparkSession, dir: String,
                             retry: Boolean): (Int, Array[(Int, Seq[Double])]) = {
     VectorFunctions.register(spark)
-    val key = (spark, dir)
     activeOnDisk(spark, dir) match {
       case Some(v) =>
-        val cached = built.get(key)
-        if (cached != null && cached._1 == v) cached
-        else {
-          // TOCTOU: a concurrent retrain+dropVersion can remove v
-          // between the marker read above and this centroid read —
-          // re-resolve the marker once and retry before surfacing
-          val loaded =
-            try (v, readCentroids(spark, dir, v))
-            catch {
-              case _: org.apache.spark.sql.AnalysisException if retry =>
-                return ensureAttempt(spark, dir, retry = false)
-              case _: java.io.FileNotFoundException if retry =>
-                return ensureAttempt(spark, dir, retry = false)
-            }
-          graft.SessionCaches.register(spark)(() => { built.remove(key); () })
-          built.put(key, loaded)
-          loaded
+        // TOCTOU: a concurrent retrain+dropVersion can remove v
+        // between the marker read above and this centroid read —
+        // re-resolve the marker once and retry before surfacing
+        try built.refresh(spark, dir)(_._1 == v)((v, readCentroids(spark, dir, v)))
+        catch {
+          case _: org.apache.spark.sql.AnalysisException if retry =>
+            ensureAttempt(spark, dir, retry = false)
+          case _: java.io.FileNotFoundException if retry =>
+            ensureAttempt(spark, dir, retry = false)
         }
       case None =>
         // no marker on disk = not built (even if a stale cache entry
-        // survives from a deleted index): compute(), not
-        // computeIfAbsent(), so the rebuild actually runs
-        graft.SessionCaches.register(spark)(() => { built.remove(key); () })
-        built.compute(key, { (_, _) =>
+        // survives from a deleted index): never valid, so the rebuild
+        // actually runs
+        built.refresh(spark, dir)(_ => false) {
           val k = cellCount(Tables.embeddings(spark, dir).count())
           val cents = Clustering.centroids(spark, dir, k)
           assignedTo(
@@ -164,7 +151,7 @@ object IvfIndex {
           writeCentroids(spark, dir, 1, cents)
           writeMarker(spark, dir, 1)
           (1, cents)
-        })
+        }
     }
   }
 
@@ -269,7 +256,7 @@ object IvfIndex {
       .write.mode("overwrite").partitionBy("cell").parquet(versionPath(dir, v + 1))
     writeCentroids(spark, dir, v + 1, cents)
     writeMarker(spark, dir, v + 1)
-    built.put((spark, dir), (v + 1, cents))
+    built.refresh(spark, dir)(_._1 == v + 1)((v + 1, cents))
     v + 1
   }
 

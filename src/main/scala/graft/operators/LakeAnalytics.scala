@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.{LakeIndex, LogSync, LogWriter, OtlpLogs, Tables}
+import graft.sources.{FixtureBuild, LakeIndex, LogSync, LogWriter, OtlpLogs, Tables}
 
 /** End-to-end lake queries over the reference's 15-column OTel schema:
   * the full Quick-Start flow (reference README.md; scripts/sync-logs.sh)
@@ -48,35 +48,24 @@ object LakeAnalytics {
         extraResourceAttrs =
           Seq("k8s.namespace.name" -> concat(lit("ns-"), col("user_id") % 3))).as("payload"))
 
-  private val built = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val lake = FixtureBuild("graft_lake_v5")
 
-  /** Build (idempotently, once per sf-dir) the registered lake and
-    * return its root. A `_built` marker (underscore: invisible to data
-    * scans) skips the rebuild across JVMs; the in-process map skips
-    * the FS check across queries.
+  /** Build (idempotently, once per sf-dir, via [[FixtureBuild]]) the
+    * registered lake and return its root.
     */
   private[graft] def lakeRoot(spark: SparkSession, dir: String): String =
-    built.computeIfAbsent(dir, _ => {
+    lake(spark, dir) { root =>
       // v5: envelopes now carry trace/span context and numeric
       // severity — bump the path so a pre-trace lake is rebuilt
-      val root = s"/tmp/graft_lake_v5_${Integer.toHexString(dir.hashCode & 0x7fffffff)}"
-      val rootPath = new Path(root)
-      val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val marker = new Path(s"$root/_built")
-      if (!fs.exists(marker)) {
-        fs.delete(rootPath, true)
-        // day-granularity layout: partition granularity sized to the
-        // data volume. The reference's hourly cells are right at
-        // 100 TB; at test scale they hold ~a dozen rows each, and the
-        // resulting thousands of tiny files make every full-lake query
-        // pay per-file open cost. `hour` remains a row column.
-        LogWriter.write(OtlpLogs.parse(payloads(spark, dir), col("payload")), root,
-          layout = LogWriter.DailyLayout)
-        LogSync.sync(spark, root)
-        fs.create(marker).close()
-      }
-      root
-    })
+      // day-granularity layout: partition granularity sized to the
+      // data volume. The reference's hourly cells are right at
+      // 100 TB; at test scale they hold ~a dozen rows each, and the
+      // resulting thousands of tiny files make every full-lake query
+      // pay per-file open cost. `hour` remains a row column.
+      LogWriter.write(OtlpLogs.parse(payloads(spark, dir), col("payload")), root,
+        layout = LogWriter.DailyLayout)
+      LogSync.sync(spark, root)
+    }
 
   /** Severity count by service over the registered lake (the README
     * "Severity count by service" query, run where the reference runs
@@ -105,7 +94,7 @@ object LakeAnalytics {
   }
 
   private val restServers =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, graft.serving.IceRestCatalog.Server]()
+    graft.SessionCaches.memo[Unit, graft.serving.IceRestCatalog.Server](_.stop())
 
   /** [[severityByService]] THROUGH A LIVE REST CATALOG — the full
     * reference topology in one query: the lake's Iceberg export is
@@ -122,13 +111,7 @@ object LakeAnalytics {
   def icebergRestSeverity(spark: SparkSession, dir: String): DataFrame = {
     val root = lakeRoot(spark, dir)
     graft.sources.IcebergExport.ensureExport(spark, root)
-    val srv = restServers.computeIfAbsent(spark, { s =>
-      val started = graft.serving.IceRestCatalog.start(s)
-      graft.SessionCaches.register(s)(() => {
-        restServers.remove(s); started.stop()
-      })
-      started
-    })
+    val srv = restServers(spark, ())(graft.serving.IceRestCatalog.start(spark))
     // point otel.logs at the newest metadata version (version-hint)
     val metaDir = new Path(s"$root/_iceberg/metadata")
     val fs = metaDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -182,38 +165,30 @@ object LakeAnalytics {
       .orderBy(col("service_name"), col("severity_text"))
   }
 
-  private val builtInc = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val incLake = FixtureBuild("graft_lake_inc_v1")
 
   /** Two-phase lake fixture for [[icebergIncSeverity]]: day ≤ 15 lands
     * first (sync + export #1), the rest second (sync + export #2 —
     * the DELTA export). Marker-idempotent like [[lakeRoot]].
     */
   private def incRoot(spark: SparkSession, dir: String): String =
-    builtInc.computeIfAbsent(dir, _ => {
-      val root = s"/tmp/graft_lake_inc_v1_${Integer.toHexString(dir.hashCode & 0x7fffffff)}"
-      val rootPath = new Path(root)
-      val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val marker = new Path(s"$root/_built")
-      if (!fs.exists(marker)) {
-        fs.delete(rootPath, true)
-        val logs = OtlpLogs.parse(payloads(spark, dir), col("payload")).cache()
-        LogWriter.write(logs.filter(dayofmonth(col("timestamp")) <= 15), root,
-          layout = LogWriter.DailyLayout)
-        LogSync.sync(spark, root)
-        graft.sources.IcebergExport.export(spark, root)
-        LogWriter.write(logs.filter(dayofmonth(col("timestamp")) > 15), root,
-          layout = LogWriter.DailyLayout)
-        logs.unpersist()
-        LogSync.sync(spark, root)
-        val md2 = graft.sources.IcebergExport.export(spark, root)
-        val in = fs.open(new Path(md2))
-        val mdText = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-        require(mdText.contains("\"parent-snapshot-id\""),
-          "second export must be an incremental delta chained to the first snapshot")
-        fs.create(marker).close()
-      }
-      root
-    })
+    incLake(spark, dir) { root =>
+      val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val logs = OtlpLogs.parse(payloads(spark, dir), col("payload")).cache()
+      LogWriter.write(logs.filter(dayofmonth(col("timestamp")) <= 15), root,
+        layout = LogWriter.DailyLayout)
+      LogSync.sync(spark, root)
+      graft.sources.IcebergExport.export(spark, root)
+      LogWriter.write(logs.filter(dayofmonth(col("timestamp")) > 15), root,
+        layout = LogWriter.DailyLayout)
+      logs.unpersist()
+      LogSync.sync(spark, root)
+      val md2 = graft.sources.IcebergExport.export(spark, root)
+      val in = fs.open(new Path(md2))
+      val mdText = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+      require(mdText.contains("\"parent-snapshot-id\""),
+        "second export must be an incremental delta chained to the first snapshot")
+    }
 
   /** Per-region counts over an EXTERNALLY-written Iceberg v1 table
     * ([[graft.sources.IcebergFixture]]: independent writer shape —
@@ -417,7 +392,7 @@ object LakeAnalytics {
       .orderBy(col("ts_str"), col("service_name"), col("severity_text"), col("body"))
   }
 
-  private val dmlBuilt = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val dmlLake = FixtureBuild("graft_lakedml_v1")
 
   /** A second lake that has LIVED: built from the same payloads, then a
     * copy-on-write DELETE ([[graft.sources.LakeDml]]) of one service's
@@ -428,22 +403,13 @@ object LakeAnalytics {
     * swap, reader semantics).
     */
   private[graft] def dmlRoot(spark: SparkSession, dir: String): String =
-    dmlBuilt.computeIfAbsent(dir, _ => {
-      val root = s"/tmp/graft_lakedml_v1_${Integer.toHexString(dir.hashCode & 0x7fffffff)}"
-      val rootPath = new Path(root)
-      val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val marker = new Path(s"$root/_built")
-      if (!fs.exists(marker)) {
-        fs.delete(rootPath, true)
-        LogWriter.write(OtlpLogs.parse(payloads(spark, dir), col("payload")), root,
-          layout = LogWriter.DailyLayout)
-        LogSync.sync(spark, root)
-        graft.sources.LakeDml.delete(spark, root,
-          col("service_name") === "svc-3" && col("severity_text") === "view")
-        fs.create(marker).close()
-      }
-      root
-    })
+    dmlLake(spark, dir) { root =>
+      LogWriter.write(OtlpLogs.parse(payloads(spark, dir), col("payload")), root,
+        layout = LogWriter.DailyLayout)
+      LogSync.sync(spark, root)
+      graft.sources.LakeDml.delete(spark, root,
+        col("service_name") === "svc-3" && col("severity_text") === "view")
+    }
 
   /** Severity counts over the post-DELETE lake ([[dmlRoot]]). */
   def dmlSeverity(spark: SparkSession, dir: String): DataFrame =
@@ -452,7 +418,7 @@ object LakeAnalytics {
       .agg(count(lit(1)).as("n"))
       .orderBy(col("service_name"), col("severity_text"))
 
-  private val sqlDmlBuilt = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val sqlDmlLake = FixtureBuild("graft_lakesqldml")
 
   /** A lake whose ENTIRE post-ingest lifecycle ran through the SQL
     * dialect's command plans — registration (`MAINTAIN ... SYNC`), a
@@ -466,7 +432,7 @@ object LakeAnalytics {
     * end-to-end, not just the Scala API underneath it.
     */
   private[graft] def sqlDmlRoot(spark: SparkSession, dir: String): String =
-    graft.sources.FixtureBuild.once(sqlDmlBuilt, dir, "graft_lakesqldml", spark) { root =>
+    sqlDmlLake(spark, dir) { root =>
       LogWriter.write(OtlpLogs.parse(payloads(spark, dir), col("payload")), root,
         layout = LogWriter.DailyLayout)
       def sql(text: String): Unit = {
@@ -576,7 +542,7 @@ object LakeAnalytics {
          |ORDER BY ts_str, span_id""".stripMargin)
   }
 
-  private val streamReadBuilt = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val streamReadLake = FixtureBuild("graft_lakestream")
   private val streamReadRuns = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** A lake whose history a THIRD-PARTY STREAMING job must
@@ -588,7 +554,7 @@ object LakeAnalytics {
     * compaction's restated files register `op="rewrite"`).
     */
   private[graft] def streamLakeRoot(spark: SparkSession, dir: String): String =
-    graft.sources.FixtureBuild.once(streamReadBuilt, dir, "graft_lakestream", spark) { root =>
+    streamReadLake(spark, dir) { root =>
       val all = OtlpLogs.parse(payloads(spark, dir), col("payload"))
       val firstHalf = col("service_name").isin("svc-0", "svc-1", "svc-2", "svc-3", "svc-4")
       LogWriter.write(all.filter(firstHalf), root, layout = LogWriter.DailyLayout)
@@ -629,7 +595,7 @@ object LakeAnalytics {
       .orderBy(col("service_name"), col("severity_text"))
   }
 
-  private val morBuilt = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val morLake = FixtureBuild("graft_lakemor")
 
   /** A lake whose redaction ran MERGE-ON-READ: the same payloads, then
     * [[graft.sources.LakeDml.deleteMor]] of one service's 'signup'
@@ -649,7 +615,7 @@ object LakeAnalytics {
     * the next compaction.
     */
   private[graft] def morRoot(spark: SparkSession, dir: String): String =
-    graft.sources.FixtureBuild.once(morBuilt, dir, "graft_lakemor", spark) { root =>
+    morLake(spark, dir) { root =>
       LogWriter.write(OtlpLogs.parse(payloads(spark, dir), col("payload")), root,
         layout = LogWriter.DailyLayout)
       LogSync.sync(spark, root)
@@ -670,7 +636,7 @@ object LakeAnalytics {
       .agg(count(lit(1)).as("n"))
       .orderBy(col("service_name"), col("severity_text"))
 
-  private val mergeMorBuilt = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val mergeMorLake = FixtureBuild("graft_lakemerge")
 
   /** A lake corrected by MERGE-ON-READ upsert
     * ([[graft.sources.LakeDml.upsertMor]]): svc-2's 'signup' rows are
@@ -683,7 +649,7 @@ object LakeAnalytics {
     * oracle replays it as a CASE on the events synthesis.
     */
   private[graft] def mergeMorRoot(spark: SparkSession, dir: String): String =
-    graft.sources.FixtureBuild.once(mergeMorBuilt, dir, "graft_lakemerge", spark) { root =>
+    mergeMorLake(spark, dir) { root =>
       LogWriter.write(OtlpLogs.parse(payloads(spark, dir), col("payload")), root,
         layout = LogWriter.DailyLayout)
       LogSync.sync(spark, root)
@@ -715,7 +681,7 @@ object LakeAnalytics {
       .agg(count(lit(1)).as("n"))
       .orderBy(col("service_name"), col("severity_text"))
 
-  private val eqMorBuilt = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val eqMorLake = FixtureBuild("graft_lakeeq")
 
   /** A lake corrected by EQUALITY-delete DML — the streaming-CDC
     * shape ([[graft.sources.LakeDml.upsertEq]]/
@@ -733,7 +699,7 @@ object LakeAnalytics {
     * above them (and so applies).
     */
   private[graft] def eqMorRoot(spark: SparkSession, dir: String): String =
-    graft.sources.FixtureBuild.once(eqMorBuilt, dir, "graft_lakeeq", spark) { root =>
+    eqMorLake(spark, dir) { root =>
       LogWriter.write(OtlpLogs.parse(payloads(spark, dir), col("payload")), root,
         layout = LogWriter.DailyLayout)
       LogSync.sync(spark, root)
@@ -772,7 +738,7 @@ object LakeAnalytics {
       .agg(count(lit(1)).as("n"))
       .orderBy(col("service_name"), col("severity_text"))
 
-  private val cdcApplyBuilt = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val cdcApplyLake = FixtureBuild("graft_lakecdc")
 
   /** A lake MAINTAINED BY A CDC CHANGELOG —
     * [[graft.streaming.CdcApply.applyBatch]], the batch entry point of
@@ -800,7 +766,7 @@ object LakeAnalytics {
     * number.
     */
   private[graft] def cdcApplyRoot(spark: SparkSession, dir: String): String =
-    graft.sources.FixtureBuild.once(cdcApplyBuilt, dir, "graft_lakecdc", spark) { root =>
+    cdcApplyLake(spark, dir) { root =>
       LogWriter.write(OtlpLogs.parse(payloads(spark, dir), col("payload")), root,
         layout = LogWriter.DailyLayout)
       LogSync.sync(spark, root)
@@ -867,7 +833,7 @@ object LakeAnalytics {
       .agg(count(lit(1)).as("n"))
       .orderBy(col("service_name"), col("severity_text"))
 
-  private val evolveBuilt = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val evolveLake = FixtureBuild("graft_lakeevolve")
 
   /** A lake whose schema EVOLVED mid-chain, id-bound
     * ([[graft.sources.LakeEvolve]]): export #1 under the original
@@ -881,7 +847,7 @@ object LakeAnalytics {
     * pre-rename files keep `severity_text`/int32 physically forever.
     */
   private[graft] def evolveRoot(spark: SparkSession, dir: String): String =
-    graft.sources.FixtureBuild.once(evolveBuilt, dir, "graft_lakeevolve", spark) { root =>
+    evolveLake(spark, dir) { root =>
       LogWriter.write(OtlpLogs.parse(payloads(spark, dir), col("payload")), root,
         layout = LogWriter.DailyLayout)
       LogSync.sync(spark, root)
@@ -959,7 +925,7 @@ object LakeAnalytics {
     }
   }
 
-  private val specEvolveBuilt = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val specEvolveLake = FixtureBuild("graft_lakespecs")
 
   /** A lake whose DIRECTORY LAYOUT flipped mid-chain — hourly
     * (`service/year/month/day/hour` dirs) to daily (`hour` kept as a
@@ -975,7 +941,7 @@ object LakeAnalytics {
     * depths), so the chain read is manifest-driven end to end.
     */
   private[graft] def specEvolveRoot(spark: SparkSession, dir: String): String =
-    graft.sources.FixtureBuild.once(specEvolveBuilt, dir, "graft_lakespecs", spark) { root =>
+    specEvolveLake(spark, dir) { root =>
       // one service × a 5-day window: the hourly generation is
       // ≤120 partition cells — enough to exercise every multi-spec
       // mechanism while the per-query chain read stays file-count
@@ -1031,7 +997,7 @@ object LakeAnalytics {
       .agg(count(lit(1)).as("n"))
       .orderBy(col("service_name"), col("hour"), col("severity_text"))
 
-  private val retentionBuilt = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val retentionLake = FixtureBuild("graft_lakeret")
 
   /** A lake aged past its retention policy and expired
     * ([[graft.sources.LakeDml.expireBefore]] at a MID-DAY cutoff): the
@@ -1047,7 +1013,7 @@ object LakeAnalytics {
     * files, never the lake.
     */
   private[graft] def retentionRoot(spark: SparkSession, dir: String): String =
-    graft.sources.FixtureBuild.once(retentionBuilt, dir, "graft_lakeret", spark) { root =>
+    retentionLake(spark, dir) { root =>
       LogWriter.write(OtlpLogs.parse(payloads(spark, dir), col("payload")), root,
         layout = LogWriter.DailyLayout)
       LogSync.sync(spark, root)
@@ -1073,7 +1039,7 @@ object LakeAnalytics {
       .agg(count(lit(1)).as("n"))
       .orderBy(col("service_name"), col("severity_text"))
 
-  private val evolveStatsBuilt = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val evolveStatsLake = FixtureBuild("graft_lakeevstats")
 
   /** A FLAT lake (no partition dirs — the shape where the manifest's
     * zone-map stats ARE the pruning story) whose BOTH stat axes were
@@ -1085,7 +1051,7 @@ object LakeAnalytics {
     * registration keeps computing stats through the renamed axis.
     */
   private[graft] def evolveStatsRoot(spark: SparkSession, dir: String): String =
-    graft.sources.FixtureBuild.once(evolveStatsBuilt, dir, "graft_lakeevstats", spark) { root =>
+    evolveStatsLake(spark, dir) { root =>
       val base = OtlpLogs.parse(payloads(spark, dir), col("payload"))
         .select(col("timestamp"), col("service_name"), col("severity_text"),
           col("span_id"), col("body"))
@@ -1124,7 +1090,7 @@ object LakeAnalytics {
       .orderBy(col("service"), col("severity_text"))
   }
 
-  private val evolveLayoutBuilt = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val evolveLayoutLake = FixtureBuild("graft_lakeevlayout")
 
   /** A PARTITIONED lake in the reference's directory shape
     * (`service_name/year/month/day` dirs — README's layout at day
@@ -1137,7 +1103,7 @@ object LakeAnalytics {
     * writes and stat registration survive the rename.
     */
   private[graft] def evolveLayoutRoot(spark: SparkSession, dir: String): String =
-    graft.sources.FixtureBuild.once(evolveLayoutBuilt, dir, "graft_lakeevlayout", spark) { root =>
+    evolveLayoutLake(spark, dir) { root =>
       val base = OtlpLogs.parse(payloads(spark, dir), col("payload"))
         .select(col("timestamp"), col("service_name"), col("severity_text"),
           col("span_id"), col("body"))
@@ -1169,7 +1135,7 @@ object LakeAnalytics {
       .orderBy(col("service"), col("severity_text"))
   }
 
-  private val travelSchemaBuilt = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val travelSchemaLake = FixtureBuild("graft_laketravel")
 
   /** A lake whose `body` column was DROPPED mid-life (metadata-only,
     * [[graft.sources.LakeEvolve.dropColumn]]) and then grew a
@@ -1178,7 +1144,7 @@ object LakeAnalytics {
     * time-travel anchor BEFORE it reads under the pre-drop schema.
     */
   private[graft] def travelSchemaRoot(spark: SparkSession, dir: String): String =
-    graft.sources.FixtureBuild.once(travelSchemaBuilt, dir, "graft_laketravel", spark) { root =>
+    travelSchemaLake(spark, dir) { root =>
       val base = OtlpLogs.parse(payloads(spark, dir), col("payload"))
         .select(col("timestamp"), col("service_name"), col("severity_text"),
           col("span_id"), col("body"))
@@ -1228,7 +1194,7 @@ object LakeAnalytics {
       .orderBy(col("phase"), col("service_name"), col("severity_text"), col("n"))
   }
 
-  private val clusterBuilt = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val clusterLake = FixtureBuild("graft_lakeclu_v1")
 
   /** A lake that grew WITHOUT a useful layout and was then re-clustered
     * in place: the same payloads written FLAT (no partition dirs,
@@ -1244,24 +1210,15 @@ object LakeAnalytics {
     * files for pruning to be observable.
     */
   private[graft] def clusteredRoot(spark: SparkSession, dir: String): String =
-    clusterBuilt.computeIfAbsent(dir, _ => {
-      val root = s"/tmp/graft_lakeclu_v1_${Integer.toHexString(dir.hashCode & 0x7fffffff)}"
-      val rootPath = new Path(root)
-      val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val marker = new Path(s"$root/_built")
-      if (!fs.exists(marker)) {
-        fs.delete(rootPath, true)
-        OtlpLogs.parse(payloads(spark, dir), col("payload"))
-          .repartition(24) // deliberate arrival-order interleave
-          .write.parquet(root)
-        LogSync.sync(spark, root)
-        graft.sources.LogCompact.compact(spark, root,
-          maxRecordsPerFile = 1000, layout = Some(Seq.empty),
-          clusterBy = Some(Seq("service_name", "timestamp")))
-        fs.create(marker).close()
-      }
-      root
-    })
+    clusterLake(spark, dir) { root =>
+      OtlpLogs.parse(payloads(spark, dir), col("payload"))
+        .repartition(24) // deliberate arrival-order interleave
+        .write.parquet(root)
+      LogSync.sync(spark, root)
+      graft.sources.LogCompact.compact(spark, root,
+        maxRecordsPerFile = 1000, layout = Some(Seq.empty),
+        clusterBy = Some(Seq("service_name", "timestamp")))
+    }
 
   /** Severity counts for one service × 10-day window on the
     * RE-CLUSTERED flat lake via [[LogSync.tableFor]] — both zone maps
@@ -1276,7 +1233,7 @@ object LakeAnalytics {
       .agg(count(lit(1)).as("n"))
       .orderBy(col("severity_text"))
 
-  private val rewriteManBuilt = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val rewriteManLake = FixtureBuild("graft_lakerwman")
 
   /** A lake whose REGISTRIES were consolidated mid-life
     * ([[graft.sources.LogCompact.rewriteManifests]] — Iceberg's
@@ -1289,7 +1246,7 @@ object LakeAnalytics {
     * row-preserving (tombstones and delete entries included).
     */
   private[graft] def rewriteManRoot(spark: SparkSession, dir: String): String =
-    graft.sources.FixtureBuild.once(rewriteManBuilt, dir, "graft_lakerwman", spark) { root =>
+    rewriteManLake(spark, dir) { root =>
       val logs = OtlpLogs.parse(payloads(spark, dir), col("payload"))
       Seq((1, 10), (11, 20), (21, 31)).foreach { case (lo, hi) =>
         LogWriter.write(logs.filter(dayofmonth(col("timestamp")).between(lo, hi)),
@@ -1317,7 +1274,7 @@ object LakeAnalytics {
       .orderBy(col("service_name"), col("severity_text"))
   }
 
-  private val mergedBuilt = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val mergedLake = FixtureBuild("graft_lakemrg_v1")
 
   /** A lake whose schema EVOLVED mid-life: the first half (days ≤ 15)
     * written before `scope_version` existed (the column is absent from
@@ -1325,24 +1282,15 @@ object LakeAnalytics {
     * 15-column schema — the Iceberg add-column story on raw parquet.
     */
   private[graft] def mergedRoot(spark: SparkSession, dir: String): String =
-    mergedBuilt.computeIfAbsent(dir, _ => {
-      val root = s"/tmp/graft_lakemrg_v1_${Integer.toHexString(dir.hashCode & 0x7fffffff)}"
-      val rootPath = new Path(root)
-      val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val marker = new Path(s"$root/_built")
-      if (!fs.exists(marker)) {
-        fs.delete(rootPath, true)
-        val logs = OtlpLogs.parse(payloads(spark, dir), col("payload"))
-        LogWriter.write(logs.filter(dayofmonth(col("timestamp")) <= 15)
-          .drop("scope_version"), root, layout = LogWriter.DailyLayout)
-        LogSync.sync(spark, root)
-        LogWriter.write(logs.filter(dayofmonth(col("timestamp")) >= 16), root,
-          layout = LogWriter.DailyLayout)
-        LogSync.sync(spark, root)
-        fs.create(marker).close()
-      }
-      root
-    })
+    mergedLake(spark, dir) { root =>
+      val logs = OtlpLogs.parse(payloads(spark, dir), col("payload"))
+      LogWriter.write(logs.filter(dayofmonth(col("timestamp")) <= 15)
+        .drop("scope_version"), root, layout = LogWriter.DailyLayout)
+      LogSync.sync(spark, root)
+      LogWriter.write(logs.filter(dayofmonth(col("timestamp")) >= 16), root,
+        layout = LogWriter.DailyLayout)
+      LogSync.sync(spark, root)
+    }
 
   /** SCHEMA-EVOLUTION READ ([[LogSync.tableMerged]]): severity counts
     * split by the evolved column's presence. Pre-evolution files have
@@ -1360,7 +1308,7 @@ object LakeAnalytics {
       .agg(count(lit(1)).as("n"))
       .orderBy(col("severity_text"), col("ver"))
 
-  private val changesBuilt = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val changesLake = FixtureBuild("graft_lakeinc_v3")
 
   /** A lake with HISTORY, for the incremental-read query: the first
     * half (days ≤ 15) written and synced (append commit 1), the
@@ -1370,36 +1318,28 @@ object LakeAnalytics {
     * `_incmark` so the build is reusable across JVMs.
     */
   private[graft] def changesRoot(spark: SparkSession, dir: String): String =
-    changesBuilt.computeIfAbsent(dir, _ => {
-      val root = s"/tmp/graft_lakeinc_v3_${Integer.toHexString(dir.hashCode & 0x7fffffff)}"
-      val rootPath = new Path(root)
-      val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val marker = new Path(s"$root/_built")
-      if (!fs.exists(marker)) {
-        fs.delete(rootPath, true)
-        val logs = OtlpLogs.parse(payloads(spark, dir), col("payload"))
-        LogWriter.write(logs.filter(dayofmonth(col("timestamp")) <= 15), root,
-          layout = LogWriter.DailyLayout)
-        LogSync.sync(spark, root)
-        val mark = LogSync.highWaterMark(spark, root).get
-        val out = fs.create(new Path(s"$root/_incmark"))
-        // Timestamp.toString keeps the sub-millisecond digits —
-        // getTime (millis) would truncate below registered_at's µs
-        // precision and re-admit the boundary file
-        out.write(mark.toString.getBytes("UTF-8")); out.close()
-        // zero-copy pin of the first-half state; survives the later
-        // append and compaction untouched
-        LogSync.branch(spark, root, "pre2")
-        Thread.sleep(100) // registration clock must advance past the mark
-        LogWriter.write(logs.filter(dayofmonth(col("timestamp")) >= 16), root,
-          layout = LogWriter.DailyLayout)
-        LogSync.sync(spark, root)
-        // the rewrite commit the incremental reader must NOT re-consume
-        graft.sources.LogCompact.compact(spark, root)
-        fs.create(marker).close()
-      }
-      root
-    })
+    changesLake(spark, dir) { root =>
+      val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val logs = OtlpLogs.parse(payloads(spark, dir), col("payload"))
+      LogWriter.write(logs.filter(dayofmonth(col("timestamp")) <= 15), root,
+        layout = LogWriter.DailyLayout)
+      LogSync.sync(spark, root)
+      val mark = LogSync.highWaterMark(spark, root).get
+      val out = fs.create(new Path(s"$root/_incmark"))
+      // Timestamp.toString keeps the sub-millisecond digits —
+      // getTime (millis) would truncate below registered_at's µs
+      // precision and re-admit the boundary file
+      out.write(mark.toString.getBytes("UTF-8")); out.close()
+      // zero-copy pin of the first-half state; survives the later
+      // append and compaction untouched
+      LogSync.branch(spark, root, "pre2")
+      Thread.sleep(100) // registration clock must advance past the mark
+      LogWriter.write(logs.filter(dayofmonth(col("timestamp")) >= 16), root,
+        layout = LogWriter.DailyLayout)
+      LogSync.sync(spark, root)
+      // the rewrite commit the incremental reader must NOT re-consume
+      graft.sources.LogCompact.compact(spark, root)
+    }
 
   private def incMark(spark: SparkSession, root: String): java.sql.Timestamp = {
     val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -254,14 +254,10 @@ object LogAnalytics {
     * persisted once per session (the same shared-parse discipline —
     * the ingest path is certified once, not re-encoded per query).
     */
-  private val otelProtoCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val otelProtoCache = graft.SessionCaches.memo[String, DataFrame](_.unpersist(false))
 
   private def otelProtoLogs(spark: SparkSession, dir: String): DataFrame =
-    otelProtoCache.computeIfAbsent((spark, dir), { key =>
-      graft.SessionCaches.register(spark) { () =>
-        Option(otelProtoCache.remove(key)).foreach(_.unpersist(false))
-      }
+    otelProtoCache(spark, dir) {
       import graft.sources.OtlpLogs
       graft.functions.VectorFunctions.register(spark)
       val payloads = Tables.events(spark, dir)
@@ -276,7 +272,7 @@ object LogAnalytics {
           concat(lit("1."), col("user_id") % 2),
           concat(lit("mod-"), col("user_id") % 4)).as("payload"))
       OtlpLogs.parseProto(payloads, col("payload")).persist()
-    })
+    }
 
   /** Sketch percentiles (t-digest-style approx_percentile): the
     * fixed-size-state path for latency percentiles at 100 TB. No
@@ -347,14 +343,10 @@ object LogAnalytics {
     * they don't re-parse JSON per query. Sharing the parsed dataset
     * between the severity-range and trace-lookup queries mirrors that.
     */
-  private val otelCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val otelCache = graft.SessionCaches.memo[String, DataFrame](_.unpersist(false))
 
   private def otelLogs(spark: SparkSession, dir: String): DataFrame =
-    otelCache.computeIfAbsent((spark, dir), { key =>
-      graft.SessionCaches.register(spark) { () =>
-        Option(otelCache.remove(key)).foreach(_.unpersist(false))
-      }
+    otelCache(spark, dir) {
       import graft.sources.OtlpLogs
       val payloads = Tables.events(spark, dir)
         .select(OtlpLogs.toOtlpJsonTraced(
@@ -372,7 +364,7 @@ object LogAnalytics {
           concat(lit("1."), col("user_id") % 2),
           Seq("code.namespace" -> concat(lit("mod-"), col("user_id") % 4))).as("payload"))
       OtlpLogs.parse(payloads, col("payload")).persist()
-    })
+    }
 
   /** The shared OTel log parse for cross-signal consumers
     * ([[TraceAnalytics.traceLogs]] joins these rows against the span

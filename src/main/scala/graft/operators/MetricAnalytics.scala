@@ -616,7 +616,7 @@ object MetricAnalytics {
       .orderBy(col("service_name"), col("metric_name"), col("day"), col("hour"))
   }
 
-  private val lakeBuilt = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val metricsLake = graft.sources.FixtureBuild("graft_metric_lake_v6")
 
   /** A METRIC LAKE built from the synthesis through the REAL wire
     * ingest path: each cumulative counter sample encoded as a
@@ -627,7 +627,7 @@ object MetricAnalytics {
     * HARDER transport).
     */
   private[graft] def metricsLakeRoot(spark: SparkSession, dir: String): String =
-    graft.sources.FixtureBuild.once(lakeBuilt, dir, "graft_metric_lake_v6", spark) { root =>
+    metricsLake(spark, dir) { root =>
       import graft.sources.{LogSync, LogWriter, OtlpMetrics}
       graft.functions.VectorFunctions.register(spark)
       // each sample carries one EXEMPLAR: the event's own value and
@@ -801,17 +801,16 @@ object MetricAnalytics {
     * the [[LogAnalytics]] `otelProtoLogs` discipline: the protobuf
     * encode→decode path is certified once, not re-run per query.
     */
-  private val protoCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val protoCache = graft.SessionCaches.memo[String, DataFrame](_.unpersist(false))
 
   private def protoPoints(spark: SparkSession, dir: String): DataFrame =
-    graft.SessionCaches.memoPersist(protoCache, spark, dir) {
+    protoCache(spark, dir) {
       import graft.sources.OtlpMetrics
       graft.functions.VectorFunctions.register(spark)
       val payloads = Tables.events(spark, dir)
         .select(OtlpMetrics.toOtlpProtoSum(
           unix_micros(col("ts")), svc, lit("requests"), lit("{req}"),
           col("value"), lit(true), lit(2)).as("bin"))
-      OtlpMetrics.parseProto(payloads, col("bin"))
+      OtlpMetrics.parseProto(payloads, col("bin")).persist()
     }
 }

@@ -36,8 +36,7 @@ object Opq {
   final case class Model(order: Array[Int], rot: Array[Array[Double]],
                          centers: Array[Double], eigvals: Array[Double])
 
-  private val cache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int), Model]()
+  private val cache = graft.SessionCaches.memo[(String, Int), Model]()
 
   /** The rotation: PCA components permuted by eigenvalue allocation —
     * subspace b owns rows [b·sub, (b+1)·sub). Greedy balance: each
@@ -45,8 +44,7 @@ object Opq {
     * with the smallest running log-eigenvalue sum.
     */
   def model(spark: SparkSession, dir: String, m: Int = 16): Model =
-    cache.computeIfAbsent((spark, dir, m), { key =>
-      graft.SessionCaches.register(spark)(() => { cache.remove(key); () })
+    cache(spark, (dir, m)) {
       val p = Pca.fit(spark, dir)
       val dim = p.mean.length
       require(dim % m == 0, s"dim $dim not divisible by m=$m subspaces")
@@ -70,7 +68,7 @@ object Opq {
       val rot = order.map(p.comps)
       val centers = rot.map(c => c.zip(p.mean).map { case (a, b) => a * b }.sum)
       Model(order, rot, centers, order.map(p.eigvals))
-    })
+    }
 
   /** Rotate an arbitrary `(vec_id, embedding)` frame onto the OPQ
     * basis: (vec_id, v: array<double>, nrm) —
@@ -96,17 +94,10 @@ object Opq {
     * the session instead of pinning executor memory for its lifetime
     * (the round-7 leak: a per-call `.cache()` nobody released).
     */
-  private val rotatedCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int), DataFrame]()
+  private val rotatedCache = graft.SessionCaches.memo[(String, Int), DataFrame](_.unpersist())
 
   private def rotatedCorpus(spark: SparkSession, dir: String, m: Int): DataFrame =
-    rotatedCache.computeIfAbsent((spark, dir, m), { key =>
-      graft.SessionCaches.register(spark)(() => {
-        Option(rotatedCache.remove(key)).foreach(_.unpersist())
-        ()
-      })
-      rotatedOf(spark, dir, m, Tables.embeddings(spark, dir)).cache()
-    })
+    rotatedCache(spark, (dir, m))(rotatedOf(spark, dir, m, Tables.embeddings(spark, dir)).cache())
 
   /** Rotated-PQ ANN: ADC over OPQ codes → bounded-heap top-c → exact
     * rerank on the raw float vectors. Same output contract as

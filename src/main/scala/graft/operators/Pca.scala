@@ -42,17 +42,13 @@ object Pca {
   final case class Model(n: Long, mean: Array[Double],
                          eigvals: Array[Double], comps: Array[Array[Double]])
 
-  private val cache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Model]()
+  private val cache = graft.SessionCaches.memo[String, Model]()
 
   /** The fitted model (all dim components, eigenvalues descending),
     * memoized per (session, corpus) like the PQ codebooks.
     */
   def fit(spark: SparkSession, dir: String): Model =
-    cache.computeIfAbsent((spark, dir), { key =>
-      graft.SessionCaches.register(spark)(() => { cache.remove(key); () })
-      build(spark, dir)
-    })
+    cache(spark, dir)(build(spark, dir))
 
   private def build(spark: SparkSession, dir: String): Model = {
     val vecs = Tables.embeddings(spark, dir).select(col("embedding"))

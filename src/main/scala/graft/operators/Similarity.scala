@@ -244,8 +244,8 @@ object Similarity {
     * dir/session — only [[IvfIndex]] carries on-disk versioning,
     * because only it persists state ACROSS sessions.
     */
-  private val pqCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int), Array[Array[(Int, Seq[Double])]]]()
+  private val pqCache =
+    graft.SessionCaches.memo[(String, Int), Array[Array[(Int, Seq[Double])]]]()
 
   private[graft] def pqCodebooks(spark: SparkSession, dir: String,
                                  m: Int = 16): Array[Array[(Int, Seq[Double])]] =
@@ -258,10 +258,7 @@ object Similarity {
   private[graft] def pqCodebooksOf(spark: SparkSession, cacheKey: String,
                                    base: DataFrame,
                                    m: Int): Array[Array[(Int, Seq[Double])]] =
-    pqCache.computeIfAbsent((spark, cacheKey, m), { key =>
-      // no storage to release (plain arrays) — the cleanup drops the
-      // static map entry so a dead session is not pinned forever
-      graft.SessionCaches.register(spark)(() => { pqCache.remove(key); () })
+    pqCache(spark, (cacheKey, m)) {
       val dim = base.select(size(col("v"))).head().getInt(0)
       require(dim % m == 0, s"dim $dim not divisible by m=$m subspaces")
       val sub = dim / m
@@ -270,7 +267,7 @@ object Similarity {
           base.select(col("vec_id"), slice(col("v"), j * sub + 1, sub).as("v")),
           k = 16, iters = 3)
       }
-    })
+    }
 
   /** PQ-encode a frame carrying a vector column `v`: appends `codes`,
     * the m argmin code bytes vs `books` — codes[j] = argmin_c

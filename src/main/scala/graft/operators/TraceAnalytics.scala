@@ -471,7 +471,7 @@ object TraceAnalytics {
   def criticalPathFromLake(spark: SparkSession, tracesRoot: String): DataFrame =
     criticalPathOf(spansFromLake(spark, tracesRoot))
 
-  private val lakeBuilt = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val tracesLake = graft.sources.FixtureBuild("graft_trace_lake_v3")
 
   /** A SPAN LAKE built from the synthesis through the REAL ingest
     * path — OTLP/JSON envelopes ([[graft.sources.OtlpTraces
@@ -482,7 +482,7 @@ object TraceAnalytics {
     * twins' contract certification runs against.
     */
   private[graft] def tracesLakeRoot(spark: SparkSession, dir: String): String =
-    graft.sources.FixtureBuild.once(lakeBuilt, dir, "graft_trace_lake_v3", spark) { root =>
+    tracesLake(spark, dir) { root =>
       import graft.sources.{LogSync, LogWriter, OtlpTraces}
       graft.functions.VectorFunctions.register(spark)
       // real parent SPAN IDS on the wire (one co-partitioned
@@ -688,11 +688,10 @@ object TraceAnalytics {
     * [[LogAnalytics]] `otelProtoLogs` discipline: the protobuf
     * encode→decode path is certified once, not re-run per query.
     */
-  private val protoCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val protoCache = graft.SessionCaches.memo[String, DataFrame](_.unpersist(false))
 
   private def protoSpans(spark: SparkSession, dir: String): DataFrame =
-    graft.SessionCaches.memoPersist(protoCache, spark, dir) {
+    protoCache(spark, dir) {
       import graft.sources.OtlpTraces
       graft.functions.VectorFunctions.register(spark)
       val payloads = spans(spark, dir)
@@ -701,6 +700,6 @@ object TraceAnalytics {
           unix_micros(col("ts")) + col("dur_ms") * 1000L,
           col("service"), col("trace_id"), col("span_id"),
           lit(null).cast("string"), col("operation"), lit(2), lit(0)).as("bin"))
-      OtlpTraces.parseProto(payloads, col("bin"))
+      OtlpTraces.parseProto(payloads, col("bin")).persist()
     }
 }

@@ -311,8 +311,8 @@ object TrainPrep {
     * frame makes [[Curation.broadcastIfSmall]]'s size probe a
     * control-plane job instead of a second corpus aggregation.
     */
-  private val heavyCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int, Int), (DataFrame, Long, DataFrame)]()
+  private val heavyCache =
+    graft.SessionCaches.memo[(String, Int, Int), (DataFrame, Long, DataFrame)]()
 
   // (heavy frame, its row count, the 1-row (hl lines, hh xxhash64s)
   // array form the map-only scrub broadcasts) — one memoized artifact:
@@ -321,8 +321,7 @@ object TrainPrep {
   // would be a control-plane job re-run on an immutable frame
   private def heavyModel(spark: SparkSession, dir: String,
                          lineTokens: Int, minDocs: Int): (DataFrame, Long, DataFrame) =
-    heavyCache.computeIfAbsent((spark, dir, lineTokens, minDocs), { key =>
-      graft.SessionCaches.register(spark)(() => { heavyCache.remove(key); () })
+    heavyCache(spark, (dir, lineTokens, minDocs)) {
       val hv = lineFrame(spark, dir, lineTokens)
         .select(col("line"), col("doc_id")).distinct()
         .groupBy(col("line")).agg(count(lit(1)).as("df"))
@@ -333,7 +332,7 @@ object TrainPrep {
         collect_list(xxhash64(col("line"))).as("hh"))
         .localCheckpoint()
       (hv, hv.count(), arr)
-    })
+    }
 
   private[graft] def heavyLines(spark: SparkSession, dir: String,
                                 lineTokens: Int = 5, minDocs: Int = 3): DataFrame =

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -25,7 +23,7 @@ import org.apache.spark.sql.functions._
   */
 object Bucketing {
 
-  private val built = new ConcurrentHashMap[(SparkSession, String), Unit]()
+  private val built = graft.SessionCaches.memo[String, Unit]()
 
   val Buckets = 8
 
@@ -39,8 +37,7 @@ object Bucketing {
 
   /** Idempotently create bucketed twins of lineitem/orders for `dir`. */
   def ensure(spark: SparkSession, dir: String): Unit =
-    built.computeIfAbsent((spark, dir), { key =>
-      graft.SessionCaches.register(spark)(() => { built.remove(key); () })
+    built(spark, dir) {
       val root = s"/tmp/graft_bucketed_${suffix(dir)}"
       spark.sql(s"DROP TABLE IF EXISTS ${lineitemTable(dir)}")
       spark.sql(s"DROP TABLE IF EXISTS ${ordersTable(dir)}")
@@ -61,7 +58,7 @@ object Bucketing {
         .mode("overwrite")
         .bucketBy(Buckets, "o_orderkey").sortBy("o_orderkey")
         .saveAsTable(ordersTable(dir))
-    })
+    }
 
   /** Revenue by order priority over the bucketed join. The `merge`
     * hint pins the sort-merge strategy (the plan a 100 TB fact join

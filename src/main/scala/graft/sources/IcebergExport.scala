@@ -339,7 +339,7 @@ object IcebergExport {
         }
       else existing :+ ((name, id, Some(typeDdl)))
     writeFieldIdSidecar(spark, root, updated)
-    fieldIdsMemo.keySet.removeIf(k => k._1 == spark && k._2 == root)
+    fieldIdsMemo.invalidate(spark, root)
   }
 
   private[sources] def schemaFieldsFor(spark: SparkSession, root: String,
@@ -466,9 +466,7 @@ object IcebergExport {
     */
   private[sources] val PartFieldIdBase = 10000
 
-  private val fieldIdsMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String),
-      Map[String, Int]]()
+  private val fieldIdsMemo = graft.SessionCaches.memo[String, (String, Map[String, Int])]()
 
   /** Column name → Iceberg field id under the export's assignment.
     * Memoized per data-manifest head state (version + active count +
@@ -486,15 +484,12 @@ object IcebergExport {
     // changes the assignment without moving the manifest
     val token = s"${LogSync.manifestVersion(spark, root)}:${head.get(0)}:" +
       s"${head.get(1)}:${LakeEvolve.logVersion(spark, root)}"
-    // superseded head states can never be hit again — evict them so
-    // the memo stays O(lakes), not O(sync rounds in the session)
-    fieldIdsMemo.keySet.removeIf(k =>
-      k._1 == spark && k._2 == root && k._3 != token)
-    fieldIdsMemo.computeIfAbsent((spark, root, token), { key =>
-      graft.SessionCaches.register(spark)(() => { fieldIdsMemo.remove(key); () })
-      schemaFieldsFor(spark, root, activePaths(spark, root))
-        ._1.map(f => f.name -> f.id).toMap
-    })
+    // one entry per lake: a superseded head state can never be hit
+    // again, so the memo stays O(lakes), not O(sync rounds in the session)
+    fieldIdsMemo.refresh(spark, root)(_._1 == token) {
+      (token, schemaFieldsFor(spark, root, activePaths(spark, root))
+        ._1.map(f => f.name -> f.id).toMap)
+    }._2
   }
 
   /** The reserved spec-id of the UNPARTITIONED spec row-level delete
@@ -1154,15 +1149,15 @@ object IcebergExport {
   /** One export per (session, lake, LAKE STATE) — the guard contract
     * queries use so repeated runs read one metadata version instead of
     * minting a new snapshot per query, WITHOUT going stale on a
-    * growing lake: the memo key carries a staleness token derived from
-    * the live manifest (its version + active-row count + newest
+    * growing lake: the memo entry carries a staleness token derived
+    * from the live manifest (its version + active-row count + newest
     * registration instant — a control-plane aggregate), so a
     * LakeIngest/OtlpHttp flush into the same root triggers a fresh
     * export on the next query and `lake_iceberg` can never diverge
-    * from `lake_severity_by_service` on the same lake.
+    * from `lake_severity_by_service` on the same lake. One entry per
+    * (session, lake): the fresh export replaces the superseded one.
     */
-  private val exportedOnce =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), String]()
+  private val exportedOnce = graft.SessionCaches.memo[String, (String, String)]()
 
   def ensureExport(spark: SparkSession, root: String): String = {
     val m = LogSync.manifest(spark, root)
@@ -1180,10 +1175,7 @@ object IcebergExport {
       .map("%02x".format(_)).mkString
     val token = s"${LogSync.manifestVersion(spark, root)}:${head.get(0)}:" +
       s"${head.get(1)}:$delToken:${LakeEvolve.logVersion(spark, root)}"
-    exportedOnce.computeIfAbsent((spark, root, token), { key =>
-      graft.SessionCaches.register(spark)(() => { exportedOnce.remove(key); () })
-      export(spark, root)
-    })
+    exportedOnce.refresh(spark, root)(_._1 == token)((token, export(spark, root)))._2
   }
 
   final case class ExpireStats(snapshotsDropped: Int, metadataDeleted: Int,

@@ -1009,7 +1009,7 @@ object LogSync {
     * true): the Hadoop recursive iterator materializes a
     * LocatedFileStatus (block locations) per file, which on the local
     * FS measured 261 ms vs 3.5 ms for a plain listStatus of the same
-    * 63-file dir (SigBench) — and this signature runs several times
+    * 63-file dir — and this signature runs several times
     * per lake read, so that overhead showed up as a ~2x regression on
     * the whole mutation-lake query family. Registries are flat in
     * practice, so the common case is exactly one listStatus; nested
@@ -1017,7 +1017,7 @@ object LogSync {
     * Returns (signature, total bytes); (null, MaxValue) when
     * unlistable (never cached).
     */
-  private def registryListingSig(spark: SparkSession, dir: Path): (String, Long) =
+  private[graft] def registryListingSig(spark: SparkSession, dir: Path): (String, Long) =
     try {
       val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val b = Seq.newBuilder[(String, Long)]
@@ -1215,9 +1215,7 @@ object LogSync {
   // the current manifest doesn't register, nor point at paths vacuum
   // has removed. Session-keyed (a DataFrame is session-bound), dropped
   // with the session via SessionCaches.
-  private val rootScanCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
-      (String, DataFrame)]()
+  private val rootScanCache = graft.SessionCaches.memo[String, (String, DataFrame)]()
 
   private def cachedRootScan(spark: SparkSession, root: String,
                              p: String): DataFrame = {
@@ -1225,15 +1223,7 @@ object LogSync {
     def build(): DataFrame = spark.read.option("basePath", root)
       .schema(inferredScanSchema(spark, root, p)).parquet(p)
     if (sig == null) return build()
-    val key = (spark, p)
-    val prev = rootScanCache.get(key)
-    if (prev != null && prev._1 == sig) prev._2
-    else {
-      graft.SessionCaches.register(spark)(() => { rootScanCache.remove(key); () })
-      val df = build()
-      rootScanCache.put(key, (sig, df))
-      df
-    }
+    rootScanCache.refresh(spark, p)(_._1 == sig)((sig, build()))._2
   }
 
   private[sources] def applyDeletes(spark: SparkSession, df: DataFrame,

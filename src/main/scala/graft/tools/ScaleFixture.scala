@@ -1,7 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.GraftSession
 
 /** Build an N×-replicated copy of an sf dir for SCALING measurements
   * (dev tool, not contract surface): the r18 verdict's item 2 — the
@@ -30,15 +32,7 @@ object ScaleFixture {
     val src = args(0)
     val dst = args(1)
     val n = args(2).toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.get("graft-scale-fixture")
 
     def copies(df: DataFrame, idCol: Option[String]): DataFrame =
       (0 until n).map { i =>

@@ -2,9 +2,7 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
-import graft.SparkEntry
+import graft.{GraftSession, SparkEntry}
 
 /** Dev pre-flight: dump a NAMED SUBSET of contract queries (all when no
   * names given) + their oracle SQL, for a fast
@@ -17,14 +15,7 @@ object VerifySubset {
     val sfDir = args(0)
     val outDir = args(1)
     val names = args.drop(2).toSet
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.get("graft-verify-subset")
     new java.io.File(outDir).mkdirs()
     val sel = SparkEntry.queries.filter { case (k, _) => names.isEmpty || names(k) }
     sel.foreach { case (name, fn) =>
