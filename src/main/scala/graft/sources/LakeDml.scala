@@ -205,20 +205,13 @@ object LakeDml {
       phys.write.mode(SaveMode.Overwrite)
         .partitionBy(layout.filter(phys.columns.contains): _*)
         .parquet(staging.toString)
-      val it = fs.listFiles(staging, true)
-      val moves = Seq.newBuilder[(Path, Path)]
-      while (it.hasNext) {
-        val f = it.next()
-        val rel = fs.makeQualified(staging).toUri
-          .relativize(f.getPath.toUri).getPath
-        if (rel.endsWith(".parquet") && !rel.split('/').exists(_.startsWith("_")))
-          moves += (f.getPath -> new Path(root, rel))
-      }
+      val stagingUri = fs.makeQualified(staging).toUri
       // the QUALIFIED form — the same string sync's listing produces,
       // so both the journal exclusion and the manifest registration
       // compare equal to a listed path
-      val planned = moves.result().map { case (src, dest) =>
-        (src, dest, fs.makeQualified(dest).toString)
+      val planned = LogSync.listDataFiles(fs, staging).map { f =>
+        val dest = new Path(root, stagingUri.relativize(f.getPath.toUri).getPath)
+        (f.getPath, dest, fs.makeQualified(dest).toString)
       }
       val journal = new Path(s"$root/_dml_pending/p" +
         java.util.UUID.randomUUID().toString.take(8))

@@ -541,24 +541,14 @@ object LogCompact {
     dead.length + neverRegistered.length + deadDeletes
   }
 
-  /** (path, modificationTimeMs) of every DATA file under `dir`.
-    * Skips every underscore-prefixed subtree (`_manifest`, `_rollup`,
-    * `_index`, ...) — the same convention as [[LogSync.listParquet]]
-    * and Spark's own scans. Matching only `/_manifest` here would make
-    * [[vacuum]] delete other bookkeeping state as "orphans" and
-    * [[compact]] register it as data.
+  /** (path, modificationTimeMs) of every DATA file under `dir` —
+    * [[LogSync.listDataFiles]], so [[vacuum]] never deletes
+    * underscore-prefixed bookkeeping state as "orphans" and [[compact]]
+    * never registers it as data.
     */
   private def listParquet(spark: SparkSession, dir: String): Seq[(String, Long)] = {
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val base = new Path(dir)
-    val it = fs.listFiles(base, true)
-    val out = Seq.newBuilder[(String, Long)]
-    while (it.hasNext) {
-      val f = it.next()
-      val rel = fs.makeQualified(base).toUri.relativize(f.getPath.toUri).getPath
-      if (rel.endsWith(".parquet") && !rel.split('/').exists(_.startsWith("_")))
-        out += ((f.getPath.toString, f.getModificationTime))
-    }
-    out.result()
+    LogSync.listDataFiles(base.getFileSystem(spark.sparkContext.hadoopConfiguration), base)
+      .map(f => (f.getPath.toString, f.getModificationTime))
   }
 }

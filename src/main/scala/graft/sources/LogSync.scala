@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType, TimestampType}
@@ -17,9 +17,10 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType, Timestam
   * same read semantics as its Iceberg catalog (readers never see
   * half-written or unregistered files).
   *
-  * Scale design: only the LISTING is a driver-side control-plane step
-  * (like the reference's `mc find`). The new-file diff is a distributed
-  * anti-join against the manifest, and [[table]] reads the lake ROOT
+  * Scale design: the LISTING is a driver-side control-plane step (like
+  * the reference's `mc find`), and so is the new-file diff while the
+  * manifest is small enough to hold driver-side (a distributed
+  * anti-join past that cap). [[table]] reads the lake ROOT
   * (partition discovery + pruning intact) with the manifest applied as
   * a broadcast semi-join pruning filter on `input_file_name()` — no
   * million-element path vararg through the driver, no `collect()` on
@@ -343,25 +344,42 @@ object LogSync {
   private[sources] val StatCols =
     Seq("min_ts", "max_ts", "min_svc", "max_svc", "rows", "null_ts")
 
-  /** Control-plane listing (the `mc find` analog). Returns raw FS
-    * paths; everything downstream of this is distributed.
+  /** The one data-file walk under a lake root (or a staging dir): every
+    * `*.parquet` file, skipping every underscore-prefixed entry below
+    * `base` (`_manifest`, `_index`, `_dml_pending`, a `_x.parquet`, ...)
+    * — the same convention Spark's own scans use, so bookkeeping parquet
+    * is never taken for data. A plain `listStatus` walk that never
+    * descends into a skipped subtree: Hadoop's recursive `listFiles`
+    * iterator walks and builds a `LocatedFileStatus` (block locations)
+    * for every bookkeeping file too — on a 4-core host's local FS,
+    * 400–470 ms against 4–6 ms for the same 44 paths of a lake after 7
+    * OTLP flushes. Dot-prefixed dirs are walked, as that rule walked
+    * them. A missing `base` (or a file) lists nothing.
+    */
+  private[sources] def listDataFiles(fs: FileSystem, base: Path): Seq[FileStatus] = {
+    val root =
+      try fs.getFileStatus(base)
+      catch { case _: java.io.FileNotFoundException => return Seq.empty }
+    val out = Seq.newBuilder[FileStatus]
+    def walk(d: Path): Unit =
+      fs.listStatus(d).foreach { s =>
+        val name = s.getPath.getName
+        if (!name.startsWith("_")) {
+          if (s.isDirectory) walk(s.getPath)
+          else if (name.endsWith(".parquet")) out += s
+        }
+      }
+    if (root.isDirectory) walk(base)
+    out.result()
+  }
+
+  /** Control-plane listing (the `mc find` analog): raw FS paths of the
+    * data files under `dir` ([[listDataFiles]]).
     */
   private[sources] def listParquet(spark: SparkSession, dir: String): Seq[String] = {
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val base = new Path(dir)
-    if (!fs.exists(base)) return Seq.empty
-    val it = fs.listFiles(base, true)
-    val out = Seq.newBuilder[String]
-    while (it.hasNext) {
-      val f = it.next()
-      val p = f.getPath.toString
-      // skip metadata trees (underscore-prefixed segments below the
-      // root: _manifest, _rollup, ...) — same convention Spark's own
-      // scans use, so sync never registers bookkeeping parquet as data
-      val rel = fs.makeQualified(base).toUri.relativize(f.getPath.toUri).getPath
-      if (rel.endsWith(".parquet") && !rel.split('/').exists(_.startsWith("_"))) out += p
-    }
-    out.result()
+    listDataFiles(base.getFileSystem(spark.sparkContext.hadoopConfiguration), base)
+      .map(_.getPath.toString)
   }
 
   private[graft] def hasManifest(spark: SparkSession, root: String): Boolean = {
@@ -410,14 +428,18 @@ object LogSync {
     }
   }
 
-  private[graft] def emptyManifest(spark: SparkSession): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], manifestSchema)
-
   private[sources] def manifestDf(spark: SparkSession, root: String): DataFrame =
-    if (hasManifest(spark, root)) {
+    registryDf(spark, manifestRows(spark, root))
+
+  /** The data manifest as [[registryRows]] (empty rows when there is
+    * none yet): its rows, or past the cap the distributed read.
+    */
+  private def manifestRows(spark: SparkSession, root: String): Registry =
+    if (!hasManifest(spark, root)) Left((manifestSchema, Array.empty[Row]))
+    else {
       val path = manifestPath(spark, root)
-      servedRegistry(spark, path)(readManifestDir(spark, path))
-    } else emptyManifest(spark)
+      registryRows(spark, path)(readManifestDir(spark, path))
+    }
 
   // ---- position-delete sidecar (merge-on-read row deletes) ----
 
@@ -490,18 +512,26 @@ object LogSync {
   // columns; mergeSchema (a registry dir can mix old- and new-schema
   // row files after an upgrade — the leased append adds parts in
   // place) + null backfill, same discipline as [[readManifestDir]]
+  private def readDeleteManifestDir(spark: SparkSession, path: String): DataFrame = {
+    val m = spark.read.option("mergeSchema", "true").parquet(path)
+    deleteManifestSchema.fields.drop(5).foldLeft(m) { (df, f) =>
+      if (df.columns.contains(f.name)) df
+      else df.withColumn(f.name, lit(null).cast(f.dataType))
+    }
+  }
+
   private[graft] def deleteManifestDf(spark: SparkSession, root: String): DataFrame =
-    if (hasDeleteManifest(spark, root)) {
+    registryDf(spark, deleteManifestRows(spark, root))
+
+  /** The delete registry as [[registryRows]] (empty rows when there is
+    * none yet): its rows, or past the cap the distributed read.
+    */
+  private def deleteManifestRows(spark: SparkSession, root: String): Registry =
+    if (!hasDeleteManifest(spark, root)) Left((deleteManifestSchema, Array.empty[Row]))
+    else {
       val path = deleteManifestPath(spark, root)
-      servedRegistry(spark, path) {
-        val m = spark.read.option("mergeSchema", "true").parquet(path)
-        deleteManifestSchema.fields.drop(5).foldLeft(m) { (df, f) =>
-          if (df.columns.contains(f.name)) df
-          else df.withColumn(f.name, lit(null).cast(f.dataType))
-        }
-      }
-    } else
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], deleteManifestSchema)
+      registryRows(spark, path)(readDeleteManifestDir(spark, path))
+    }
 
   /** The delete-registry append — callable only while the DML lease
     * is HELD (every caller wraps it in [[withDmlLease]] together with
@@ -915,18 +945,28 @@ object LogSync {
 
   /** The next commit's sequence number: one past the highest ever
     * assigned across BOTH manifests (data and delete) AND any live
-    * planning reservation ([[reserveSeq]]). Control-plane aggregates
-    * plus one tiny-dir listing; monotone under the lake's
-    * single-writer rule. Tombstoned rows count too — a sequence must
-    * never be reused even after the file that held it is vacuumed.
+    * planning reservation ([[reserveSeq]]). Each registry's max
+    * `coalesce(seq, 0)` folds on the driver over its [[registryRows]];
+    * past the cap it is one distributed aggregate. Plus one tiny-dir
+    * listing; monotone under the lake's single-writer rule. Tombstoned
+    * rows count too — a sequence must never be reused even after the
+    * file that held it is vacuumed.
     */
   private[sources] def nextSeq(spark: SparkSession, root: String): Long = {
-    def maxSeq(df: DataFrame): Long =
-      if (!df.columns.contains("seq")) 0L
-      else Option(df.agg(max(coalesce(col("seq"), lit(0L)))).head().get(0))
-        .map(_.asInstanceOf[Long]).getOrElse(0L)
-    math.max(math.max(math.max(maxSeq(manifestDf(spark, root)),
-      maxSeq(deleteManifestDf(spark, root))),
+    def maxSeq(reg: Registry): Long = reg match {
+      case Left((schema, rs)) =>
+        if (!schema.fieldNames.contains("seq")) 0L
+        else {
+          val i = schema.fieldIndex("seq")
+          rs.iterator.map(r => if (r.isNullAt(i)) 0L else r.getLong(i)).foldLeft(0L)(math.max)
+        }
+      case Right(df) =>
+        if (!df.columns.contains("seq")) 0L
+        else Option(df.agg(max(coalesce(col("seq"), lit(0L)))).head().get(0))
+          .map(_.asInstanceOf[Long]).getOrElse(0L)
+    }
+    math.max(math.max(math.max(maxSeq(manifestRows(spark, root)),
+      maxSeq(deleteManifestRows(spark, root))),
       reservedSeqs(spark, root).foldLeft(0L)(math.max)),
       // the durable allocation mark: immune to a stale Spark-side
       // registry listing (see [[seqHwmPath]])
@@ -981,41 +1021,15 @@ object LogSync {
     spark.conf.getOption("graft.lake.registryDriverCacheMaxBytes")
       .map(_.toLong).getOrElse(32L * 1024 * 1024)
 
-  /** Serve a SMALL registry dir (data manifest / delete registry) as a
-    * driver-resident LocalRelation, collected ONCE per (dir, listing
-    * signature) and re-served until the listing changes — the same
-    * invalidation discipline as [[manifestRowCount]]'s count cache
-    * (any append renames a fresh part in, any rewrite swaps the
-    * version dir, so every mutation changes the signature).
-    *
-    * Why: the registry is control-plane metadata consulted by EVERY
-    * read (`table`/`tableAsOf`/`tableSince`/stream offsets — typically
-    * 2-4 reads per query), and a `spark.read.parquet` of a KB-scale
-    * dir costs a full scan job (~0.25 s of scheduler + footer latency
-    * per read, measured). Iceberg/Delta hold exactly this metadata
-    * driver-side; a LocalRelation additionally lets the keep-set
-    * semi-join broadcast without any scan job. Registries past
-    * [[registryDriverCacheMaxBytes]] keep the distributed path
-    * unchanged (size-guarded, like every other control-plane
-    * crossing). Rows are plain values, so entries are safely shared
-    * across sessions; a get/put race costs at most a duplicate
-    * collect, and sig-keying keeps either result valid.
-    */
   /** Recursive name:len:mtime listing signature of a registry dir —
-    * RECURSIVE (r19, advisor finding): the old direct-child listing
-    * missed a mutation nested below a child directory; listing files
-    * transitively makes the signature see every content change.
-    * Implemented as a manual listStatus walk, NOT fs.listFiles(dir,
-    * true): the Hadoop recursive iterator materializes a
-    * LocatedFileStatus (block locations) per file, which on the local
-    * FS measured 261 ms vs 3.5 ms for a plain listStatus of the same
-    * 63-file dir — and this signature runs several times
-    * per lake read, so that overhead showed up as a ~2x regression on
-    * the whole mutation-lake query family. Registries are flat in
-    * practice, so the common case is exactly one listStatus; nested
-    * children still contribute (same strings listFiles(true) built).
-    * Returns (signature, total bytes); (null, MaxValue) when
-    * unlistable (never cached).
+    * recursive so a mutation nested below a child directory still
+    * changes it. A plain `listStatus` walk for the reason
+    * [[listDataFiles]] gives (Hadoop's recursive iterator cost ~2x on
+    * the mutation-lake query family when this signature used it); it
+    * runs several times per lake read and registries are flat in
+    * practice, so the common case is one `listStatus`. Returns
+    * (signature, total bytes); (null, MaxValue) when unlistable (never
+    * cached).
     */
   private[graft] def registryListingSig(spark: SparkSession, dir: Path): (String, Long) =
     try {
@@ -1034,22 +1048,59 @@ object LogSync {
       case _: java.io.IOException => (null, Long.MaxValue)
     }
 
-  private[sources] def servedRegistry(spark: SparkSession, dirStr: String)
-                            (read: => DataFrame): DataFrame = {
-    val dir = new Path(dirStr)
-    val (sig, bytes) = registryListingSig(spark, dir)
-    if (sig == null || bytes > registryDriverCacheMaxBytes(spark)) return read
+  /** A registry resolved once: its (schema, rows) held on the driver,
+    * or past the cap the distributed read. Folds match on the `Left`;
+    * [[registryDf]] turns either side into a DataFrame.
+    */
+  private[sources] type Registry = Either[(StructType, Array[Row]), DataFrame]
+
+  /** A SMALL registry dir (data manifest / delete registry, index
+    * sidecar) as driver-resident rows: collected ONCE per (dir, listing
+    * signature) and re-served until the listing changes — the same
+    * invalidation discipline as [[manifestRowCount]]'s count cache
+    * (any append renames a fresh part in, any rewrite swaps the
+    * version dir, so every mutation changes the signature). When the
+    * dir is unlistable or past [[registryDriverCacheMaxBytes]] it is
+    * `Right(read)`: the caller takes the distributed path, size-guarded
+    * like every other control-plane crossing.
+    *
+    * Why: the registry is control-plane metadata consulted by EVERY
+    * read (`table`/`tableAsOf`/`tableSince`/stream offsets — typically
+    * 2-4 reads per query) and by every sync round, and a
+    * `spark.read.parquet` of a KB-scale dir costs a full scan job
+    * (~0.25 s of scheduler + footer latency per read, measured).
+    * Iceberg/Delta hold exactly this metadata driver-side. Rows are
+    * plain values, so entries are safely shared across sessions; a
+    * get/put race costs at most a duplicate collect, and sig-keying
+    * keeps either result valid.
+    */
+  private[sources] def registryRows(spark: SparkSession, dirStr: String)
+                                   (read: => DataFrame): Registry = {
+    val (sig, bytes) = registryListingSig(spark, new Path(dirStr))
+    if (sig == null || bytes > registryDriverCacheMaxBytes(spark)) return Right(read)
     val prev = registryRowsCache.get(dirStr)
-    val (schema, rows) =
-      if (prev != null && prev._1 == sig) (prev._2, prev._3)
-      else {
-        val df = read
-        val collected = df.collect()
-        registryRowsCache.put(dirStr, (sig, df.schema, collected))
-        (df.schema, collected)
-      }
-    spark.createDataFrame(java.util.Arrays.asList(rows.toIndexedSeq: _*), schema)
+    if (prev != null && prev._1 == sig) Left((prev._2, prev._3))
+    else {
+      val df = read
+      val collected = df.collect()
+      registryRowsCache.put(dirStr, (sig, df.schema, collected))
+      Left((df.schema, collected))
+    }
   }
+
+  /** A resolved registry as a DataFrame: held rows become a
+    * LocalRelation — lets the keep-set semi-join broadcast without any
+    * scan job — and the distributed read stays as it is.
+    */
+  private def registryDf(spark: SparkSession, reg: Registry): DataFrame = reg match {
+    case Left((schema, rows)) =>
+      spark.createDataFrame(java.util.Arrays.asList(rows.toIndexedSeq: _*), schema)
+    case Right(df) => df
+  }
+
+  private[sources] def servedRegistry(spark: SparkSession, dirStr: String)
+                                     (read: => DataFrame): DataFrame =
+    registryDf(spark, registryRows(spark, dirStr)(read))
 
   /** TOTAL manifest row count (active + tombstoned) — an UPPER BOUND
     * on every manifest-derived relation's cardinality (keep-sets,
@@ -1722,14 +1773,18 @@ object LogSync {
   }
 
   /** One sync round: returns the number of newly registered files.
-    * The diff between the listing and the manifest is a distributed
-    * anti-join — at millions of files the driver never materializes
-    * the registered set. Each new file is registered together with its
-    * timestamp zone-map ([[statsFor]]). SINGLE-WRITER per root: the
-    * whole plan-and-append round runs under [[withSyncLease]] — a
-    * concurrent sync of the same root fails loudly rather than
-    * double-registering the files both rounds see as fresh (retry
-    * when the holder finishes; its round registers them).
+    * The listing is driver-resident ([[listParquet]]), and so is the
+    * registered set while the manifest is under
+    * [[registryDriverCacheMaxBytes]] ([[registryRows]]): the diff is
+    * then a driver set difference on `path`. Past the cap it is a
+    * distributed anti-join against the manifest, so the driver never
+    * materializes a data-scale registered set. Each new file is
+    * registered together with its timestamp zone-map ([[statsFor]]).
+    * SINGLE-WRITER per root: the whole plan-and-append round runs
+    * under [[withSyncLease]] — a concurrent sync of the same root
+    * fails loudly rather than double-registering the files both rounds
+    * see as fresh (retry when the holder finishes; its round registers
+    * them).
     */
   def sync(spark: SparkSession, root: String): Int = withSyncLease(spark, root) {
     import spark.implicits._
@@ -1737,92 +1792,96 @@ object LogSync {
     // [[pendingDmlPaths]]
     val pending = pendingDmlPaths(spark, root)
     val listed = listParquet(spark, root)
-      .filterNot(p => pending.contains(normPathStr(p))).toDF("path")
+      .filterNot(p => pending.contains(normPathStr(p)))
     // diff against EVERY known path, tombstoned included: a replaced
     // file is still on disk until vacuum, and treating it as new would
     // resurrect its (compacted-away / deleted) rows
-    val fresh = listed
-      .join(manifestDf(spark, root).select(col("path")), Seq("path"), "left_anti")
-      .cache()
-    try {
-      val freshPaths = fresh.as[String].collect() // this round's new files only
-      if (freshPaths.nonEmpty) {
-        // EVOLVED lakes record any columns this round's footers ADDED
-        // into the schema log (registration is the one moment every
-        // new file is already being read) — the read side then never
-        // probes footers, and two writers adding DIFFERENT columns in
-        // separate files both surface (a newest-footer probe would
-        // silently drop all but the newest file's additions).
-        // ORDER MATTERS: the add commits BEFORE the manifest append.
-        // A crash (or a lost race against a concurrent ALTER) between
-        // the two leaves the files UNREGISTERED — the rerun's fresh
-        // diff re-finds them and retries, and a pre-recorded add is a
-        // no-op. The reverse order would register the files first and
-        // then lose the column FOREVER on a crash: no later sync
-        // re-examines a registered file, and evolved reads trust the
-        // log alone.
-        LakeEvolve.recordAdds(spark, root, freshPaths.toSeq)
-        // LEASED + RESERVED sequence, like every other commit: an
-        // unleased nextSeq here could tie a concurrent MOR commit's
-        // sequence (the tie is survivable — same-seq data is exempt
-        // from the delete, exactly as if appended after — but unique
-        // sequences per commit is the invariant everything else
-        // reasons from, so sync holds it too). Sync lease is already
-        // held; lease order sync→dml matches rewriteManifests.
-        val (commitSeq, seqRes) = allocateSeq(spark, root)
-        // ONE atomically-visible registration per round — see
-        // [[appendManifestAtomic]]: a watermark/changes poll concurrent
-        // with this commit can never observe half the round. The
-        // round's `registered_at` is STRICTLY ABOVE every earlier
-        // registration (sync is single-writer under the lease, so the
-        // bump is safe): two rounds completing within one millisecond
-        // would otherwise share an instant, and a mark taken between
-        // them would skip the second round on the strictly-greater
-        // tableSince filter — with monotone stamps plus atomic
-        // visibility, the timestamp-mark surface is exact.
-        val stamp = new java.sql.Timestamp(math.max(math.max(
-          System.currentTimeMillis(),
-          // the durable stamp mark: immune to a stale listing behind
-          // highWaterMark's manifest read (see [[tsHwmPath]])
-          stampFloor(spark, tsHwmPath(root)) + 1),
-          highWaterMark(spark, root).map(_.getTime + 1).getOrElse(0L)))
-        try appendManifestAtomic(spark, root,
-          freshManifestRows(spark, root, freshPaths.toSeq, seq = Some(commitSeq),
-            registeredAt = Some(stamp)))
-        finally releaseSeq(spark, seqRes)
-        // recorded AFTER the rename made the round visible, so a mark
-        // poll folding this value can never cover invisible rows
-        recordStampHwm(spark, tsHwmPath(root), stamp.getTime)
-        // SELF-DRIVING registry maintenance (Iceberg's
-        // commit.manifest-merge analog): every round appends one-plus
-        // part-files here, and an append-only lake otherwise NEVER
-        // consolidates — at the reference's ~10 s converter cadence
-        // that is ~8 640 parts/day of planning-time listing+footer
-        // opens on every read. Once the dir crosses
-        // `graft.lake.manifestMergeMinParts` (0 disables), rewrite it
-        // in place — the lease is already held, so the swap cannot
-        // race another sync; ROW-PRESERVING, so readers/CDC/travel
-        // see nothing (spec-pinned). DATA manifest only: the delete
-        // registry bounds ITSELF — its appends run under the DML
-        // lease ([[appendDeleteManifestLocked]]), which applies the
-        // same minParts rule at append time.
-        val minParts = spark.conf.getOption("graft.lake.manifestMergeMinParts")
-          .map(_.toInt).getOrElse(512)
-        if (minParts > 0) {
-          val mDir = new Path(manifestPath(spark, root))
-          val fsM = mDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val nParts =
-            try fsM.listStatus(mDir)
-              .count(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-            catch { case _: java.io.IOException => 0 }
-          if (nParts >= minParts) {
-            LogCompact.rewriteDataManifestLocked(spark, root)
-            ()
-          }
+    val freshPaths: Seq[String] = manifestRows(spark, root) match {
+      case Left((schema, rows)) =>
+        val i = schema.fieldIndex("path")
+        val known = rows.iterator.map(_.getString(i)).toSet
+        listed.filterNot(known.contains)
+      case Right(m) =>
+        listed.toDF("path")
+          .join(m.select(col("path")), Seq("path"), "left_anti")
+          .as[String].collect().toSeq
+    }
+    if (freshPaths.nonEmpty) {
+      // EVOLVED lakes record any columns this round's footers ADDED
+      // into the schema log (registration is the one moment every
+      // new file is already being read) — the read side then never
+      // probes footers, and two writers adding DIFFERENT columns in
+      // separate files both surface (a newest-footer probe would
+      // silently drop all but the newest file's additions).
+      // ORDER MATTERS: the add commits BEFORE the manifest append.
+      // A crash (or a lost race against a concurrent ALTER) between
+      // the two leaves the files UNREGISTERED — the rerun's fresh
+      // diff re-finds them and retries, and a pre-recorded add is a
+      // no-op. The reverse order would register the files first and
+      // then lose the column FOREVER on a crash: no later sync
+      // re-examines a registered file, and evolved reads trust the
+      // log alone.
+      LakeEvolve.recordAdds(spark, root, freshPaths)
+      // LEASED + RESERVED sequence, like every other commit: an
+      // unleased nextSeq here could tie a concurrent MOR commit's
+      // sequence (the tie is survivable — same-seq data is exempt
+      // from the delete, exactly as if appended after — but unique
+      // sequences per commit is the invariant everything else
+      // reasons from, so sync holds it too). Sync lease is already
+      // held; lease order sync→dml matches rewriteManifests.
+      val (commitSeq, seqRes) = allocateSeq(spark, root)
+      // ONE atomically-visible registration per round — see
+      // [[appendManifestAtomic]]: a watermark/changes poll concurrent
+      // with this commit can never observe half the round. The
+      // round's `registered_at` is STRICTLY ABOVE every earlier
+      // registration (sync is single-writer under the lease, so the
+      // bump is safe): two rounds completing within one millisecond
+      // would otherwise share an instant, and a mark taken between
+      // them would skip the second round on the strictly-greater
+      // tableSince filter — with monotone stamps plus atomic
+      // visibility, the timestamp-mark surface is exact.
+      val stamp = new java.sql.Timestamp(math.max(math.max(
+        System.currentTimeMillis(),
+        // the durable stamp mark: immune to a stale listing behind
+        // highWaterMark's manifest read (see [[tsHwmPath]])
+        stampFloor(spark, tsHwmPath(root)) + 1),
+        highWaterMark(spark, root).map(_.getTime + 1).getOrElse(0L)))
+      try appendManifestAtomic(spark, root,
+        freshManifestRows(spark, root, freshPaths, seq = Some(commitSeq),
+          registeredAt = Some(stamp)))
+      finally releaseSeq(spark, seqRes)
+      // recorded AFTER the rename made the round visible, so a mark
+      // poll folding this value can never cover invisible rows
+      recordStampHwm(spark, tsHwmPath(root), stamp.getTime)
+      // SELF-DRIVING registry maintenance (Iceberg's
+      // commit.manifest-merge analog): every round appends one-plus
+      // part-files here, and an append-only lake otherwise NEVER
+      // consolidates — at the reference's ~10 s converter cadence
+      // that is ~8 640 parts/day of planning-time listing+footer
+      // opens on every read. Once the dir crosses
+      // `graft.lake.manifestMergeMinParts` (0 disables), rewrite it
+      // in place — the lease is already held, so the swap cannot
+      // race another sync; ROW-PRESERVING, so readers/CDC/travel
+      // see nothing (spec-pinned). DATA manifest only: the delete
+      // registry bounds ITSELF — its appends run under the DML
+      // lease ([[appendDeleteManifestLocked]]), which applies the
+      // same minParts rule at append time.
+      val minParts = spark.conf.getOption("graft.lake.manifestMergeMinParts")
+        .map(_.toInt).getOrElse(512)
+      if (minParts > 0) {
+        val mDir = new Path(manifestPath(spark, root))
+        val fsM = mDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val nParts =
+          try fsM.listStatus(mDir)
+            .count(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+          catch { case _: java.io.IOException => 0 }
+        if (nParts >= minParts) {
+          LogCompact.rewriteDataManifestLocked(spark, root)
+          ()
         }
       }
-      freshPaths.length
-    } finally fresh.unpersist()
+    }
+    freshPaths.length
   }
 
   /** Raw registered data-file paths (the manifest's `path` column) —
@@ -2099,10 +2158,16 @@ object LogSync {
     * lost-registration self-heal, whose re-registered rows carry a
     * fresh instant and re-surface past a stored mark.
     */
-  def highWaterMark(spark: SparkSession, root: String): Option[java.sql.Timestamp] = {
-    val r = manifestDf(spark, root).agg(max(col("registered_at"))).head()
-    Option(r.getTimestamp(0))
-  }
+  def highWaterMark(spark: SparkSession, root: String): Option[java.sql.Timestamp] =
+    manifestRows(spark, root) match {
+      // the driver fold: a follower's repeat poll starts no Spark job
+      case Left((schema, rows)) =>
+        val i = schema.fieldIndex("registered_at")
+        rows.iterator.filterNot(_.isNullAt(i)).map(_.getTimestamp(i))
+          .reduceOption((a, b) => if (b.after(a)) b else a)
+      case Right(m) =>
+        Option(m.agg(max(col("registered_at"))).head().getTimestamp(0))
+    }
 
   /** UPSERT increments: the rows WRITTEN by upsert commits
     * ([[LakeDml.upsert]]/[[LakeDml.upsertMor]]/[[LakeDml.upsertEq]] —

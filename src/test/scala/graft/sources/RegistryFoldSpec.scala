@@ -1,0 +1,189 @@
+package graft.sources
+
+import java.nio.file.Files
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.ListenerBusAccess
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.functions._
+
+/** The driver fold and its distributed fallback. Under
+  * `graft.lake.registryDriverCacheMaxBytes` the registry is served as
+  * driver-held rows ([[LogSync.registryRows]]) and sync's fresh diff,
+  * [[LogSync.nextSeq]] and [[LogSync.highWaterMark]] fold over them; at
+  * a cap of 0 every registry read takes the distributed path. The same
+  * mutation sequence runs on two lakes in lockstep, one per path, and
+  * must leave the same manifests and marks. Also pins the one data-file
+  * walk against the recursive-listing rule it replaced, and the job
+  * count of a sync round and a follower's poll.
+  */
+class RegistryFoldSpec extends graft.SparkSpec {
+
+  private val CapKey = "graft.lake.registryDriverCacheMaxBytes"
+
+  private def atCapZero[A](f: => A): A = {
+    spark.conf.set(CapKey, "0")
+    try f finally spark.conf.unset(CapKey)
+  }
+
+  private def tmp(prefix: String): String =
+    Files.createTempDirectory(prefix).toString
+
+  // rows [from, until) in two service partitions; each of the `files`
+  // write tasks leaves one file per partition
+  private def append(root: String, from: Long, until: Long, files: Int = 2): Unit =
+    spark.range(from, until, 1, files).select(
+      timestamp_millis(lit(1700000000000L) + col("id") * 60000).as("timestamp"),
+      when(col("id") % 2 === 0, "a").otherwise("b").as("service_name"),
+      lit("INFO").as("severity_text"),
+      concat(lit("s"), col("id")).as("span_id"),
+      lit("x").as("body"))
+      .write.mode("append").partitionBy("service_name").parquet(root)
+
+  /** The recursive-listing rule `listDataFiles` replaced, verbatim. */
+  private def recursiveRule(dir: String): Seq[String] = {
+    val base = new Path(dir)
+    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(base)) return Seq.empty
+    val it = fs.listFiles(base, true)
+    val out = Seq.newBuilder[String]
+    while (it.hasNext) {
+      val f = it.next()
+      val rel = fs.makeQualified(base).toUri.relativize(f.getPath.toUri).getPath
+      if (rel.endsWith(".parquet") && !rel.split('/').exists(_.startsWith("_")))
+        out += f.getPath.toString
+    }
+    out.result()
+  }
+
+  test("the data-file walk keeps exactly what the recursive listing rule kept") {
+    val root = Files.createTempDirectory("graft_walk")
+    val kept = Seq("a.parquet", ".hidden/a.parquet", "day=1/hour=01/p.parquet",
+      "day=2/x.parquet/part-0.parquet", "svc=_a/r.parquet", "x_/y.parquet")
+    val skipped = Seq(".a.parquet.crc", "notes.txt", "a.parquet.tmp", "_x.parquet",
+      "_SUCCESS", "_index/trace_id/i.parquet", "_manifest_v2/part-0.parquet",
+      "_manifest_v2/.part-0.parquet.crc", "_deletes/d.parquet",
+      "day=1/hour=01/.p.parquet.crc", "day=1/hour=02/_tmp/q.parquet", "day=2/_y.parquet")
+    (kept ++ skipped).foreach { rel =>
+      val p = root.resolve(rel)
+      Files.createDirectories(p.getParent)
+      Files.write(p, Array[Byte](1))
+    }
+    val dir = root.toString
+    val listed = LogSync.listParquet(spark, dir)
+    assert(listed.sorted == recursiveRule(dir).sorted)
+    assert(listed.map(p => new Path(p).toUri.getPath.stripPrefix(dir + "/")).sorted ==
+      kept.sorted)
+    // a missing root and a file root list nothing, as before
+    assert(LogSync.listParquet(spark, s"$dir/missing").isEmpty)
+    assert(recursiveRule(s"$dir/missing").isEmpty)
+    assert(LogSync.listParquet(spark, s"$dir/a.parquet") == recursiveRule(s"$dir/a.parquet"))
+  }
+
+  test("driver fold and distributed fallback leave identical manifests, marks and sequences") {
+    val a = tmp("graft_fold_a")
+    val b = tmp("graft_fold_b") // every op on b runs at cap 0
+
+    // files differ in name between the lakes (rewrites draw UUIDs), so a
+    // manifest path is compared as (dir below the root, the file's keys)
+    val keysOf = scala.collection.mutable.Map.empty[String, String]
+    def canonical(root: String): Seq[(String, Long, String, Int, Option[Int])] = {
+      val rows = LogSync.manifest(spark, root)
+        .select("path", "seq", "op", "registered_at", "removed_at").collect().toSeq
+      val stamps = (rows.map(_.getTimestamp(3)) ++ rows.flatMap(r => Option(r.getTimestamp(4))))
+        .distinct.sortWith(_.before(_))
+      val rank = stamps.zipWithIndex.toMap
+      val rootPath = new Path(root).toUri.getPath
+      def local(p: String) = new Path(p).toUri.getPath
+      val unread = rows.map(_.getString(0)).filterNot(p => keysOf.contains(local(p)))
+      if (unread.nonEmpty)
+        spark.read.schema("span_id string").parquet(unread: _*)
+          .groupBy(col("_metadata.file_path"))
+          .agg(concat_ws(",", array_sort(collect_list(col("span_id")))))
+          .collect().foreach(r => keysOf(local(r.getString(0))) = r.getString(1))
+      rows.map { r =>
+        val p = r.getString(0)
+        val keys = keysOf(local(p))
+        val dir = new Path(p).getParent.toUri.getPath.stripPrefix(rootPath)
+        (s"$dir:$keys", r.getLong(1), r.getString(2), rank(r.getTimestamp(3)),
+          Option(r.getTimestamp(4)).map(rank))
+      }.sorted
+    }
+    def marks(root: String) = (LogSync.highWaterMark(spark, root), LogSync.nextSeq(spark, root))
+    def both[A](f: String => A): (A, A) = (f(a), atCapZero(f(b)))
+    def syncBoth(expect: Int): Unit = {
+      val (na, nb) = both(LogSync.sync(spark, _))
+      assert(na == expect && nb == expect)
+    }
+
+    both(append(_, 0, 40))
+    syncBoth(4)
+    syncBoth(0)
+    both(LogCompact.compact(spark, _))
+    both(LakeDml.deleteMor(spark, _, col("span_id") === "s8"))
+    both(append(_, 40, 50, files = 1))
+    syncBoth(2)
+    val manifestA = canonical(a)
+    assert(manifestA == atCapZero(canonical(b)))
+    // the durable allocation mark bounds nextSeq from below and would
+    // hide a wrong registry max: drop it, as on a lake written before the
+    // mark existed, so the two registries' maxes decide
+    val fs = new Path(a).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Seq(a, b).foreach(r => assert(fs.delete(LogSync.seqHwmPath(r), false)))
+    val deleteSeqs = LogSync.deleteManifestDf(spark, a).select("seq").collect().map(_.getLong(0))
+    assert(deleteSeqs.nonEmpty)
+    // both paths over ONE lake state agree exactly
+    val (hwmA, seqA) = marks(a)
+    assert(seqA == (manifestA.map(_._2) ++ deleteSeqs).max + 1)
+    assert(hwmA.isDefined && atCapZero(marks(a)) == ((hwmA, seqA)))
+    val (hwmB, seqB) = atCapZero(marks(b))
+    assert(marks(b) == ((hwmB, seqB)) && seqA == seqB)
+    val (rowsA, rowsB) = both(r => LogSync.table(spark, r).select("span_id")
+      .collect().map(_.getString(0)).sorted.toSeq)
+    assert(rowsA == rowsB && rowsA.length == 49)
+  }
+
+  /** The jobs `f` starts on this thread, each as its stages' operators. */
+  private def jobsOf(f: => Any): Seq[String] = {
+    val group = s"jobs-${java.util.UUID.randomUUID()}"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+          seen.add(e.stageInfos.map(_.rddInfos.flatMap(_.scope).map(_.name).distinct
+            .mkString("/")).mkString(" | "))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, group)
+    try {
+      f
+      ListenerBusAccess.drain(sc)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    seen.asScala.toSeq
+  }
+
+  test("a follower's repeat poll starts no job; a one-file sync starts the measured jobs") {
+    val root = tmp("graft_jobs")
+    append(root, 0, 10)
+    LogSync.sync(spark, root)
+    LogSync.highWaterMark(spark, root) // collects the registry once
+    assert(jobsOf(LogSync.highWaterMark(spark, root)).isEmpty)
+    append(root, 10, 11, files = 1)
+    val jobs = jobsOf(assert(LogSync.sync(spark, root) == 1))
+    // The registry reads, the fresh diff, nextSeq and highWaterMark fold
+    // over the warm driver-held rows and start none. What is left is the
+    // new file's registration:
+    //  1. statsFor's footer schema read of the new file (parallelize);
+    //  2. statsFor's stats aggregate: scan, partial aggregate, shuffle;
+    //  3. the stats broadcast AQE plans for freshManifestRows' left join;
+    //  4. appendManifestAtomic's repartition(1) shuffle;
+    //  5. appendManifestAtomic's write of the one manifest part.
+    assert(jobs.length == 5, jobs.mkString("\n", "\n", ""))
+  }
+}
