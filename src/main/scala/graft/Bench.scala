@@ -109,14 +109,23 @@ object Bench {
     // name + exception go to stderr and into the summary's "failed"
     // list (a regression can't hide as a healthy number).
     val failed = scala.collection.mutable.LinkedHashSet.empty[String]
+    // generated classes compiled per timed attempt, in attempt order: a
+    // plan that stops hitting Spark's codegen cache shows as a nonzero
+    // pass-2 count on its own entry
+    val compiles = scala.collection.mutable.Map.empty[String, Vector[Long]]
+    def compileCount(): Long =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     def time(name: String,
              fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+      val c0 = compileCount()
       val t0 = System.nanoTime()
       try { fn(spark, sfDir).count() } catch { case t: Throwable =>
         failed += name
         System.err.println(s"[bench] QUERY FAILED $name: ${t.getClass.getName}: ${t.getMessage}")
       }
-      (System.nanoTime() - t0) / 1e9
+      val secs = (System.nanoTime() - t0) / 1e9
+      compiles(name) = compiles.getOrElse(name, Vector.empty) :+ (compileCount() - c0)
+      secs
     }
     // Per-query numbers from the CURATED baseline (BENCH_PREV.json —
     // idle-run minima, maintained by hand, never auto-rewritten; each
@@ -264,6 +273,13 @@ object Bench {
           "\"" + k + "\":[" + fmt(a) + "," + (if (b.isNaN) "null" else fmt(b)) + "]"
         }
         .mkString("{", ",", "}")
+      // compile counts of the same two passes (a retry's is left out)
+      val cs = secondPass.toSeq.sortBy(_._1)
+        .map { case (k, _, _, _, _, _) =>
+          val c = compiles(k)
+          "\"" + k + "\":[" + c.head + "," + c.lift(1).fold("null")(_.toString) + "]"
+        }
+        .mkString("{", ",", "}")
       // the 1-min loadavg sampled at each pass's start, same key order
       // as "passes" — the inline contention record (compare against
       // "cpus": load ≈ cpus is a busy box, load >> cpus is the burst
@@ -278,7 +294,7 @@ object Bench {
         }
         .mkString("{", ",", "}")
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,""" +
-        s""""retried":$rt,"passes":$ps,"loads":$ld,""" +
+        s""""retried":$rt,"passes":$ps,"compiles":$cs,"loads":$ld,""" +
         s""""load_start":${fmt2(loadStart)},"load_end":${fmt2(loadAvg())},""" +
         // the MASTER's core count (the env contract the driver scales),
         // not availableProcessors(): the r18 8-core artifact printed 32

@@ -413,6 +413,19 @@ object LogSync {
     }.toSet
   }
 
+  /** A registry dir's part files, read with `mergeSchema`. Spark
+    * skips a root path whose name starts with `_` (and warns "All paths
+    * were ignored"), so the parts are passed instead of the dir. An
+    * empty dir is still read as the dir, with the same schema-inference
+    * error.
+    */
+  private def readRegistryParts(spark: SparkSession, path: String): DataFrame = {
+    val dir = new Path(path)
+    val parts = listDataFiles(dir.getFileSystem(spark.sparkContext.hadoopConfiguration), dir)
+      .map(_.getPath.toString)
+    spark.read.option("mergeSchema", "true").parquet((if (parts.isEmpty) Seq(path) else parts): _*)
+  }
+
   // manifests written before file stats / tombstones existed lack
   // min_ts/max_ts/min_svc/max_svc/removed_at; surface them as null
   // (= "no stats, never prune" / "active"). mergeSchema because a
@@ -421,7 +434,7 @@ object LogSync {
   // file-count-bounded, so reading every footer is control-plane
   // cost, unlike the data-path mergeSchema caveat on tableMerged.
   private def readManifestDir(spark: SparkSession, path: String): DataFrame = {
-    val m = spark.read.option("mergeSchema", "true").parquet(path)
+    val m = readRegistryParts(spark, path)
     manifestSchema.fields.drop(2).foldLeft(m) { (df, f) =>
       if (df.columns.contains(f.name)) df
       else df.withColumn(f.name, lit(null).cast(f.dataType))
@@ -513,7 +526,7 @@ object LogSync {
   // row files after an upgrade — the leased append adds parts in
   // place) + null backfill, same discipline as [[readManifestDir]]
   private def readDeleteManifestDir(spark: SparkSession, path: String): DataFrame = {
-    val m = spark.read.option("mergeSchema", "true").parquet(path)
+    val m = readRegistryParts(spark, path)
     deleteManifestSchema.fields.drop(5).foldLeft(m) { (df, f) =>
       if (df.columns.contains(f.name)) df
       else df.withColumn(f.name, lit(null).cast(f.dataType))
