@@ -113,18 +113,27 @@ object Bench {
     // plan that stops hitting Spark's codegen cache shows as a nonzero
     // pass-2 count on its own entry
     val compiles = scala.collection.mutable.Map.empty[String, Vector[Long]]
+    // Spark jobs started while `fn` builds the DataFrame, per timed
+    // attempt (None: the build threw): work that runs before the action
+    val constructJobs = scala.collection.mutable.Map.empty[String, Vector[Option[Int]]]
     def compileCount(): Long =
       org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     def time(name: String,
              fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val c0 = compileCount()
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case t: Throwable =>
+      var built = Option.empty[Int]
+      try {
+        val (df, jobs) = SparkJobs.during(spark)(fn(spark, sfDir))
+        built = Some(jobs.length)
+        df.count()
+      } catch { case t: Throwable =>
         failed += name
         System.err.println(s"[bench] QUERY FAILED $name: ${t.getClass.getName}: ${t.getMessage}")
       }
       val secs = (System.nanoTime() - t0) / 1e9
       compiles(name) = compiles.getOrElse(name, Vector.empty) :+ (compileCount() - c0)
+      constructJobs(name) = constructJobs.getOrElse(name, Vector.empty) :+ built
       secs
     }
     // Per-query numbers from the CURATED baseline (BENCH_PREV.json —
@@ -280,6 +289,13 @@ object Bench {
           "\"" + k + "\":[" + c.head + "," + c.lift(1).fold("null")(_.toString) + "]"
         }
         .mkString("{", ",", "}")
+      // construction jobs of the same two passes
+      val cj = secondPass.toSeq.sortBy(_._1)
+        .map { case (k, _, _, _, _, _) =>
+          val c = constructJobs(k).map(_.fold("null")(_.toString))
+          "\"" + k + "\":[" + c.head + "," + c.lift(1).getOrElse("null") + "]"
+        }
+        .mkString("{", ",", "}")
       // the 1-min loadavg sampled at each pass's start, same key order
       // as "passes" — the inline contention record (compare against
       // "cpus": load ≈ cpus is a busy box, load >> cpus is the burst
@@ -294,7 +310,7 @@ object Bench {
         }
         .mkString("{", ",", "}")
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,""" +
-        s""""retried":$rt,"passes":$ps,"compiles":$cs,"loads":$ld,""" +
+        s""""retried":$rt,"passes":$ps,"compiles":$cs,"construct_jobs":$cj,"loads":$ld,""" +
         s""""load_start":${fmt2(loadStart)},"load_end":${fmt2(loadAvg())},""" +
         // the MASTER's core count (the env contract the driver scales),
         // not availableProcessors(): the r18 8-core artifact printed 32

@@ -1,7 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.functions.VectorFunctions
 import graft.sources.Tables
@@ -14,6 +16,10 @@ import graft.sources.Tables
   *  - n-gram Jaccard: inverted-index candidate join (explode shingles →
   *    equi-join on shingle) — shuffles O(docs × shingles), never the
   *    O(docs²) cross product. This is the exact-correctness baseline.
+  *    Each index row carries its document's shingle count and rare
+  *    shingle count, so the candidate-pair aggregate already holds
+  *    both sides' stats and the upper-bound prefilter needs no join;
+  *    only the two array-verify joins remain past the aggregate.
   *  - MinHash+LSH: fixed-size signatures (64 perms → 16 bands × 4 rows)
   *    computed as pure array expressions (no explode, no signature
   *    shuffle); the only shuffles are the band-bucket candidate join
@@ -115,26 +121,62 @@ object Dedup {
   private val edgeCache =
     graft.SessionCaches.memo[(String, Int), DataFrame](_.unpersist(false))
 
-  /** df-capped inverted index (doc_id, s): shingles in more than
-    * `dfCap` documents are stop-phrases and dropped, so no index
-    * bucket exceeds dfCap² candidate pairs.
+  /** df-capped inverted index (doc_id, s, n, n_rare): shingles in
+    * more than `dfCap` documents are stop-phrases and dropped, so no
+    * index bucket exceeds dfCap² candidate pairs. `n` is the
+    * document's distinct shingle count and `n_rare` its count of kept
+    * shingles: the per-doc stats the J upper bound needs, carried on
+    * every posting so the pair aggregate groups them in with the ids
+    * (they are functionally dependent on `doc_id`).
+    *
+    * The trade at scale: the `doc_id` window costs one more exchange of
+    * index rows, and in return the candidate pairs skip the two stats
+    * joins (two pair-scale exchanges) and the per-doc rare-count
+    * aggregate. `df` is a window over `s`, which replaces the df
+    * aggregate and its semi-join; unlike that aggregate it has no
+    * map-side combine, so a stop-phrase's postings meet in one
+    * (spillable) window buffer before the cap drops them. Measured on
+    * a 750-document shard: 13 jobs instead of 22, and more shuffle
+    * bytes, since every posting now carries two longs more.
     */
-  private def cappedIndex(docs: DataFrame, dfCap: Int): DataFrame = {
-    val sh = docs.select(col("doc_id"), explode(col("sh")).as("s"))
-    val rare = sh.groupBy(col("s")).agg(count(lit(1)).as("df"))
-      .filter(col("df") <= dfCap).select(col("s"))
-    // hash(s)-partitioned ON PURPOSE (r19): every consumer joins this
-    // index on `s` — the self-join (ngramJaccardOn), the bipartite
-    // batch×corpus join (incremental), the per-increment stream join —
-    // and the callers cache it, so partitioning established here is
-    // established ONCE; without it each cached consumer re-exchanged
-    // the full index per join side (the r18 incremental plan carried 8
-    // hash(s) exchanges)
-    sh.join(rare, Seq("s"), "left_semi").repartition(col("s"))
+  private def cappedIndex(docs: DataFrame, dfCap: Int): DataFrame =
+    docs.select(col("doc_id"), size(col("sh")).as("n"), explode(col("sh")).as("s"))
+      .withColumn("df", count(lit(1)).over(Window.partitionBy(col("s"))))
+      .filter(col("df") <= dfCap)
+      .withColumn("n_rare", count(lit(1)).over(Window.partitionBy(col("doc_id"))))
+      .select(col("doc_id"), col("s"), col("n"), col("n_rare"))
+      // hash(s)-partitioned ON PURPOSE (r19): every consumer joins this
+      // index on `s` — the self-join (ngramJaccardOn), the bipartite
+      // batch×corpus join (incremental), the per-increment stream join —
+      // and the callers cache it, so partitioning established here is
+      // established ONCE; without it each cached consumer re-exchanged
+      // the full index per join side (the r18 incremental plan carried 8
+      // hash(s) exchanges)
+      .repartition(col("s"))
+
+  /** Group key of an index join `a ⋈ b` on `s`: the pair's ids and both
+    * sides' stats, with side `a` as `da` where `aFirst` holds (the
+    * stats swap together with the ids).
+    */
+  private def pairKey(aFirst: Column = lit(true)): Seq[Column] = {
+    def lo(c: String) = when(aFirst, col(s"a.$c")).otherwise(col(s"b.$c"))
+    def hi(c: String) = when(aFirst, col(s"b.$c")).otherwise(col(s"a.$c"))
+    Seq(lo("doc_id").as("da"), hi("doc_id").as("db"), lo("n").as("na"),
+      lo("n_rare").as("na_rare"), hi("n").as("nb"), hi("n_rare").as("nb_rare"))
   }
 
+  /** Stage 1 of every n-gram variant: per candidate pair, the EXACT
+    * intersection count among rare shingles straight from the
+    * index-join aggregate, with both sides' stats in the group key —
+    * one shuffle of (pair, stats, count) rows, no shingle arrays on
+    * the wire.
+    */
+  private def rareCounts(pairs: DataFrame): DataFrame =
+    pairs.groupBy(col("da"), col("db"), col("na"), col("na_rare"), col("nb"), col("nb_rare"))
+      .agg(count(lit(1)).as("inter_rare"))
+
   /** Stages 2+3 shared by the self-join and bipartite variants, given
-    * the stage-1 rare-intersection counts (da, db, inter_rare).
+    * the stage-1 rare-intersection counts [[rareCounts]].
     *
     * Stage 2 (prefilter): hot shingles were excluded from the index,
     * so the true intersection is inter_rare + inter_hot with
@@ -147,21 +189,13 @@ object Dedup {
     * — hot shingles count again here, so the cap can never change a
     * reported score, only skip pairs provably below the threshold.
     */
-  private def boundAndVerify(docs: DataFrame, idx: DataFrame, interRare: DataFrame,
+  private def boundAndVerify(docs: DataFrame, interRare: DataFrame,
                              threshold: Double): DataFrame = {
     val hA = col("na") - col("na_rare")
     val hB = col("nb") - col("nb_rare")
     val interMax = col("inter_rare") + least(hA, hB)
     val jMax = interMax.cast("double") / (col("na") + col("nb") - interMax)
-    val nRare = idx.groupBy(col("doc_id")).agg(count(lit(1)).as("n_rare"))
-    val stats = docs.select(col("doc_id"), size(col("sh")).as("n"))
-      .join(nRare, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("n"), coalesce(col("n_rare"), lit(0L)).as("n_rare"))
     val promising = interRare
-      .join(stats.select(col("doc_id").as("da"), col("n").as("na"),
-        col("n_rare").as("na_rare")), "da")
-      .join(stats.select(col("doc_id").as("db"), col("n").as("nb"),
-        col("n_rare").as("nb_rare")), "db")
       .filter(jMax >= threshold)
       .select(col("da"), col("db"))
     verifyJaccard(promising, docs)
@@ -170,24 +204,27 @@ object Dedup {
   }
 
   private[graft] def ngramJaccardOn(documents: DataFrame, dfCap: Int): DataFrame = {
-    // cached: both sides of the inverted-index self-join reuse the
-    // shingle arrays instead of recomputing the parse; the capped index
-    // is cached too — it feeds both self-join sides AND the per-doc
-    // rare counts, and without the cache the df aggregation over every
-    // exploded shingle would run twice
-    val docs = docShinglesOf(documents).cache()
-    val idx = cappedIndex(docs, dfCap).cache()
-    // Stage 1 (cheap, count-only): per candidate pair, the EXACT
-    // intersection count among rare shingles comes straight from the
-    // capped-index equi-join aggregate — one shuffle of (da, db, count)
-    // rows, no shingle arrays on the wire.
-    val interRare = idx.as("a")
+    // cached: the verify joins reuse the shingle arrays instead of
+    // recomputing the parse (the cache is also the barrier that keeps
+    // filter pushdown from inlining the O(len²) shingle expression);
+    // the capped index feeds both self-join sides, and without the
+    // cache its two windows over every exploded shingle would run twice
+    val docs = cacheOnce(docShinglesOf(documents))
+    val idx = cacheOnce(cappedIndex(docs, dfCap))
+    val interRare = rareCounts(idx.as("a")
       .join(idx.as("b"), col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("da"), col("b.doc_id").as("db"))
-      .agg(count(lit(1)).as("inter_rare"))
-    boundAndVerify(docs, idx, interRare, 0.8)
+      .select(pairKey(): _*))
+    boundAndVerify(docs, interRare, 0.8)
       .orderBy(col("da"), col("db"))
   }
+
+  /** `df.cache()`, unless this plan is already cached: the per-shard
+    * operators build the same shingle and index plans (`minhash`,
+    * `ngramJaccard` and `incremental` over one corpus), and Spark warns
+    * on every repeated `cache()` of one plan.
+    */
+  private def cacheOnce(df: DataFrame): DataFrame =
+    if (df.storageLevel == StorageLevel.NONE) df.cache() else df
 
   /** Incremental dedup: exact 3-gram Jaccard (J ≥ 0.8) of an INCOMING
     * BATCH against the existing corpus — the steady-state dedup a
@@ -236,19 +273,16 @@ object Dedup {
     val newIdx = idx.join(flags.filter(col("is_new")).select("doc_id"), Seq("doc_id"))
     val oldIdx = idx.join(flags.filter(!col("is_new")).select("doc_id"), Seq("doc_id"))
     val bipartite = newIdx.as("a").join(oldIdx.as("b"), col("a.s") === col("b.s"))
-      .select(least(col("a.doc_id"), col("b.doc_id")).as("da"),
-              greatest(col("a.doc_id"), col("b.doc_id")).as("db"))
+      .select(pairKey(col("a.doc_id") < col("b.doc_id")): _*)
     val withinNew = newIdx.as("a")
       .join(newIdx.as("b"), col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("da"), col("b.doc_id").as("db"))
-    val interRare = bipartite.unionByName(withinNew)
-      .groupBy(col("da"), col("db"))
-      .agg(count(lit(1)).as("inter_rare"))
+      .select(pairKey(): _*)
+    val interRare = rareCounts(bipartite.unionByName(withinNew))
     // materialize the (tiny) pair set, then RELEASE the per-increment
     // index cache: a long-running DedupFollow stream calls this every
     // poll, and without the unpersist each increment would leave a
     // cached dataset behind — unbounded executor-storage growth
-    val out = boundAndVerify(docs.select(col("doc_id"), col("sh")), idx, interRare, 0.8)
+    val out = boundAndVerify(docs.select(col("doc_id"), col("sh")), interRare, 0.8)
       .orderBy(col("da"), col("db"))
       .localCheckpoint()
     idx.unpersist()
@@ -257,21 +291,19 @@ object Dedup {
 
   def incremental(spark: SparkSession, dir: String, dfCap: Int = 100): DataFrame = {
     val isNew = col("doc_id") % 5 === 4
-    val docs = docShingles(spark, dir).cache()
-    val idx = cappedIndex(docs, dfCap).cache()
-    val interRare = idx.filter(isNew).as("a")
+    val docs = cacheOnce(docShingles(spark, dir))
+    val idx = cacheOnce(cappedIndex(docs, dfCap))
+    val interRare = rareCounts(idx.filter(isNew).as("a")
       .join(idx.filter(!isNew).as("b"), col("a.s") === col("b.s"))
-      .groupBy(col("a.doc_id").as("da"), col("b.doc_id").as("db"))
-      .agg(count(lit(1)).as("inter_rare"))
-    boundAndVerify(docs, idx, interRare, 0.8)
+      .select(pairKey(): _*))
+    boundAndVerify(docs, interRare, 0.8)
       .select(col("da").as("new_id"), col("db").as("old_id"), col("j"))
       .orderBy(col("new_id"), col("old_id"))
   }
 
   /** (da, db, inter_rare) for every pair sharing a sub-cap shingle
-    * (spec observable for bucket-skew bounds). One df aggregation, one
-    * semi-join, one equi-join + aggregate — never an O(docs²) cross
-    * product.
+    * (spec observable for bucket-skew bounds). The index's windows,
+    * one equi-join + aggregate — never an O(docs²) cross product.
     */
   private[graft] def ngramCandidateCounts(docs: DataFrame, dfCap: Int): DataFrame = {
     val idx = cappedIndex(docs, dfCap)
@@ -300,7 +332,7 @@ object Dedup {
     */
   def minhash(spark: SparkSession, dir: String): DataFrame = {
     VectorFunctions.register(spark)
-    val allDocs = docShingles(spark, dir).cache()
+    val allDocs = cacheOnce(docShingles(spark, dir))
     val docs = allDocs.filter(size(col("sh")) > 0)
     // per-doc shingle hash array, then all 64 permutation minima in one
     // native-loop expression evaluation (see MinHashSignature)

@@ -413,13 +413,13 @@ object LogSync {
     }.toSet
   }
 
-  /** A registry dir's part files, read with `mergeSchema`. Spark
-    * skips a root path whose name starts with `_` (and warns "All paths
-    * were ignored"), so the parts are passed instead of the dir. An
-    * empty dir is still read as the dir, with the same schema-inference
-    * error.
+  /** A registry dir's part files (also a follower's `_consumed_v<N>`
+    * marks), read with `mergeSchema`. Spark skips a root path whose
+    * name starts with `_` (and warns "All paths were ignored"), so the
+    * parts are passed instead of the dir. An empty dir is still read as
+    * the dir, with the same schema-inference error.
     */
-  private def readRegistryParts(spark: SparkSession, path: String): DataFrame = {
+  private[graft] def readRegistryParts(spark: SparkSession, path: String): DataFrame = {
     val dir = new Path(path)
     val parts = listDataFiles(dir.getFileSystem(spark.sparkContext.hadoopConfiguration), dir)
       .map(_.getPath.toString)

@@ -109,7 +109,7 @@ object LakeFollow {
     val v = committedVersion(spark, marksDir)
     if (v == 0) (Seq.empty[String].toDF("path"), None)
     else {
-      val df = spark.read.parquet(s"$marksDir/_consumed_v$v")
+      val df = LogSync.readRegistryParts(spark, s"$marksDir/_consumed_v$v")
       val paths = df.filter(col("path").isNotNull).select("path")
       val wm =
         if (df.columns.contains("wm"))

@@ -15,6 +15,11 @@ object GraftSqlBridge {
 
   def analyzed(df: DataFrame): LogicalPlan = df.queryExecution.analyzed
 
+  /** Waits until every listener has seen the events of the actions that
+    * already ran (the bus is `private[spark]`).
+    */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+
   /** Column → Catalyst Expression (Spark 4 removed Column.expr). */
   def expression(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
     org.apache.spark.sql.classic.ExpressionUtils.expression(c)

@@ -2,11 +2,7 @@ package graft.sources
 
 import java.nio.file.Files
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.hadoop.fs.Path
-import org.apache.spark.ListenerBusAccess
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 /** The driver fold and its distributed fallback. Under
@@ -145,28 +141,7 @@ class RegistryFoldSpec extends graft.SparkSpec {
     assert(rowsA == rowsB && rowsA.length == 49)
   }
 
-  /** The jobs `f` starts on this thread, each as its stages' operators. */
-  private def jobsOf(f: => Any): Seq[String] = {
-    val group = s"jobs-${java.util.UUID.randomUUID()}"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
-          seen.add(e.stageInfos.map(_.rddInfos.flatMap(_.scope).map(_.name).distinct
-            .mkString("/")).mkString(" | "))
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, group)
-    try {
-      f
-      ListenerBusAccess.drain(sc)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-    seen.asScala.toSeq
-  }
+  private def jobsOf(f: => Any): Seq[String] = graft.SparkJobs.during(spark)(f)._2
 
   test("a follower's repeat poll starts no job; a one-file sync starts the measured jobs") {
     val root = tmp("graft_jobs")
