@@ -3,7 +3,8 @@ package graft
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
 /** Lifecycle for the build-once session caches (near-dup edge set, OTLP
   * parses, PQ codebooks, bucketed-table markers, …): each cache entry
@@ -102,6 +103,15 @@ object SessionCaches {
   }
 
   def memo[K, V](release: V => Unit = (_: V) => ()): Memo[K, V] = new Memo(release)
+
+  /** `df.cache()`, unless this plan is already cached: operators that
+    * build the same per-call plan over one dir (`minhash`,
+    * `ngramJaccard` and `incremental` over one corpus, a repeated ANN
+    * probe) would otherwise re-cache it, and Spark warns on every
+    * repeated `cache()` of one plan.
+    */
+  private[graft] def cacheOnce(df: DataFrame): DataFrame =
+    if (df.storageLevel == StorageLevel.NONE) df.cache() else df
 
   /** A bounded, thread-safe LRU map for VALUE-keyed memo caches whose
     * key space grows with history (delete-file path sets, chain file

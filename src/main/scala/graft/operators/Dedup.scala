@@ -3,8 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
+import graft.SessionCaches.cacheOnce
 import graft.functions.VectorFunctions
 import graft.sources.Tables
 
@@ -218,14 +218,6 @@ object Dedup {
       .orderBy(col("da"), col("db"))
   }
 
-  /** `df.cache()`, unless this plan is already cached: the per-shard
-    * operators build the same shingle and index plans (`minhash`,
-    * `ngramJaccard` and `incremental` over one corpus), and Spark warns
-    * on every repeated `cache()` of one plan.
-    */
-  private def cacheOnce(df: DataFrame): DataFrame =
-    if (df.storageLevel == StorageLevel.NONE) df.cache() else df
-
   /** Incremental dedup: exact 3-gram Jaccard (J ≥ 0.8) of an INCOMING
     * BATCH against the existing corpus — the steady-state dedup a
     * 100 TB pipeline actually runs (dedup the day's crawl against the
@@ -344,10 +336,10 @@ object Dedup {
       struct(lit(bIdx).as("band"),
         xxhash64((0 until 4).map(r => element_at(col("sig"), bIdx * 4 + r + 1)): _*).as("bh"))
     }
-    val buckets = sigs
+    // self-joined below: avoid recomputing signatures twice
+    val buckets = cacheOnce(sigs
       .select(col("doc_id"), explode(array(bands: _*)).as("bb"))
-      .select(col("doc_id"), col("bb.band").as("band"), col("bb.bh").as("bh"))
-      .cache() // self-joined below: avoid recomputing signatures twice
+      .select(col("doc_id"), col("bb.band").as("band"), col("bb.bh").as("bh")))
     val cand = buckets.as("a")
       .join(buckets.as("b"),
         col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
@@ -380,10 +372,10 @@ object Dedup {
       .select(col("doc_id"), col("bits"))
     val bandVal = (k: Int) =>
       call_function("shiftrightunsigned", col("bits"), lit(k * 16)).bitwiseAND(lit(0xffffL))
-    val buckets = sigs.select(col("doc_id"), col("bits"),
+    // self-joined below
+    val buckets = cacheOnce(sigs.select(col("doc_id"), col("bits"),
         explode(array((0 until 4).map(k => struct(lit(k).as("band"), bandVal(k).as("bv"))): _*)).as("bb"))
-      .select(col("doc_id"), col("bits"), col("bb.band").as("band"), col("bb.bv").as("bv"))
-      .cache() // self-joined below
+      .select(col("doc_id"), col("bits"), col("bb.band").as("band"), col("bb.bv").as("bv")))
 
     val hamming = bit_count(col("a.bits").bitwiseXOR(col("b.bits")))
     buckets.as("a")
@@ -421,12 +413,12 @@ object Dedup {
   def embeddingPairs(spark: SparkSession, dir: String, threshold: Double = 0.45,
                      planesPerBand: Int = 5, bands: Int = 48): DataFrame = {
     VectorFunctions.register(spark)
-    val e = Tables.embeddings(spark, dir)
+    // signature side is self-joined and re-joined for verify
+    val e = cacheOnce(Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding").as("v"))
       .withColumn("nrm", sqrt(call_function("graft_dot", col("v"), col("v"))))
       .withColumn("bks",
-        call_function("graft_hyperplanes", col("v"), lit(planesPerBand), lit(bands)))
-      .cache() // signature side is self-joined and re-joined for verify
+        call_function("graft_hyperplanes", col("v"), lit(planesPerBand), lit(bands))))
     val buckets = e.select(col("vec_id"), posexplode(col("bks")).as(Seq("band", "bucket")))
     // VERIFY-FIRST, dedup the SURVIVORS: candidate pair-OCCURRENCES
     // (one per colliding band) flow straight into the broadcast
@@ -519,11 +511,11 @@ object Dedup {
                             k: Int): (DataFrame, DataFrame) = {
     VectorFunctions.register(spark)
     val cents = Clustering.centroids(spark, dir, k)
-    val e = Tables.embeddings(spark, dir)
+    // self-joined for pairs, then joined again for the summary
+    val e = cacheOnce(Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding").as("v"))
       .withColumn("nrm", sqrt(call_function("graft_dot", col("v"), col("v"))))
-      .withColumn("cell", element_at(Similarity.topCellsExpr(cents)(col("v"), 1), 1))
-      .cache() // self-joined for pairs, then joined again for the summary
+      .withColumn("cell", element_at(Similarity.topCellsExpr(cents)(col("v"), 1), 1)))
     val cosc = call_function("graft_dot", col("a.v"), col("b.v")) / (col("a.nrm") * col("b.nrm"))
     val dropped = e.as("a").join(e.as("b"),
         col("a.cell") === col("b.cell") && col("a.vec_id") < col("b.vec_id"))

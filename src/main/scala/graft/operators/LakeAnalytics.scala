@@ -320,7 +320,9 @@ object LakeAnalytics {
     java.security.MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
       .map(b => f"$b%02x").mkString
 
-  private val indexed = new java.util.concurrent.ConcurrentHashMap[String, Boolean]()
+  // LakeIndex builds are incremental (a no-op on a current index), so
+  // once per (session, lake) is enough
+  private val indexed = graft.SessionCaches.memo[String, Unit]()
 
   /** Trace point lookup over the registered lake THROUGH the per-file
     * bloom sidecar ([[graft.sources.LakeIndex]]) — the needle query the
@@ -334,9 +336,9 @@ object LakeAnalytics {
   def needle(spark: SparkSession, dir: String,
              traceId: String = md5Hex("7/2024-01-15")): DataFrame = {
     val root = lakeRoot(spark, dir)
-    indexed.computeIfAbsent(root, _ => {
-      LakeIndex.build(spark, root, "trace_id", expectedItemsPerFile = 4096); true
-    })
+    indexed(spark, root) {
+      LakeIndex.build(spark, root, "trace_id", expectedItemsPerFile = 4096); ()
+    }
     LakeIndex.lookup(spark, root, "trace_id", Seq(traceId))
       .select(col("trace_id"), col("span_id"),
         date_format(col("timestamp"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("ts_str"),
@@ -367,7 +369,7 @@ object LakeAnalytics {
       .orderBy(col("ts_str"), col("span_id"))
   }
 
-  private val tokIndexed = new java.util.concurrent.ConcurrentHashMap[String, Boolean]()
+  private val tokIndexed = graft.SessionCaches.memo[String, Unit]()
 
   /** Keyword search over the registered lake THROUGH the per-file
     * token-bloom sidecar ([[graft.sources.LakeIndex.buildTokens]]) —
@@ -381,11 +383,11 @@ object LakeAnalytics {
   def grep(spark: SparkSession, dir: String,
            terms: Seq[String] = Seq("69")): DataFrame = {
     val root = lakeRoot(spark, dir)
-    tokIndexed.computeIfAbsent(root, _ => {
+    tokIndexed(spark, root) {
       // day-grain test files hold ~hundreds of rows over a ~100-token
       // vocabulary; the 100 TB default sizes for a full file's vocab
-      LakeIndex.buildTokens(spark, root, "body", expectedTokensPerFile = 4096); true
-    })
+      LakeIndex.buildTokens(spark, root, "body", expectedTokensPerFile = 4096); ()
+    }
     LakeIndex.grep(spark, root, "body", terms)
       .select(date_format(col("timestamp"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("ts_str"),
         col("service_name"), col("severity_text"), col("body"))

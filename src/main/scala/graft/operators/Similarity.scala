@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.SessionCaches.cacheOnce
 import graft.functions.VectorFunctions
 import graft.plans.TopK
 import graft.sources.Tables
@@ -154,9 +155,9 @@ object Similarity {
     VectorFunctions.register(spark)
     val cents = cellCentroids(spark, dir, k)
     def topCells(v: Column, n: Int): Column = topCellsExpr(cents)(v, n)
-    val e = withNorm(Tables.embeddings(spark, dir))
-      .withColumn("cell", element_at(topCells(col("v"), 1), 1))
-      .cache() // probed by queries derived from itself
+    // probed by queries derived from itself
+    val e = cacheOnce(withNorm(Tables.embeddings(spark, dir))
+      .withColumn("cell", element_at(topCells(col("v"), 1), 1)))
     val q = queries.map(withNorm).getOrElse(e.filter(col("vec_id") < 10))
       .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"),
               explode(topCells(col("v"), nprobe)).as("cell"))
@@ -303,7 +304,7 @@ object Similarity {
             queries: Option[DataFrame] = None): DataFrame = {
     VectorFunctions.register(spark)
     import spark.implicits._
-    val base = withNorm(Tables.embeddings(spark, dir)).cache()
+    val base = cacheOnce(withNorm(Tables.embeddings(spark, dir)))
     val dim = base.select(size(col("v"))).head().getInt(0)
     require(dim % m == 0, s"dim $dim not divisible by m=$m subspaces")
     val sub = dim / m
@@ -352,8 +353,8 @@ object Similarity {
     val nPlanes = if (planes > 0) planes else derivePlanes(base.count())
     def bucketed(df: DataFrame): DataFrame = df.withColumn("bucket",
       element_at(call_function("graft_hyperplanes", col("v"), lit(nPlanes), lit(1)), 1))
-    val e = bucketed(base)
-      .cache() // corpus side is probed by queries derived from itself
+    // corpus side is probed by queries derived from itself
+    val e = cacheOnce(bucketed(base))
     val q = queries.map(qs => bucketed(withNorm(qs)))
       .getOrElse(e.filter(col("vec_id") < 10))
       .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"),

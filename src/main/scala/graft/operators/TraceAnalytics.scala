@@ -578,8 +578,8 @@ object TraceAnalytics {
   def lakeCriticalPath(spark: SparkSession, dir: String): DataFrame =
     criticalPathFromLake(spark, tracesLakeRoot(spark, dir))
 
-  private val spanIndexed =
-    new java.util.concurrent.ConcurrentHashMap[String, Boolean]()
+  // LakeIndex builds are incremental, so once per (session, lake)
+  private val spanIndexed = graft.SessionCaches.memo[String, Unit]()
 
   private def md5Hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")
@@ -598,10 +598,10 @@ object TraceAnalytics {
   def lakeTraceSpans(spark: SparkSession, dir: String,
                      userDay: String = "7/2024-01-15"): DataFrame = {
     val root = tracesLakeRoot(spark, dir)
-    spanIndexed.computeIfAbsent(root, _ => {
+    spanIndexed(spark, root) {
       graft.sources.LakeIndex.build(spark, root, "trace_id",
-        expectedItemsPerFile = 4096); true
-    })
+        expectedItemsPerFile = 4096); ()
+    }
     graft.sources.LakeIndex.lookup(spark, root, "trace_id", Seq(md5Hex(userDay)))
       .select(col("span_id"), col("parent_span_id"),
         col("service_name").as("service"), col("span_name").as("operation"),

@@ -469,21 +469,17 @@ object IcebergExport {
   private val fieldIdsMemo = graft.SessionCaches.memo[String, (String, Map[String, Int])]()
 
   /** Column name → Iceberg field id under the export's assignment.
-    * Memoized per data-manifest head state (version + active count +
-    * newest registration — the [[ensureExport]] token shape, since
-    * plain syncs append without bumping the version): the assignment
-    * depends only on the active file set, and the equality-delete
-    * writer calls this once per DELETE COMMIT — a CDC stream issuing
-    * thousands of keyed retractions must not pay the schema-merge job
-    * over every active footer each time.
+    * Memoized per data-manifest state ([[LogSync.stateToken]]'s
+    * manifest part): the assignment depends only on the active file
+    * set, and the equality-delete writer calls this once per DELETE
+    * COMMIT — a CDC stream issuing thousands of keyed retractions must
+    * not pay the schema-merge job over every active footer each time.
     */
   private[graft] def exportFieldIds(spark: SparkSession, root: String): Map[String, Int] = {
-    val head = LogSync.manifest(spark, root)
-      .agg(count(when(col("removed_at").isNull, 1)), max(col("registered_at"))).head()
     // the schema-log version rides in the token: a rename/promote
     // changes the assignment without moving the manifest
-    val token = s"${LogSync.manifestVersion(spark, root)}:${head.get(0)}:" +
-      s"${head.get(1)}:${LakeEvolve.logVersion(spark, root)}"
+    val token = s"${LogSync.stateToken(spark, root).manifest}:" +
+      s"${LakeEvolve.logVersion(spark, root)}"
     // one entry per lake: a superseded head state can never be hit
     // again, so the memo stays O(lakes), not O(sync rounds in the session)
     fieldIdsMemo.refresh(spark, root)(_._1 == token) {
@@ -1149,32 +1145,20 @@ object IcebergExport {
   /** One export per (session, lake, LAKE STATE) — the guard contract
     * queries use so repeated runs read one metadata version instead of
     * minting a new snapshot per query, WITHOUT going stale on a
-    * growing lake: the memo entry carries a staleness token derived
-    * from the live manifest (its version + active-row count + newest
-    * registration instant — a control-plane aggregate), so a
+    * growing lake: the memo entry carries [[LogSync.stateToken]], so a
     * LakeIngest/OtlpHttp flush into the same root triggers a fresh
     * export on the next query and `lake_iceberg` can never diverge
-    * from `lake_severity_by_service` on the same lake. One entry per
-    * (session, lake): the fresh export replaces the superseded one.
+    * from `lake_severity_by_service` on the same lake. The delete
+    * registry (both kinds) is part of the table state: a
+    * deleteMor/deleteEq commit must invalidate the memo even though
+    * the DATA manifest didn't move. One entry per (session, lake): the
+    * fresh export replaces the superseded one.
     */
   private val exportedOnce = graft.SessionCaches.memo[String, (String, String)]()
 
   def ensureExport(spark: SparkSession, root: String): String = {
-    val m = LogSync.manifest(spark, root)
-    val head = m.agg(count(when(col("removed_at").isNull, 1)), max(col("registered_at"))).head()
-    // the delete registry (both kinds) is part of the table state: a
-    // deleteMor/deleteEq commit must invalidate the memo even though
-    // the DATA manifest didn't move. SHA-256 of the joined entry
-    // list, not String.hashCode — a 32-bit collision between two
-    // distinct delete states would silently skip a needed re-export
-    // and serve a stale chain.
-    val delToken = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(LogSync.deleteEntries(spark, root)
-        .map(e => s"${e.path}#${e.rows}#${e.kind}#${e.seq}").sorted.mkString("|")
-        .getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-    val token = s"${LogSync.manifestVersion(spark, root)}:${head.get(0)}:" +
-      s"${head.get(1)}:$delToken:${LakeEvolve.logVersion(spark, root)}"
+    val st = LogSync.stateToken(spark, root)
+    val token = s"${st.manifest}:${st.deletes}:${LakeEvolve.logVersion(spark, root)}"
     exportedOnce.refresh(spark, root)(_._1 == token)((token, export(spark, root)))._2
   }
 

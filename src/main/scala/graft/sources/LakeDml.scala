@@ -102,7 +102,7 @@ object LakeDml {
       case None => withMeta
     }
     val kept = posReady
-      .join(LogSync.sizedKeepSet(spark, root, paths),
+      .join(LogSync.sizedKeepSet(spark, LogSync.manifestRows(spark, root), paths),
         col("__src") === col("__registered_path"), "left_semi")
     // rows already MOR-deleted (position OR equality) must be
     // invisible to DML decisions: a CoW rewrite that scanned them
@@ -1047,12 +1047,9 @@ object LakeDml {
       .select(LogSync.normPath(col("path")).as("__active"))
     // the semi-join's build side is FILE-cardinality (one row per
     // active registered file) — size-guarded like every other
-    // manifest-derived relation: broadcast under the row cap (the
-    // cached manifestRowCount bound), shuffle past it
-    val sizedActive =
-      if (LogSync.manifestRowCount(spark, root) <= LogSync.seqBroadcastRowCap(spark))
-        broadcast(active)
-      else active
+    // manifest-derived relation: broadcast under the row cap, shuffle
+    // past it
+    val sizedActive = LogSync.sizedKeepSet(spark, LogSync.manifestRows(spark, root), active)
     // a delete FILE stays live while ANY of its target files is active
     val live = spark.read.parquet(entries.map(_.path): _*)
       .select(LogSync.normPath(col("file_path")).as("__target"),

@@ -447,7 +447,7 @@ object LogSync {
   /** The data manifest as [[registryRows]] (empty rows when there is
     * none yet): its rows, or past the cap the distributed read.
     */
-  private def manifestRows(spark: SparkSession, root: String): Registry =
+  private[sources] def manifestRows(spark: SparkSession, root: String): Registry =
     if (!hasManifest(spark, root)) Left((manifestSchema, Array.empty[Row]))
     else {
       val path = manifestPath(spark, root)
@@ -719,38 +719,6 @@ object LogSync {
     spark.conf.getOption("graft.lake.deleteEntryCap")
       .map(_.toLong).getOrElse(1000000L)
 
-  // (registry listing signature, parsed active entries) per root — see
-  // deleteEntries. Each list is under the read cap by construction;
-  // the ROOT count is bounded too (below), so a long-lived driver
-  // touching many roots (multi-tenant service, test session over temp
-  // lakes) cannot accrete per-root lists forever.
-  private val deleteEntriesCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Seq[DeleteEntry])]()
-  private val DeleteEntriesCacheMaxRoots = 64
-
-  /** The current delete-registry LISTING signature (version dir + part
-    * names/lengths/mtimes) — the same freshness key
-    * [[manifestRowCount]] caches under: any registry append, tombstone
-    * rewrite, consolidation, or version swap changes the listing and
-    * forces a re-read, so a stale cache entry is impossible by
-    * construction (every registry mutation goes through appended parts
-    * or a version-dir swap — parquet is never mutated in place).
-    */
-  private def deleteRegistrySig(spark: SparkSession, root: String): Option[String] =
-    try {
-      val dir = new Path(deleteManifestPath(spark, root))
-      val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      Some(fs.listStatus(dir).map(s =>
-        s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
-        .sorted.mkString(dir.toString + "|", "|", ""))
-    } catch {
-      // an unlistable dir never caches (None skips both the hit check
-      // and the put — a throwaway random sig would occupy a root slot
-      // with an entry that can never hit, and could even trigger the
-      // whole-map bound eviction)
-      case _: java.io.IOException => None
-    }
-
   /** The snapshot-bounded ACTIVE delete-file set (both kinds) —
     * control-plane cardinality (one row per delete FILE; files are
     * bounded by DML commits and folded by [[LakeDml.vacuumDeletes]] /
@@ -764,22 +732,15 @@ object LogSync {
     * `capped = false`) stay uncapped so an over-cap registry can
     * always be repaired.
     *
-    * The CURRENT-state read (`asOf = None`, the shape every
-    * `table`/`tableFor`/DML call makes) is CACHED per registry
-    * LISTING signature ([[deleteRegistrySig]]): on a lake read under
-    * steady query traffic this turns a per-query Spark collect job
-    * into one FS listing — real planning latency at 100 TB, where the
-    * registry spans parts and every analytic query pays the job
-    * otherwise. Time-travel reads (`asOf` set) bypass the cache (the
-    * result depends on the instant, not just registry state), and
-    * over-cap lists are never cached (the cache must stay under the
-    * documented driver-bytes bound).
+    * Current and time-travel (`asOf`) reads both fold over the delete
+    * registry's held rows ([[registryRows]]), so a read of an
+    * unchanged registry starts no Spark job; past the registry cap it
+    * is one capped collect of the distributed read.
     */
   private[graft] def deleteEntries(spark: SparkSession, root: String,
                                    asOf: Option[java.sql.Timestamp] = None,
                                    capped: Boolean = true
                                   ): Seq[DeleteEntry] = {
-    if (!hasDeleteManifest(spark, root)) return Seq.empty
     val cap = deleteEntryCap(spark)
     def refuse(): Nothing = sys.error(
       s"delete registry under $root carries more than $cap active " +
@@ -789,50 +750,41 @@ object LogSync {
         "vacuumDeletes (SQL: MAINTAIN LAKE ... COMPACT DELETES / " +
         "CONVERT DELETES / VACUUM DELETES) or full compaction, " +
         "or raise the cap")
-    val sig = if (asOf.isEmpty) deleteRegistrySig(spark, root) else None
-    sig.foreach { s =>
-      val hit = deleteEntriesCache.get(root)
-      if (hit != null && hit._1 == s) {
-        if (capped && cap > 0 && hit._2.length > cap) refuse()
-        return hit._2
-      }
+    // (path, rows, bytes, kind, seq, eq_cols, op) at column indices `i`;
+    // a null kind/seq/op is a pre-upgrade row: "pos", 0, "delete"
+    val cols = Seq("path", "rows", "bytes", "kind", "seq", "eq_cols", "op")
+    def entry(r: Row, i: Seq[Int]) =
+      DeleteEntry(r.getString(i(0)), r.getLong(i(1)), r.getLong(i(2)),
+        Option(r.getString(i(3))).getOrElse("pos"),
+        if (r.isNullAt(i(4))) 0L else r.getLong(i(4)),
+        Option(r.getString(i(5))).map(_.split(',').toSeq).getOrElse(Seq.empty),
+        Option(r.getString(i(6))).getOrElse("delete"))
+    deleteManifestRows(spark, root) match {
+      case Left((schema, rows)) =>
+        val live = activeAt(rows, schema.fieldIndex("registered_at"),
+          schema.fieldIndex("removed_at"), asOf)
+        if (capped && cap > 0 && live.length > cap) refuse()
+        val i = cols.map(schema.fieldIndex)
+        live.map(entry(_, i)).toSeq
+      case Right(m) =>
+        val bounded = asOf match {
+          case Some(ts) => m.filter(col("registered_at") <= lit(ts) &&
+            (col("removed_at").isNull || col("removed_at") > lit(ts)))
+          case None => m.filter(col("removed_at").isNull)
+        }
+        val projected = bounded.select(cols.map(col): _*)
+        val rows =
+          if (!capped || cap <= 0) projected.collect()
+          else {
+            // LIMIT cap+1: one job either way, and the driver never holds
+            // more than cap+1 rows even when the registry is far past it
+            val probe = projected
+              .limit(math.min(cap, Int.MaxValue - 2L).toInt + 1).collect()
+            if (probe.length > cap) refuse()
+            probe
+          }
+        rows.map(entry(_, cols.indices)).toSeq
     }
-    val m = deleteManifestDf(spark, root)
-    val bounded = asOf match {
-      case Some(ts) => m.filter(col("registered_at") <= lit(ts) &&
-        (col("removed_at").isNull || col("removed_at") > lit(ts)))
-      case None => m.filter(col("removed_at").isNull)
-    }
-    val projected = bounded.select(col("path"), col("rows"), col("bytes"),
-      coalesce(col("kind"), lit("pos")), coalesce(col("seq"), lit(0L)),
-      col("eq_cols"), coalesce(col("op"), lit("delete")))
-    val rows =
-      if (!capped || cap <= 0) projected.collect()
-      else {
-        // LIMIT cap+1: one job either way, and the driver never holds
-        // more than cap+1 rows even when the registry is far past it
-        val probe = projected
-          .limit(math.min(cap, Int.MaxValue - 2L).toInt + 1).collect()
-        if (probe.length > cap) refuse()
-        probe
-      }
-    val entries = rows
-      .map(r => DeleteEntry(r.getString(0), r.getLong(1), r.getLong(2),
-        r.getString(3), r.getLong(4),
-        Option(r.getString(5)).map(_.split(',').toSeq).getOrElse(Seq.empty),
-        r.getString(6)))
-      .toSeq
-    sig.foreach { s =>
-      if (cap <= 0 || entries.length <= cap) {
-        // crude-but-sufficient bound: past the root budget, drop the
-        // whole map (a re-read per root is one small job; an LRU would
-        // buy little for control-plane lists)
-        if (deleteEntriesCache.size >= DeleteEntriesCacheMaxRoots &&
-          !deleteEntriesCache.containsKey(root)) deleteEntriesCache.clear()
-        deleteEntriesCache.put(root, (s, entries))
-      }
-    }
-    entries
   }
 
   /** [[deleteEntries]] restricted to POSITION deletes — the surface
@@ -1009,18 +961,6 @@ object LogSync {
     spark.conf.getOption("graft.lake.seqBroadcastRowCap")
       .map(_.toLong).getOrElse(1000000L)
 
-  // newest (signature, total rows) per root — one entry per root, so
-  // the cache never grows past the set of roots this JVM has read
-  private val manifestCountCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Long)]()
-
-  // newest (listing signature, merged schema, collected rows) per
-  // REGISTRY DIR — the driver-resident registry cache behind
-  // [[servedRegistry]]; one entry per registry dir this JVM has read,
-  // replaced wholesale whenever the dir's listing changes
-  private val registryRowsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, StructType, Array[Row])]()
-
   /** Byte ceiling (compressed parquet, from the dir listing) under
     * which a registry dir is served driver-resident by
     * [[servedRegistry]]. ~32 MB of manifest parquet is roughly the
@@ -1067,38 +1007,45 @@ object LogSync {
     */
   private[sources] type Registry = Either[(StructType, Array[Row]), DataFrame]
 
+  // (listing signature, merged schema, collected rows) per (session,
+  // registry dir) — the one driver-held copy of registry state
+  private val registryRowsMemo =
+    graft.SessionCaches.memo[String, (String, StructType, Array[Row])]()
+
   /** A SMALL registry dir (data manifest / delete registry, index
-    * sidecar) as driver-resident rows: collected ONCE per (dir, listing
-    * signature) and re-served until the listing changes — the same
-    * invalidation discipline as [[manifestRowCount]]'s count cache
-    * (any append renames a fresh part in, any rewrite swaps the
-    * version dir, so every mutation changes the signature). When the
-    * dir is unlistable or past [[registryDriverCacheMaxBytes]] it is
-    * `Right(read)`: the caller takes the distributed path, size-guarded
-    * like every other control-plane crossing.
+    * sidecar) as driver-resident rows: collected ONCE per (session,
+    * dir, listing signature) and re-served until the listing changes.
+    * When the dir is unlistable or past [[registryDriverCacheMaxBytes]]
+    * it is `Right(read)`: the caller takes the distributed path,
+    * size-guarded like every other control-plane crossing. Delete
+    * entries, manifest row counts, sequence and stamp maxes and the
+    * export/rollup state tokens all fold over these rows.
+    *
+    * The signature is exact under the registry's RENAME-ONLY mutation
+    * contract: every registry write lands as a freshly named part
+    * renamed into the dir ([[appendManifestAtomic]],
+    * [[appendDeleteManifestLocked]]) or as a whole new version dir
+    * swapped in by one rename; no parquet file is ever rewritten in
+    * place. An in-place overwrite keeping a file's name and length
+    * within the filesystem's mtime granularity would not change the
+    * signature, and would serve stale rows.
     *
     * Why: the registry is control-plane metadata consulted by EVERY
     * read (`table`/`tableAsOf`/`tableSince`/stream offsets — typically
     * 2-4 reads per query) and by every sync round, and a
     * `spark.read.parquet` of a KB-scale dir costs a full scan job
     * (~0.25 s of scheduler + footer latency per read, measured).
-    * Iceberg/Delta hold exactly this metadata driver-side. Rows are
-    * plain values, so entries are safely shared across sessions; a
-    * get/put race costs at most a duplicate collect, and sig-keying
-    * keeps either result valid.
+    * Iceberg/Delta hold exactly this metadata driver-side.
     */
   private[sources] def registryRows(spark: SparkSession, dirStr: String)
                                    (read: => DataFrame): Registry = {
     val (sig, bytes) = registryListingSig(spark, new Path(dirStr))
     if (sig == null || bytes > registryDriverCacheMaxBytes(spark)) return Right(read)
-    val prev = registryRowsCache.get(dirStr)
-    if (prev != null && prev._1 == sig) Left((prev._2, prev._3))
-    else {
+    val (_, schema, rows) = registryRowsMemo.refresh(spark, dirStr)(_._1 == sig) {
       val df = read
-      val collected = df.collect()
-      registryRowsCache.put(dirStr, (sig, df.schema, collected))
-      Left((df.schema, collected))
+      (sig, df.schema, df.collect())
     }
+    Left((schema, rows))
   }
 
   /** A resolved registry as a DataFrame: held rows become a
@@ -1115,44 +1062,48 @@ object LogSync {
                                      (read: => DataFrame): DataFrame =
     registryDf(spark, registryRows(spark, dirStr)(read))
 
+  /** The held rows live at `asOf` (registered by then and not removed
+    * by then), or the untombstoned rows when `asOf` is None — the
+    * filter the DataFrame reads apply. Held stamps sit on Spark's
+    * microsecond grid, so plain `Timestamp` order matches Spark's
+    * comparison against a finer-grained `asOf`.
+    */
+  private def activeAt(rows: Array[Row], reg: Int, rem: Int,
+                       asOf: Option[java.sql.Timestamp]): Array[Row] = asOf match {
+    case None => rows.filter(_.isNullAt(rem))
+    case Some(ts) => rows.filter(r => !r.isNullAt(reg) && !r.getTimestamp(reg).after(ts) &&
+      (r.isNullAt(rem) || r.getTimestamp(rem).after(ts)))
+  }
+
+  /** The newest `registered_at` of a resolved registry: a driver fold
+    * over held rows (a follower's repeat poll starts no Spark job), one
+    * aggregate past the cap.
+    */
+  private def newestStamp(reg: Registry): Option[java.sql.Timestamp] = reg match {
+    case Left((schema, rows)) =>
+      val i = schema.fieldIndex("registered_at")
+      rows.iterator.filterNot(_.isNullAt(i)).map(_.getTimestamp(i))
+        .reduceOption((a, b) => if (b.after(a)) b else a)
+    case Right(m) =>
+      Option(m.agg(max(col("registered_at"))).head().getTimestamp(0))
+  }
+
+  /** TOTAL row count (active + tombstoned) of a resolved registry: the
+    * held rows' length, or past the cap one count job per call.
+    */
+  private def registryRowCount(reg: Registry): Long = reg match {
+    case Left((_, rows)) => rows.length.toLong
+    case Right(df) => df.count()
+  }
+
   /** TOTAL manifest row count (active + tombstoned) — an UPPER BOUND
     * on every manifest-derived relation's cardinality (keep-sets,
     * seq-attach), used ONLY to pick broadcast vs shuffle. Both join
-    * strategies are row-identical, so a stale bound can cost a
-    * suboptimal plan, never a wrong row — which is what makes caching
-    * it safe by construction. Cached per manifest-DIRECTORY LISTING
-    * signature (version dir + part names/lengths/mtimes): a repeat
-    * read pays one FS listing instead of a Spark count job — on the
-    * PRIMARY read path that job ran once per `table`/`tableAsOf`/
-    * `tableBetween` call, pure control-plane latency. Any append,
-    * tombstone rewrite, or version swap changes the listing and
-    * forces a recount.
+    * strategies are row-identical, so the bound can cost a suboptimal
+    * plan, never a wrong row.
     */
-  private[graft] def manifestRowCount(spark: SparkSession, root: String): Long = {
-    val dir = new Path(manifestPath(spark, root))
-    val sig =
-      try {
-        val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        fs.listStatus(dir).map(s =>
-          s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
-          .sorted.mkString(dir.toString + "|", "|", "")
-      } catch {
-        // an unlistable dir never caches: fall through to the count
-        case _: java.io.IOException => java.util.UUID.randomUUID().toString
-      }
-    // plain get/put, NOT compute: the recount is a full Spark job
-    // (seconds on a slow store) and compute would hold the map's bin
-    // lock across it — serializing unrelated roots that share the bin
-    // and throwing on same-thread re-entry. The get/put race costs at
-    // most a duplicate count; sig-keying keeps either result valid.
-    val prev = manifestCountCache.get(root)
-    if (prev != null && prev._1 == sig) prev._2
-    else {
-      val n = manifestDf(spark, root).count()
-      manifestCountCache.put(root, (sig, n))
-      n
-    }
-  }
+  private[graft] def manifestRowCount(spark: SparkSession, root: String): Long =
+    registryRowCount(manifestRows(spark, root))
 
   /** The keep-set build side of the registered-path semi-join,
     * size-guarded like every other manifest-cardinality relation: one
@@ -1162,16 +1113,51 @@ object LogSync {
     * `table`/`tableAsOf`/`tableBetween`/`tableFor` flow through it).
     * Under [[seqBroadcastRowCap]] the semi-join broadcasts; past it
     * no hint — the join shuffles (AQE still free to broadcast a build
-    * side that turns out small). The bound is [[manifestRowCount]]:
-    * an upper bound on the filtered keep-set (conservative — a lake
-    * whose TOMBSTONES push the manifest over the cap falls to the
-    * shuffle shape early, and AQE recovers the broadcast at runtime),
-    * cached so the guard costs a listing, not a job per read.
+    * side that turns out small). The bound is the row count of
+    * `manifest`, the caller's resolved data manifest: an upper bound
+    * on the filtered keep-set (conservative — a lake whose TOMBSTONES
+    * push the manifest over the cap falls to the shuffle shape early,
+    * and AQE recovers the broadcast at runtime).
     */
-  private[sources] def sizedKeepSet(spark: SparkSession, root: String,
+  private[sources] def sizedKeepSet(spark: SparkSession, manifest: Registry,
                                     paths: DataFrame): DataFrame =
-    if (manifestRowCount(spark, root) <= seqBroadcastRowCap(spark)) broadcast(paths)
+    if (registryRowCount(manifest) <= seqBroadcastRowCap(spark)) broadcast(paths)
     else paths
+
+  /** The lake-state token the Iceberg export and rollup memos are
+    * validated by, folded over the held registry rows (no Spark job
+    * while both registries are under the cap). `manifest` is
+    * `version:active files:newest registration` — plain syncs append
+    * without bumping the version, so the count and the newest stamp
+    * carry them. `deletes` is SHA-256 over the active delete entries
+    * (path, rows, kind, seq), not a 32-bit hash whose collision would
+    * skip a needed re-export. Each part reads its registry on first
+    * use, so a caller keyed on one part never reads the other.
+    */
+  private[graft] final class StateToken(manifestPart: => String, deletesPart: => String) {
+    lazy val manifest: String = manifestPart
+    lazy val deletes: String = deletesPart
+  }
+
+  private[graft] def stateToken(spark: SparkSession, root: String): StateToken =
+    new StateToken({
+      val m = manifestRows(spark, root)
+      val (active, newest) = m match {
+        case Left((schema, rows)) =>
+          val i = schema.fieldIndex("removed_at")
+          (rows.count(_.isNullAt(i)).toLong, newestStamp(m))
+        case Right(df) =>
+          val h = df.agg(count(when(col("removed_at").isNull, 1)),
+            max(col("registered_at"))).head()
+          (h.getLong(0), Option(h.getTimestamp(1)))
+      }
+      s"${manifestVersion(spark, root)}:$active:${newest.orNull}"
+    }, sha256Hex(deleteEntries(spark, root)
+      .map(e => s"${e.path}#${e.rows}#${e.kind}#${e.seq}").sorted.mkString("|")))
+
+  private[graft] def sha256Hex(s: String): String =
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
 
   /** Apply the row-level deletes in `entries` to a scan carrying
     * `__src` (normalized `_metadata.file_path`).
@@ -1233,59 +1219,29 @@ object LogSync {
     spark.createDataFrame(java.util.Arrays.asList(rows.toIndexedSeq: _*), schema)
   }
 
-  // newest (manifest listing signature, inferred schema) per scan path
-  // argument — the third per-read control-plane job: creating the lake
-  // scan re-infers the parquet schema (listing + footer read, ~0.17 s
-  // measured warm) on every query. The schema can only change when new
-  // files REGISTER (the read serves registered files only), and every
-  // registration changes the manifest listing — so the manifest
-  // signature is the correct invalidation key, same as the registry
-  // caches. mergeSchema and evolved reads never come here (the former
-  // must read every footer by definition, the latter supplies an
-  // explicit request schema already).
-  private val scanSchemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, StructType)]()
-
-  private def manifestListingSig(spark: SparkSession, root: String): String =
-    registryListingSig(spark, new Path(manifestPath(spark, root)))._1
-
-  private def inferredScanSchema(spark: SparkSession, root: String,
-                                 p: String): StructType = {
-    val sig = manifestListingSig(spark, root)
-    if (sig == null)
-      return spark.read.option("basePath", root).parquet(p).schema
-    val prev = scanSchemaCache.get(p)
-    if (prev != null && prev._1 == sig) prev._2
-    else {
-      val s = spark.read.option("basePath", root).parquet(p).schema
-      scanSchemaCache.put(p, (sig, s))
-      s
-    }
-  }
-
   // newest (manifest listing signature, resolved base-scan DataFrame)
-  // per (session, scan path) — the FOURTH per-read control-plane cost:
-  // even with the schema cached, creating the scan re-LISTS the lake
+  // per (session, scan path): creating the scan re-LISTS the lake
   // root's directory tree (InMemoryFileIndex construction, driver-side,
   // ~0.2 s per query at a few thousand files and growing with file
-  // count). The resolved relation pins its file-listing snapshot, so
-  // it is reusable under exactly the invalidation contract the schema/
-  // count/registry caches already rely on: every registered mutation
-  // (sync, DML tombstone, compaction swap, vacuum) rewrites the
-  // manifest dir, changing the signature. Files present in a stale
-  // listing are only dropped ROW-wise by the keep-set semi-join, and
-  // files physically deleted are always tombstone-vacuumed through a
-  // manifest rewrite first — so a cached listing can never serve rows
-  // the current manifest doesn't register, nor point at paths vacuum
-  // has removed. Session-keyed (a DataFrame is session-bound), dropped
-  // with the session via SessionCaches.
+  // count) and re-infers the parquet schema (a footer job). The
+  // resolved relation pins its file-listing snapshot and schema, so it
+  // is reusable under exactly the invalidation contract
+  // [[registryRows]] relies on: every registered mutation (sync, DML
+  // tombstone, compaction swap, vacuum) rewrites the manifest dir,
+  // changing the signature — and the schema can only change when new
+  // files register. Files present in a stale listing are only dropped
+  // ROW-wise by the keep-set semi-join, and files physically deleted
+  // are always tombstone-vacuumed through a manifest rewrite first —
+  // so a cached listing can never serve rows the current manifest
+  // doesn't register, nor point at paths vacuum has removed.
+  // Session-keyed (a DataFrame is session-bound), dropped with the
+  // session via SessionCaches.
   private val rootScanCache = graft.SessionCaches.memo[String, (String, DataFrame)]()
 
   private def cachedRootScan(spark: SparkSession, root: String,
                              p: String): DataFrame = {
-    val sig = manifestListingSig(spark, root)
-    def build(): DataFrame = spark.read.option("basePath", root)
-      .schema(inferredScanSchema(spark, root, p)).parquet(p)
+    val sig = registryListingSig(spark, new Path(manifestPath(spark, root)))._1
+    def build(): DataFrame = spark.read.option("basePath", root).parquet(p)
     if (sig == null) return build()
     rootScanCache.refresh(spark, p)(_._1 == sig)((sig, build()))._2
   }
@@ -1327,16 +1283,14 @@ object LogSync {
       // the scan enters applyDeletes (LakeDml.tableWithPos does), or
       // resolution turns ambiguous the moment a lake holds an
       // equality delete.
-      val mdf = manifestDf(spark, root)
-      val seqRel = mdf.select(normPath(col("path")).as("__seq_src"),
+      val m = manifestRows(spark, root)
+      val seqRel = registryDf(spark, m).select(normPath(col("path")).as("__seq_src"),
         coalesce(col("seq"), lit(0L)).as("__data_seq"))
       // size-guarded like every other join in this path: the attach
       // relation has manifest cardinality — broadcast under the row
-      // cap ([[manifestRowCount]]: a cached listing-keyed bound, not
-      // a job per read), shuffle past it
+      // cap (the held rows' count, not a job per read), shuffle past it
       val sizedSeqRel =
-        if (manifestRowCount(spark, root) <= seqBroadcastRowCap(spark))
-          broadcast(seqRel)
+        if (registryRowCount(m) <= seqBroadcastRowCap(spark)) broadcast(seqRel)
         else seqRel
       val withSeq = posApplied.join(sizedSeqRel,
         col("__src") === col("__seq_src"), "left")
@@ -1378,7 +1332,8 @@ object LogSync {
                                    deletes: Seq[DeleteEntry] = Seq.empty,
                                    keepSrc: Boolean = false
                                   ): DataFrame =
-    keepOnly(spark, root, keep, deletes = deletes, keepSrc = keepSrc)
+    keepOnly(spark, root, manifestRows(spark, root), keep, deletes = deletes,
+      keepSrc = keepSrc)
 
   /** Manifest rows that are part of the table NOW (no tombstone). */
   private[sources] def activeManifest(spark: SparkSession, root: String): DataFrame =
@@ -1909,10 +1864,9 @@ object LogSync {
   /** Registered files as a DataFrame filtered to a snapshot bound —
     * the pruning side of [[table]]/[[tableAsOf]].
     */
-  private def registeredPaths(spark: SparkSession, root: String,
+  private def registeredPaths(spark: SparkSession, manifest: Registry,
                               asOf: Option[java.sql.Timestamp]): DataFrame = {
-    require(hasManifest(spark, root), s"no manifest under $root — run sync first")
-    val m = manifestDf(spark, root)
+    val m = registryDf(spark, manifest)
     // a snapshot sees the files registered by then and not yet replaced
     // by then — tombstones make time travel survive compaction/DML (the
     // replaced files are still on disk until vacuum, which is the
@@ -2023,7 +1977,8 @@ object LogSync {
     * discovery/pruning intact; underscore dirs skipped by the source)
     * with `paths` — a one-column `__registered_path` keep-set —
     * applied as a semi-join on the scan's file identity (broadcast
-    * under [[seqBroadcastRowCap]] via [[sizedKeepSet]], shuffled past
+    * under [[seqBroadcastRowCap]] via [[sizedKeepSet]], which sizes it
+    * by `manifest`, the caller's resolved data manifest; shuffled past
     * it), so non-kept files are invisible without any driver-side
     * path list.
     * The identity comes from the DETERMINISTIC `_metadata.file_path`
@@ -2031,7 +1986,8 @@ object LogSync {
     * nondeterministic projection blocks partition/predicate pushdown
     * past it, un-pruning every reader.
     */
-  private def keepOnly(spark: SparkSession, root: String, paths: DataFrame,
+  private def keepOnly(spark: SparkSession, root: String, manifest: Registry,
+                       paths: DataFrame,
                        mergeSchema: Boolean = false,
                        deletes: Seq[DeleteEntry] = Seq.empty,
                        evoAsOf: Option[java.sql.Timestamp] = None,
@@ -2074,7 +2030,7 @@ object LogSync {
       },
       evolved = evo.isDefined)
     val kept = scan
-      .join(sizedKeepSet(spark, root, paths),
+      .join(sizedKeepSet(spark, manifest, paths),
         col("__src") === col("__registered_path"), "left_semi")
     // the alias fold runs BEFORE the delete anti-joins: an equality
     // delete committed after a rename binds the NEW name, and must
@@ -2102,9 +2058,12 @@ object LogSync {
 
   private def filteredTable(spark: SparkSession, root: String,
                             asOf: Option[java.sql.Timestamp],
-                            mergeSchema: Boolean = false): DataFrame =
-    keepOnly(spark, root, registeredPaths(spark, root, asOf), mergeSchema,
+                            mergeSchema: Boolean = false): DataFrame = {
+    require(hasManifest(spark, root), s"no manifest under $root — run sync first")
+    val m = manifestRows(spark, root)
+    keepOnly(spark, root, m, registeredPaths(spark, m, asOf), mergeSchema,
       deletes = deleteEntries(spark, root, asOf), evoAsOf = asOf)
+  }
 
   /** The queryable table: exactly the registered files. */
   def table(spark: SparkSession, root: String): DataFrame =
@@ -2146,7 +2105,8 @@ object LogSync {
     */
   def tableSince(spark: SparkSession, root: String, since: java.sql.Timestamp): DataFrame = {
     require(hasManifest(spark, root), s"no manifest under $root — run sync first")
-    val paths = manifestDf(spark, root)
+    val m = manifestRows(spark, root)
+    val paths = registryDf(spark, m)
       .filter(col("registered_at") > lit(since) &&
         (col("op").isNull || col("op") === "append"))
       .select(normPath(col("path")).as("__registered_path"))
@@ -2155,7 +2115,7 @@ object LogSync {
     // way rewrites are — Iceberg's incremental-append default), so a
     // consumer sees each appended row exactly once even if it is
     // later deleted
-    keepOnly(spark, root, paths)
+    keepOnly(spark, root, m, paths)
   }
 
   /** The newest registration instant — the mark an incremental
@@ -2172,15 +2132,7 @@ object LogSync {
     * fresh instant and re-surface past a stored mark.
     */
   def highWaterMark(spark: SparkSession, root: String): Option[java.sql.Timestamp] =
-    manifestRows(spark, root) match {
-      // the driver fold: a follower's repeat poll starts no Spark job
-      case Left((schema, rows)) =>
-        val i = schema.fieldIndex("registered_at")
-        rows.iterator.filterNot(_.isNullAt(i)).map(_.getTimestamp(i))
-          .reduceOption((a, b) => if (b.after(a)) b else a)
-      case Right(m) =>
-        Option(m.agg(max(col("registered_at"))).head().getTimestamp(0))
-    }
+    newestStamp(manifestRows(spark, root))
 
   /** UPSERT increments: the rows WRITTEN by upsert commits
     * ([[LakeDml.upsert]]/[[LakeDml.upsertMor]]/[[LakeDml.upsertEq]] —
@@ -2198,10 +2150,11 @@ object LogSync {
   def upsertsSince(spark: SparkSession, root: String,
                    since: java.sql.Timestamp): DataFrame = {
     require(hasManifest(spark, root), s"no manifest under $root — run sync first")
-    val paths = manifestDf(spark, root)
+    val m = manifestRows(spark, root)
+    val paths = registryDf(spark, m)
       .filter(col("registered_at") > lit(since) && col("op") === "upsert")
       .select(normPath(col("path")).as("__registered_path"))
-    keepOnly(spark, root, paths)
+    keepOnly(spark, root, m, paths)
   }
 
   /** CHANGELOG READ (opt-in): the rows RETRACTED by row-level delete
@@ -2407,12 +2360,13 @@ object LogSync {
       // exactly what the delete retracted). Earlier deletes apply to
       // the snapshot by the same seq rule (strictly below this one),
       // never this delete itself.
-      val keepPaths = manifestDf(spark, root)
+      val m = manifestRows(spark, root)
+      val keepPaths = registryDf(spark, m)
         .filter(col("registered_at") <= lit(ts) &&
           (col("removed_at").isNull || col("removed_at") > lit(ts)) &&
           coalesce(col("seq"), lit(0L)) < lit(delSeq))
         .select(normPath(col("path")).as("__registered_path"))
-      val snapshot = keepOnly(spark, root, keepPaths,
+      val snapshot = keepOnly(spark, root, m, keepPaths,
         deletes = deleteEntries(spark, root, Some(ts)).filter(_.seq < delSeq))
       // a key recorded under a retired name matches the snapshot's
       // CURRENT column (the snapshot reads under the evolved schema)
@@ -2433,11 +2387,8 @@ object LogSync {
     * commit lands as one atomically-visible part stamped strictly
     * above this mark ([[appendDeleteManifestLocked]]).
     */
-  def deleteHighWaterMark(spark: SparkSession, root: String): Option[java.sql.Timestamp] = {
-    if (!hasDeleteManifest(spark, root)) return None
-    val r = deleteManifestDf(spark, root).agg(max(col("registered_at"))).head()
-    Option(r.getTimestamp(0))
-  }
+  def deleteHighWaterMark(spark: SparkSession, root: String): Option[java.sql.Timestamp] =
+    newestStamp(deleteManifestRows(spark, root))
 
   /** Registered rows with `timestamp` in `[fromIso, untilIso)`
     * (ISO dates, UTC), with FILE-LEVEL pruning from the manifest's
@@ -2470,13 +2421,14 @@ object LogSync {
                    fromIso: String, untilIso: String): DataFrame = {
     val (from, until) = (isoTs(fromIso), isoTs(untilIso))
     require(hasManifest(spark, root), s"no manifest under $root — run sync first")
-    val paths = activeManifest(spark, root)
+    val m = manifestRows(spark, root)
+    val paths = registryDf(spark, m).filter(col("removed_at").isNull)
       .filter(zoneMapKeep(from, until))
       .select(normPath(col("path")).as("__registered_path"))
     // the row filter binds the time axis's CURRENT name (the zone map
     // is the field's; a rename moved only the name)
     val ts = col(LakeEvolve.timeAxis(spark, root))
-    keepOnly(spark, root, paths, deletes = deleteEntries(spark, root))
+    keepOnly(spark, root, m, paths, deletes = deleteEntries(spark, root))
       .filter(ts >= from && ts < until)
   }
 
@@ -2512,7 +2464,8 @@ object LogSync {
                fromIso: String, untilIso: String): DataFrame = {
     val (from, until) = (isoTs(fromIso), isoTs(untilIso))
     require(hasManifest(spark, root), s"no manifest under $root — run sync first")
-    val paths = activeManifest(spark, root)
+    val m = manifestRows(spark, root)
+    val paths = registryDf(spark, m).filter(col("removed_at").isNull)
       .filter(zoneMapKeep(from, until) && svcKeep(lit(service)))
       .select(normPath(col("path")).as("__registered_path"))
     // both row filters bind their axis's CURRENT name (one state
@@ -2520,7 +2473,7 @@ object LogSync {
     val evoSt = LakeEvolve.state(spark, root)
     val ts = col(LakeEvolve.timeAxisOf(evoSt))
     val svc = col(LakeEvolve.svcAxisOf(evoSt))
-    keepOnly(spark, root, paths, deletes = deleteEntries(spark, root))
+    keepOnly(spark, root, m, paths, deletes = deleteEntries(spark, root))
       .filter(svc === service && ts >= from && ts < until)
   }
 
@@ -2637,7 +2590,7 @@ object LogSync {
             Option(r.getString(5)).map(_.split(',').toSeq).getOrElse(Seq.empty)))
           .toSeq
       }
-    keepOnly(spark, root, paths, deletes = deletes)
+    keepOnly(spark, root, manifestRows(spark, root), paths, deletes = deletes)
   }
 
   /** Delete a branch — releases its pin; the files it alone was

@@ -84,18 +84,6 @@ object Rollup {
     }
   }
 
-  /** The delete-registry state a fold ran under: SHA-256 over the
-    * ACTIVE delete entries (path, rows, kind, seq). Any registry
-    * movement — a new deleteMor/deleteEq commit, a fold, a
-    * compaction's tombstones — changes it. Control-plane cost.
-    */
-  private def deleteToken(spark: SparkSession, root: String): String =
-    java.security.MessageDigest.getInstance("SHA-256")
-      .digest(LogSync.deleteEntries(spark, root)
-        .map(e => s"${e.path}#${e.rows}#${e.kind}#${e.seq}").sorted.mkString("|")
-        .getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-
   private def writeText(spark: SparkSession, path: String, body: String): Unit = {
     val p = new Path(path)
     val out = p.getFileSystem(spark.sparkContext.hadoopConfiguration).create(p, true)
@@ -161,7 +149,10 @@ object Rollup {
     val processed =
       if (cur > 0) spark.read.parquet(s"${rollupRoot(root)}/v$cur/paths")
       else Seq.empty[String].toDF("path")
-    val token = deleteToken(spark, root)
+    // the delete-registry state this fold runs under: any registry
+    // movement — a new deleteMor/deleteEq commit, a fold, a
+    // compaction's tombstones — changes it
+    val token = LogSync.stateToken(spark, root).deletes
     val foldedUnder =
       if (cur > 0) readText(spark, s"${rollupRoot(root)}/v$cur/dmltoken")
       else None
@@ -173,8 +164,7 @@ object Rollup {
     // row-level deletes must also rebuild: the incremental fold reads
     // files RAW, would count the retracted rows, and would then
     // record the current token — making the overcount permanent.
-    val emptyToken = java.security.MessageDigest.getInstance("SHA-256")
-      .digest("".getBytes("UTF-8")).map("%02x".format(_)).mkString
+    val emptyToken = LogSync.sha256Hex("")
     val restated =
       if (cur == 0) token != emptyToken
       else {

@@ -334,26 +334,27 @@ class DmlConcurrencySpec extends graft.SparkSpec {
     import spark.implicits._
     val root = seeded(30)
     LakeDml.deleteEq(spark, root, Seq(1L).toDF("event_id"))
-    // quiescent: the second read returns the SAME parsed list instance
-    // (reference equality — the proof no job re-ran), and a
-    // time-travel read never taints the current-state cache
+    // quiescent: a re-read folds over the held registry rows and starts
+    // no job, and a time-travel read leaves the current state alone
+    def jobsOf[A](f: => A): (A, Seq[String]) = graft.SparkJobs.during(spark)(f)
     val e1 = LogSync.deleteEntries(spark, root)
-    val e2 = LogSync.deleteEntries(spark, root)
-    assert(e1 eq e2, "a quiescent re-read must reuse the cached list")
+    val (e2, quiet) = jobsOf(LogSync.deleteEntries(spark, root))
+    assert(quiet.isEmpty && e2 == e1, s"a quiescent re-read started $quiet")
     LogSync.deleteEntries(spark, root,
       asOf = Some(new java.sql.Timestamp(0L)))
-    assert(LogSync.deleteEntries(spark, root) eq e1,
-      "an asOf read must not clobber the current-state cache")
+    val (e2b, afterAsOf) = jobsOf(LogSync.deleteEntries(spark, root))
+    assert(afterAsOf.isEmpty && e2b == e1,
+      s"a re-read after an asOf read started $afterAsOf")
     // every mutation class invalidates via the listing signature:
     // append (a new retraction)...
     LakeDml.deleteEq(spark, root, Seq(2L).toDF("event_id"))
     val e3 = LogSync.deleteEntries(spark, root)
-    assert(!(e3 eq e1) && e3.count(_.isEq) == 2)
+    assert(e3 != e1 && e3.count(_.isEq) == 2)
     // ...conversion + fold (version swaps)...
     LakeDml.convertEqDeletes(spark, root)
     LakeDml.compactDeletes(spark, root)
     val e4 = LogSync.deleteEntries(spark, root)
-    assert(!(e4 eq e3) && e4.count(_.isEq) == 0 && e4.nonEmpty)
+    assert(e4 != e3 && e4.count(_.isEq) == 0 && e4.nonEmpty)
     // ...and the reads stay correct throughout
     assert(LogSync.table(spark, root).count() == 28)
   }

@@ -8,10 +8,12 @@ import org.apache.spark.sql.functions._
 /** The driver fold and its distributed fallback. Under
   * `graft.lake.registryDriverCacheMaxBytes` the registry is served as
   * driver-held rows ([[LogSync.registryRows]]) and sync's fresh diff,
-  * [[LogSync.nextSeq]] and [[LogSync.highWaterMark]] fold over them; at
-  * a cap of 0 every registry read takes the distributed path. The same
-  * mutation sequence runs on two lakes in lockstep, one per path, and
-  * must leave the same manifests and marks. Also pins the one data-file
+  * [[LogSync.nextSeq]], [[LogSync.highWaterMark]],
+  * [[LogSync.deleteEntries]], [[LogSync.manifestRowCount]] and
+  * [[LogSync.stateToken]] fold over them; at a cap of 0 every registry
+  * read takes the distributed path. The same mutation sequence runs on
+  * two lakes in lockstep, one per path, and must leave the same
+  * manifests, marks, delete entries, row counts and state tokens. Also pins the one data-file
   * walk against the recursive-listing rule it replaced, and the job
   * count of a sync round and a follower's poll.
   */
@@ -108,7 +110,61 @@ class RegistryFoldSpec extends graft.SparkSpec {
       }.sorted
     }
     def marks(root: String) = (LogSync.highWaterMark(spark, root), LogSync.nextSeq(spark, root))
-    def both[A](f: String => A): (A, A) = (f(a), atCapZero(f(b)))
+    // after every op: the registry-derived reads agree between the two
+    // lakes (delete files are named by UUIDs, so entries compare without
+    // their paths), between both paths over lake a's one state, and at
+    // every registry stamp recorded so far; and a quiescent re-read of
+    // lake a starts no job
+    val stamps = Map(a -> Seq.newBuilder[Option[java.sql.Timestamp]],
+      b -> Seq.newBuilder[Option[java.sql.Timestamp]])
+    def stampOf(r: String) =
+      (LogSync.highWaterMark(spark, r) ++ LogSync.deleteHighWaterMark(spark, r))
+        .maxByOption(_.getTime)
+    def entries(r: String, asOf: Option[java.sql.Timestamp]) =
+      LogSync.deleteEntries(spark, r, asOf)
+    def canonEntries(r: String, asOf: Option[java.sql.Timestamp]) =
+      entries(r, asOf).map(e => (e.rows, e.kind, e.seq, e.eqCols.mkString(","), e.op)).sorted
+    def token(r: String) = {
+      val t = LogSync.stateToken(spark, r)
+      (t.manifest, t.deletes)
+    }
+    def agree(): Unit = {
+      stamps(a) += stampOf(a)
+      stamps(b) += atCapZero(stampOf(b))
+      val (sa, sb) = (stamps(a).result().flatten.distinct, stamps(b).result().flatten.distinct)
+      assert(sa.length == sb.length)
+      assert(canonEntries(a, None) == atCapZero(canonEntries(b, None)))
+      sa.zip(sb).foreach { case (ta, tb) =>
+        assert(canonEntries(a, Some(ta)) == atCapZero(canonEntries(b, Some(tb))), ta)
+      }
+      assert(LogSync.manifestRowCount(spark, a) ==
+        atCapZero(LogSync.manifestRowCount(spark, b)))
+      // the token's manifest version and active count; its newest stamp
+      // and delete digest name lake-specific instants and paths
+      def versionAndActive(r: String) = token(r)._1.split(':').take(2).toSeq
+      assert(versionAndActive(a) == atCapZero(versionAndActive(b)))
+      assert(entries(a, None) == atCapZero(entries(a, None)))
+      // on one lake, also at every registration and removal instant of
+      // its delete registry: the fold's boundaries are the SQL filter's
+      val instants = LogSync.deleteManifestDf(spark, a)
+        .select("registered_at", "removed_at").collect()
+        .flatMap(r => Seq(r.getTimestamp(0), r.getTimestamp(1))).filter(_ != null)
+      (sa ++ instants).distinct.foreach { ts =>
+        assert(entries(a, Some(ts)) == atCapZero(entries(a, Some(ts))), ts)
+      }
+      assert(LogSync.manifestRowCount(spark, a) ==
+        atCapZero(LogSync.manifestRowCount(spark, a)))
+      assert(token(a) == atCapZero(token(a)))
+      val jobs = jobsOf {
+        entries(a, None); LogSync.manifestRowCount(spark, a); token(a)
+      }
+      assert(jobs.isEmpty, jobs.mkString("\n", "\n", ""))
+    }
+    def both[A](f: String => A): (A, A) = {
+      val out = (f(a), atCapZero(f(b)))
+      agree()
+      out
+    }
     def syncBoth(expect: Int): Unit = {
       val (na, nb) = both(LogSync.sync(spark, _))
       assert(na == expect && nb == expect)
@@ -121,6 +177,12 @@ class RegistryFoldSpec extends graft.SparkSpec {
     both(LakeDml.deleteMor(spark, _, col("span_id") === "s8"))
     both(append(_, 40, 50, files = 1))
     syncBoth(2)
+    both(r => LakeDml.deleteEq(spark, r, spark.range(1).select(lit("s12").as("span_id"))))
+    assert(LogSync.deleteEntries(spark, a).count(_.isEq) == 1)
+    // conversion + fold: the delete registry swaps versions
+    both { r => LakeDml.convertEqDeletes(spark, r); LakeDml.compactDeletes(spark, r) }
+    val folded = LogSync.deleteEntries(spark, a)
+    assert(folded.length == 1 && !folded.head.isEq)
     val manifestA = canonical(a)
     assert(manifestA == atCapZero(canonical(b)))
     // the durable allocation mark bounds nextSeq from below and would
@@ -138,7 +200,7 @@ class RegistryFoldSpec extends graft.SparkSpec {
     assert(marks(b) == ((hwmB, seqB)) && seqA == seqB)
     val (rowsA, rowsB) = both(r => LogSync.table(spark, r).select("span_id")
       .collect().map(_.getString(0)).sorted.toSeq)
-    assert(rowsA == rowsB && rowsA.length == 49)
+    assert(rowsA == rowsB && rowsA.length == 48)
   }
 
   private def jobsOf(f: => Any): Seq[String] = graft.SparkJobs.during(spark)(f)._2
