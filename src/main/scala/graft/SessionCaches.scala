@@ -98,6 +98,15 @@ object SessionCaches {
       }
     }
 
+    /** Replace the entry for `k` with `f(current)` where that is
+      * defined, atomically against a concurrent `refresh` of it; an
+      * absent entry stays absent. The write-through form: a writer that
+      * knows exactly what its own mutation did to the state keeps the
+      * held value current instead of leaving the next reader a rebuild.
+      */
+    def update(spark: SparkSession, k: K)(f: V => Option[V]): Unit =
+      entries.computeIfPresent((spark, k), (_, cur) => f(cur).getOrElse(cur))
+
     /** Drop the entry for `k` (without `release`); the next use rebuilds. */
     def invalidate(spark: SparkSession, k: K): Unit = entries.remove((spark, k))
   }

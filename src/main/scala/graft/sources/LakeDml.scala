@@ -156,7 +156,7 @@ object LakeDml {
     // the CAS base: the manifest version this commit plans against —
     // the swap below refuses if another writer advanced it
     val baseVersion = LogSync.manifestVersion(spark, root)
-    val before = LogSync.manifestDf(spark, root).cache()
+    val before = LogSync.manifestSnapshot(spark, root)
     // sequence captured at commit PLANNING, before the complement read
     // resolves the deletes it will materialize — the same defensive
     // ordering as [[LogCompact.compact]]'s planning capture. Allocated
@@ -202,7 +202,7 @@ object LakeDml {
       // carries current logical names) — the tree never changes shape
       val phys = graft.sources.LakeEvolve.toPhysicalLayout(df,
         graft.sources.LakeEvolve.state(spark, root))
-      phys.write.mode(SaveMode.Overwrite)
+      LogWriter.lakeWriter(phys).mode(SaveMode.Overwrite)
         .partitionBy(layout.filter(phys.columns.contains): _*)
         .parquet(staging.toString)
       val stagingUri = fs.makeQualified(staging).toUri
@@ -278,9 +278,10 @@ object LakeDml {
     // delete's): the rewrite materialized those deletes, so they must
     // stop applying to the restated rows — exactly the spec's
     // restatement sequencing.
-    val fresh = LogSync.freshManifestRows(spark, root, complementPaths.toSeq,
-        op = "rewrite", seq = Some(commitSeq))
-      .unionByName(LogSync.freshManifestRows(spark, root, insertPaths.toSeq,
+    val fresh = LogSync.manifestFrame(spark,
+      LogSync.freshManifestRows(spark, root, complementPaths.toSeq,
+        op = "rewrite", seq = Some(commitSeq)) ++
+      LogSync.freshManifestRows(spark, root, insertPaths.toSeq,
         op = "upsert", seq = Some(commitSeq)))
 
     // rewritten files are TOMBSTONED, not forgotten — they stay on disk

@@ -99,7 +99,7 @@ object LogCompact {
     // the CAS base for both swaps below: the versions this rewrite
     // plans against
     val baseVersion = LogSync.manifestVersion(spark, root)
-    val before = LogSync.manifestDf(spark, root).cache()
+    val before = LogSync.manifestSnapshot(spark, root)
     val filesBefore = before.filter(col("removed_at").isNull).count()
 
     // capture the delete-file set AND the commit sequence NOW — the
@@ -188,8 +188,8 @@ object LogCompact {
             .sortWithinPartitions(clusterCols.map(col): _*)
         else t.repartition(target.toInt)
       }
-    consolidated
-      .write.mode(SaveMode.Append)
+    LogWriter.lakeWriter(consolidated)
+      .mode(SaveMode.Append)
       .option("maxRecordsPerFile", maxRecordsPerFile)
       .partitionBy(partCols: _*)
       .parquet(root)
@@ -217,10 +217,10 @@ object LogCompact {
       LogSync.stampFloor(spark, LogSync.tsHwmPath(root)) + 1),
       Option(before.agg(max(col("registered_at"))).head().getTimestamp(0))
         .map(_.getTime + 1).getOrElse(0L)))
-    val fresh = LogSync.freshManifestRows(spark, root, freshPaths.toSeq,
-      op = "rewrite", seq = Some(planningSeq),
-      registeredAt = Some(rewriteStamp)).cache()
-    val filesAfter = fresh.count()
+    val fresh = LogSync.manifestFrame(spark, LogSync.freshManifestRows(spark, root,
+      freshPaths.toSeq, op = "rewrite", seq = Some(planningSeq),
+      registeredAt = Some(rewriteStamp)))
+    val filesAfter = freshPaths.length.toLong
 
     val manifestCols = fresh.columns.toSeq
     val next = before
@@ -248,7 +248,7 @@ object LogCompact {
     // time-travel rule as data files.
     if (materializedDeletes.nonEmpty)
       LogSync.tombstoneDeleteEntries(spark, root, materializedDeletes.map(_.path))
-    before.unpersist(); fresh.unpersist()
+    before.unpersist()
     CompactStats(filesBefore, filesAfter)
     // release even on failure: nothing registered at planningSeq on
     // an abort, and any commit made while reserved already recorded a
@@ -375,7 +375,7 @@ object LogCompact {
     val cutoffMs = System.currentTimeMillis() - graceMs
     val cutoffTs = new java.sql.Timestamp(cutoffMs)
     val baseVersion = LogSync.manifestVersion(spark, root)
-    val m = LogSync.manifestDf(spark, root).cache()
+    val m = LogSync.manifestSnapshot(spark, root)
     // files pinned by any branch are NEVER reclaimed (and their
     // tombstones never purged) while the branch lives — the
     // branch-retention rule; dropBranch releases the pin
@@ -504,7 +504,7 @@ object LogCompact {
     var deadDeletes = 0
     if (LogSync.hasDeleteManifest(spark, root)) LogSync.withDmlLease(spark, root) {
       val regVersion = LogSync.deleteManifestVersion(spark, root)
-      val dm = LogSync.deleteManifestDf(spark, root).cache()
+      val dm = LogSync.deleteManifestSnapshot(spark, root)
       val deadDel = dm
         .filter(col("removed_at") <= lit(cutoffTs))
         .join(pinned, Seq("path"), "left_anti")

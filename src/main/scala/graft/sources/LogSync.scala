@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType, TimestampType}
 
@@ -444,6 +445,21 @@ object LogSync {
   private[sources] def manifestDf(spark: SparkSession, root: String): DataFrame =
     registryDf(spark, manifestRows(spark, root))
 
+  /** The data manifest as one consistent snapshot for a multi-step
+    * commit (compaction, DML, vacuum): held rows already are one (a
+    * LocalRelation, so caching buys nothing and a second commit over
+    * the same rows would re-cache the same plan); past the cap the
+    * distributed read is cached, to be materialized by the caller's
+    * first action and `unpersist`ed when done.
+    */
+  private[sources] def manifestSnapshot(spark: SparkSession, root: String): DataFrame =
+    snapshot(spark, manifestRows(spark, root))
+
+  private def snapshot(spark: SparkSession, reg: Registry): DataFrame = reg match {
+    case Left(_) => registryDf(spark, reg)
+    case Right(df) => df.cache()
+  }
+
   /** The data manifest as [[registryRows]] (empty rows when there is
     * none yet): its rows, or past the cap the distributed read.
     */
@@ -535,6 +551,10 @@ object LogSync {
 
   private[graft] def deleteManifestDf(spark: SparkSession, root: String): DataFrame =
     registryDf(spark, deleteManifestRows(spark, root))
+
+  /** [[manifestSnapshot]] for the delete registry. */
+  private[sources] def deleteManifestSnapshot(spark: SparkSession, root: String): DataFrame =
+    snapshot(spark, deleteManifestRows(spark, root))
 
   /** The delete registry as [[registryRows]] (empty rows when there is
     * none yet): its rows, or past the cap the distributed read.
@@ -985,21 +1005,28 @@ object LogSync {
     * cached).
     */
   private[graft] def registryListingSig(spark: SparkSession, dir: Path): (String, Long) =
+    registryListing(spark, dir).fold((null: String, Long.MaxValue))(ls =>
+      (listingSig(dir, ls), ls.map(_.getLen).sum))
+
+  private def registryListing(spark: SparkSession, dir: Path): Option[Seq[FileStatus]] =
     try {
       val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val b = Seq.newBuilder[(String, Long)]
+      val b = Seq.newBuilder[FileStatus]
       def walk(d: Path): Unit =
         fs.listStatus(d).foreach { s =>
-          if (s.isDirectory) walk(s.getPath)
-          else b += ((s"${s.getPath}:${s.getLen}:${s.getModificationTime}", s.getLen))
+          if (s.isDirectory) walk(s.getPath) else b += s
         }
       walk(dir)
-      val ls = b.result()
-      (ls.map(_._1).sorted.mkString(dir.toString + "|", "|", ""),
-        ls.map(_._2).sum)
+      Some(b.result())
     } catch {
-      case _: java.io.IOException => (null, Long.MaxValue)
+      case _: java.io.IOException => None
     }
+
+  private def listingEntry(s: FileStatus): String =
+    s"${s.getPath}:${s.getLen}:${s.getModificationTime}"
+
+  private def listingSig(dir: Path, ls: Seq[FileStatus]): String =
+    ls.map(listingEntry).sorted.mkString(dir.toString + "|", "|", "")
 
   /** A registry resolved once: its (schema, rows) held on the driver,
     * or past the cap the distributed read. Folds match on the `Left`;
@@ -1029,6 +1056,17 @@ object LogSync {
     * place. An in-place overwrite keeping a file's name and length
     * within the filesystem's mtime granularity would not change the
     * signature, and would serve stale rows.
+    *
+    * WRITE-THROUGH: a sync round's own append keeps the entry current
+    * ([[appendManifestAtomic]]), so neither the next sync nor a
+    * follower's next [[highWaterMark]] collects the manifest again. The
+    * entry becomes (listing after the rename, schema, held rows ++ the
+    * round's rows) only when all of these hold: before the rename the
+    * entry's signature equalled the listing; the listing after it is
+    * exactly that listing plus the renamed part; and the held schema is
+    * [[manifestSchema]] (names and types). Any other case (a foreign
+    * append or swap in between, a legacy schema, an unheld entry) leaves
+    * the entry to the signature check above, which re-collects.
     *
     * Why: the registry is control-plane metadata consulted by EVERY
     * read (`table`/`tableAsOf`/`tableSince`/stream offsets — typically
@@ -1358,113 +1396,169 @@ object LogSync {
   private[graft] def normPathStr(p: String): String =
     p.replaceFirst("^[a-zA-Z0-9.+-]+:/+", "/")
 
-  /** Per-file min/max of the `timestamp` column for exactly `paths` —
-    * Iceberg-style zone-map stats, computed by the one data-plane read
-    * of the new files registration needs anyway. Returns
-    * (path, min_ts, max_ts); lakes without a timestamp column get null
-    * stats (= never pruned by [[tableBetween]]).
+  /** Per-file manifest statistics for exactly `paths`, keyed by
+    * [[normPathStr]]: the zone map of the time axis (`min_ts`, `max_ts`,
+    * `null_ts`) and of the service axis (`min_svc`, `max_svc`), and the
+    * physical row count (`rows`), as a [[StatCols]]-ordered row. A file
+    * the map lacks (an empty file) registers with null stats.
     *
-    * The path list here is the CURRENT ROUND'S new files (bounded by
-    * ingest rate, not lake size) — unlike the registered set, it is
-    * already driver-resident from the control-plane listing, so an
-    * explicit-path read is not a driver-scaling regression.
+    * Registration is metadata-only where the footers allow it
+    * ([[Footers.stats]], one footer read per file on the driver, no
+    * Spark job): every file of a directory-key group must store the time
+    * axis as INT64 `TIMESTAMP(MICROS, isAdjustedToUTC=true)` with
+    * complete statistics, which every [[LogWriter.lakeWriter]] file
+    * does. Any other group takes [[scanStats]], which reads the files
+    * and gives the same rows: INT96 or stat-less files, a time or
+    * service axis with more than one name (a rename, so one round can
+    * mix names), or a service directory value that Spark's partition
+    * inference could type as a number, date or timestamp (it would then
+    * read as a null string). A directory service value is unescaped as
+    * Spark unescapes it.
+    *
+    * The path list is the CURRENT ROUND'S new files (bounded by ingest
+    * rate, not lake size), already driver-resident from the listing.
     */
   private[sources] def statsFor(spark: SparkSession, root: String,
-                                paths: Seq[String]): DataFrame = {
-    // ONE round can list files from TWO layout generations (the round
-    // that first syncs after a layout flip, or a backfill round over a
-    // flipped tree) — an explicit-path read with basePath would die in
-    // partition discovery exactly like the root scan. Same answer as
-    // [[scanRoot]]: group the round's paths by directory-key signature
-    // (the list is already driver-resident and ingest-bounded) and
-    // stat each generation's group under its own consistent shape.
-    val bySig = paths.groupBy(p =>
-      p.split('/').filter(_.contains('=')).map(_.split('=')(0)).toSeq)
-    if (bySig.size > 1)
-      return bySig.values.map(group => statsFor(spark, root, group.toSeq))
-        .reduce(_ unionByName _)
-    import spark.implicits._
+                                paths: Seq[String]): Map[String, Row] = {
+    val evoSt = LakeEvolve.state(spark, root)
+    val allTs = LakeEvolve.timeAxisNamesOf(evoSt)
+    val allSvc = LakeEvolve.svcAxisNamesOf(evoSt)
+    val conf = spark.sessionState.newHadoopConf()
+    val fs = new Path(root).getFileSystem(conf)
+    val base = normPathStr(fs.makeQualified(new Path(root)).toString) + "/"
+    // the `k=v` directory segments below the root
+    def dirKeys(p: String): Option[Seq[(String, String)]] = {
+      val n = normPathStr(p)
+      if (!n.startsWith(base)) None
+      else Some(n.stripPrefix(base).split('/').dropRight(1).toSeq
+        .filter(_.contains('=')).map { seg => val i = seg.indexOf('='); (seg.take(i), seg.drop(i + 1)) })
+    }
+    def stringTyped(raw: String): Boolean =
+      raw.nonEmpty && raw != ExternalCatalogUtils.DEFAULT_PARTITION_NAME &&
+        !raw.stripPrefix("-").stripPrefix("+").headOption.exists(_.isDigit) &&
+        scala.util.Try(java.lang.Double.parseDouble(raw)).isFailure
+    def fromFooters(group: Seq[String]): Option[Map[String, Row]] =
+      if (allTs.length != 1 || allSvc.length != 1) None
+      else {
+        val svcs = group.map(p => dirKeys(p).flatMap(_.filter(_._1 == allSvc.head) match {
+          case Seq() => Some(Footers.SvcColumn(allSvc.head))
+          case Seq((k, raw)) if stringTyped(raw) =>
+            Some(Footers.SvcDir(k, ExternalCatalogUtils.unescapePathName(raw)))
+          case _ => None
+        }))
+        if (svcs.exists(_.isEmpty)) None
+        else {
+          val stats = group.zip(svcs.flatten).iterator.map { case (p, svc) =>
+            Footers.stats(conf, fs.getFileStatus(new Path(p)), allTs.head, svc).map(p -> _)
+          }.takeWhile(_.isDefined).flatten.toSeq
+          if (stats.length < group.length) None
+          else Some(stats.map { case (p, st) =>
+            normPathStr(p) -> Row(st.minTs.map(Footers.timestamp).orNull,
+              st.maxTs.map(Footers.timestamp).orNull, st.minSvc.orNull, st.maxSvc.orNull,
+              st.rows, st.nullTs)
+          }.toMap)
+        }
+      }
+    bySignature(paths).flatMap(g => fromFooters(g).getOrElse(scanStats(spark, root, g))).toMap
+  }
+
+  // ONE round can list files from TWO layout generations (the round
+  // that first syncs after a layout flip, or a backfill round over a
+  // flipped tree) — an explicit-path read with basePath would die in
+  // partition discovery exactly like the root scan. Same answer as
+  // [[scanRoot]]: group the round's paths by directory-key signature
+  // and stat each generation's group under its own consistent shape.
+  private def bySignature(paths: Seq[String]): Seq[Seq[String]] =
+    paths.groupBy(p => p.split('/').filter(_.contains('=')).map(_.split('=')(0)).toSeq)
+      .values.toSeq
+
+  /** [[statsFor]]'s scan: the stats aggregate over the files, run as a
+    * Spark job and collected to the driver. The read declares the data
+    * schema of the group's first file's footer ([[Footers.schema]]),
+    * the file Spark's inference would sample, so no inference job runs;
+    * partition columns are still inferred from the directories.
+    */
+  private[sources] def scanStats(spark: SparkSession, root: String,
+                                 paths: Seq[String]): Map[String, Row] = {
+    val groups = bySignature(paths)
+    if (groups.size > 1) return groups.flatMap(scanStats(spark, root, _)).toMap
     // the stat axes bind the FIELD originally named timestamp /
     // service_name — after a rename the round's files carry the new
     // physical name (or, from a lagging writer, still an old one),
-    // and one round can MIX both while schema inference samples a
+    // and one round can MIX both while the declared schema samples a
     // single footer: request every name the axis has had explicitly
     // (absent ones read null) and coalesce, newest first. ONE state
     // resolution serves all four axis facts.
     val evoSt = LakeEvolve.state(spark, root)
     val allTs = LakeEvolve.timeAxisNamesOf(evoSt)
     val allSvc = LakeEvolve.svcAxisNamesOf(evoSt)
-    val sampled = spark.read.option("basePath", root).parquet(paths: _*)
+    val dataSchema = Footers.schema(spark, new Path(paths.head))
+      .getOrElse(sys.error(s"no parquet footer at ${paths.head}"))
+    val dirKeys = paths.head.split('/').filter(_.contains('=')).map(_.split('=')(0)).toSet
+    val known = dataSchema.fieldNames.toSet ++ dirKeys
     val extras =
-      allTs.filterNot(sampled.columns.contains)
-        .map(n => StructField(n, TimestampType, nullable = true)) ++
-      allSvc.filterNot(sampled.columns.contains)
-        .map(n => StructField(n, StringType, nullable = true))
-    val probe =
-      if (extras.isEmpty || allTs.length + allSvc.length == 2) sampled
-      else spark.read.option("basePath", root)
-        .schema(StructType(sampled.schema.fields ++ extras)).parquet(paths: _*)
+      if (allTs.length + allSvc.length == 2) Nil
+      else allTs.filterNot(known).map(n => StructField(n, TimestampType, nullable = true)) ++
+        allSvc.filterNot(known).map(n => StructField(n, StringType, nullable = true))
+    val probe = spark.read.option("basePath", root)
+      .schema(StructType(dataSchema.fields ++ extras)).parquet(paths: _*)
     def has(c: String, t: org.apache.spark.sql.types.DataType): Boolean =
       probe.columns.contains(c) && probe.schema(c).dataType == t
     val tsName = allTs.filter(has(_, TimestampType))
     val svcName = allSvc.filter(has(_, StringType))
+    if (tsName.isEmpty && svcName.isEmpty)
+      // stat-less lakes get null rows/null_ts too (probing counts
+      // would be a read this branch exists to avoid) — null = unknown,
+      // so the metadata-drop fast path never fires on them
+      return paths.map(p => normPathStr(p) -> Row.fromSeq(StatCols.map(_ => null))).toMap
     val ts = if (tsName.nonEmpty) coalesce(tsName.map(col): _*)
              else lit(null).cast(TimestampType)
     val svc = if (svcName.nonEmpty) coalesce(svcName.map(col): _*)
               else lit(null).cast(StringType)
-    if (tsName.nonEmpty || svcName.nonEmpty) {
-      probe
-        .groupBy(normPath(col("_metadata.file_path")).as("norm"))
-        .agg(min(ts).as("min_ts"), max(ts).as("max_ts"),
-             min(svc).as("min_svc"), max(svc).as("max_svc"),
-             count(lit(1)).as("rows"),
-             (count(lit(1)) - count(ts)).as("null_ts"))
-    } else {
-      // stat-less lakes get null rows/null_ts too (probing counts
-      // would be a read this branch exists to avoid) — null = unknown,
-      // so the metadata-drop fast path never fires on them
-      paths.toDF("p").select(normPath(col("p")).as("norm"),
-        lit(null).cast(TimestampType).as("min_ts"),
-        lit(null).cast(TimestampType).as("max_ts"),
-        lit(null).cast(StringType).as("min_svc"),
-        lit(null).cast(StringType).as("max_svc"),
-        lit(null).cast("long").as("rows"),
-        lit(null).cast("long").as("null_ts"))
-    }
+    // `_metadata.file_path` is a URI string (a `%` or a space in a
+    // directory value escaped once more); keyed as the listing's path
+    probe
+      .groupBy(col("_metadata.file_path").as("uri"))
+      .agg(min(ts).as("min_ts"), max(ts).as("max_ts"),
+           min(svc).as("min_svc"), max(svc).as("max_svc"),
+           count(lit(1)).as("rows"),
+           (count(lit(1)) - count(ts)).as("null_ts"))
+      .collect().map { r =>
+        normPathStr(new Path(new java.net.URI(r.getString(0))).toString) ->
+          Row.fromSeq(r.toSeq.tail)
+      }.toMap
   }
 
-  /** Fully-statted manifest rows for this round's new files — the
-    * stamping step shared by [[sync]], [[LogCompact.compact]] and
-    * [[graft.sources.LakeDml]] (one place to extend when a stat column
-    * is added). `paths` is always a bounded, driver-resident list (new
-    * files of one round / one rewrite).
+  /** Fully-statted manifest rows for this round's new files, built on
+    * the driver in [[manifestSchema]] order — the stamping step shared
+    * by [[sync]], [[LogCompact.compact]] and [[graft.sources.LakeDml]]
+    * (one place to extend when a stat column is added). `paths` is
+    * always a bounded, driver-resident list (new files of one round /
+    * one rewrite); the stats come from [[statsFor]], so a round of
+    * µs lake files starts no Spark job here. `registeredAt` defaults to
+    * the driver's clock.
     */
   private[sources] def freshManifestRows(spark: SparkSession, root: String,
                                          paths: Seq[String],
                                          op: String = "append",
                                          seq: Option[Long] = None,
                                          registeredAt: Option[java.sql.Timestamp] = None
-                                        ): DataFrame = {
-    import spark.implicits._
+                                        ): Seq[Row] = {
     val commitSeq = seq.getOrElse(nextSeq(spark, root))
-    val stamped = paths.toDF("path")
-      .withColumn("registered_at",
-        registeredAt.map(ts => lit(ts).cast(TimestampType))
-          .getOrElse(current_timestamp()))
-    val statted =
-      if (paths.isEmpty)
-        StatCols.foldLeft(stamped) { (df, c) =>
-          df.withColumn(c, lit(null).cast(manifestSchema(c).dataType))
-        }
-      else
-        stamped.join(statsFor(spark, root, paths),
-          normPath(col("path")) === col("norm"), "left")
-    statted
-      .withColumn("removed_at", lit(null).cast(TimestampType))
-      .withColumn("op", lit(op))
-      .withColumn("seq", lit(commitSeq))
-      .select(manifestSchema.fieldNames.map(col).toSeq: _*)
+    val stamp = registeredAt.getOrElse(new java.sql.Timestamp(System.currentTimeMillis()))
+    val stats = if (paths.isEmpty) Map.empty[String, Row] else statsFor(spark, root, paths)
+    val unknown = Row.fromSeq(StatCols.map(_ => null))
+    paths.map { p =>
+      val st = stats.getOrElse(normPathStr(p), unknown).toSeq
+      new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
+        (Seq(p, stamp) ++ st.take(4) ++ Seq(null, op, commitSeq) ++ st.drop(4)).toArray,
+        manifestSchema)
+    }
   }
+
+  /** Driver-built manifest rows as a DataFrame (a LocalRelation). */
+  private[sources] def manifestFrame(spark: SparkSession, rows: Seq[Row]): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), manifestSchema)
 
   /** SINGLE-WRITER lease around [[sync]]'s plan-and-append round. Two
     * concurrent syncs of one root would both pass the fresh-file
@@ -1697,12 +1791,14 @@ object LogSync {
     }
 
   /** Land one commit's data-manifest rows as ONE atomically-visible
-    * registration: the rows stage to a writer-unique underscore dir as
-    * a SINGLE parquet part (`repartition(1)` — manifest rows are
-    * file-count-cardinality, one per new file of the round, bounded by
-    * arrival rate, so one part stays small where the data itself would
-    * not), and that one part renames into the live manifest dir under
-    * a fresh UUID name. One rename = one visibility event: a
+    * registration: the driver-built rows ([[freshManifestRows]]) stage
+    * to a writer-unique underscore dir as a SINGLE parquet part — a
+    * LocalRelation written through `coalesce(1)`, one Spark job (the
+    * write; `repartition(1)` would add a shuffle job) — and that one
+    * part renames into the live manifest dir under a fresh UUID name.
+    * Manifest rows are file-count-cardinality, one per new file of the
+    * round, bounded by arrival rate, so one part stays small where the
+    * data itself would not. One rename = one visibility event: a
     * concurrent reader ([[highWaterMark]], [[tableSince]], the
     * `graft_watermark`/`graft_changes` SQL poll loop) sees either NONE
     * of the round or ALL of it — never a prefix sharing the round's
@@ -1714,23 +1810,26 @@ object LogSync {
     * the append-vs-swap race to the rename itself (the documented
     * temporary-invisibility seam: a racing manifest SWAP can still
     * strand the part in a superseded version dir, and the next sync
-    * round's fresh-diff re-registers the files).
+    * round's fresh-diff re-registers the files). The rows are then
+    * written through to the held registry ([[registryRows]]' rule).
     */
   private[sources] def appendManifestAtomic(spark: SparkSession, root: String,
-                                            rows: DataFrame): Unit = {
+                                            rows: Seq[Row]): Unit = {
     val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val stage = new Path(s"$root/_manifest_append_" +
       java.util.UUID.randomUUID().toString.take(8))
-    rows.repartition(1).write.mode(SaveMode.Overwrite).parquet(stage.toString)
+    manifestFrame(spark, rows).coalesce(1).write.mode(SaveMode.Overwrite).parquet(stage.toString)
     val parts = fs.listStatus(stage)
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
     require(parts.length == 1,
       s"atomic manifest append under $root staged ${parts.length} parts " +
-        "(expected exactly 1 from repartition(1))")
-    val dest = new Path(manifestPath(spark, root))
+        "(expected exactly 1 from coalesce(1))")
+    val destStr = manifestPath(spark, root)
+    val dest = new Path(destStr)
     fs.mkdirs(dest)
     val target = new Path(dest,
       s"part-${java.util.UUID.randomUUID().toString}.parquet")
+    val before = registryListing(spark, dest)
     require(fs.rename(parts.head.getPath, target),
       s"manifest append rename failed: ${parts.head.getPath} -> $target")
     fs.delete(stage, true)
@@ -1738,6 +1837,20 @@ object LogSync {
     // listing over the manifest dir (same contract as the delete
     // registry's leased append)
     spark.catalog.refreshByPath(dest.toString)
+    for (ls0 <- before; ls1 <- registryListing(spark, dest)) {
+      val known = ls0.map(listingEntry).toSet
+      val added = ls1.filterNot(s => known(listingEntry(s)))
+      val exact = added.length == 1 && added.head.getPath.getName == target.getName &&
+        ls1.length == ls0.length + 1
+      def sameShape(schema: StructType) =
+        schema.fields.map(f => (f.name, f.dataType)).sameElements(
+          manifestSchema.fields.map(f => (f.name, f.dataType)))
+      if (exact) registryRowsMemo.update(spark, destStr) { case (sig, schema, held) =>
+        if (sig == listingSig(dest, ls0) && sameShape(schema))
+          Some((listingSig(dest, ls1), schema, held ++ rows))
+        else None
+      }
+    }
   }
 
   /** One sync round: returns the number of newly registered files.

@@ -1,13 +1,7 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.parquet.HadoopReadOptions
-import org.apache.parquet.format.converter.ParquetMetadataConverter
-import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
-import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
-import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated parquet tables.
   *
@@ -26,11 +20,9 @@ object Tables {
     * operator call. The schema is instead read here, on the driver,
     * from the one footer Spark's non-merging inference would read:
     * `_common_metadata`, else `_metadata`, else the first data file by
-    * path, skipping `_`/`.` names as Spark's file index does. The
-    * session's own [[ParquetToSparkSchemaConverter]] turns it into the
-    * same `StructType`, so `nanosAsLong`, INT96 and NTZ inference apply
-    * exactly as in Spark's read; partition columns are still found by
-    * Spark from the directory names. Not memoized: every new shard
+    * path, skipping `_`/`.` names as Spark's file index does
+    * ([[Footers.schema]]); partition columns are still found by Spark
+    * from the directory names. Not memoized: every new shard
     * would miss a memo, and one footer read costs less than the
     * listing signature a memo would need. A missing or empty path, or
     * a session that merges schemas, is read by Spark unchanged, so it
@@ -40,36 +32,8 @@ object Tables {
     val path = s"$dir/$name.parquet"
     val schema =
       if (spark.sessionState.conf.isParquetSchemaMergingEnabled) None
-      else footerSchema(spark, new Path(path))
+      else Footers.schema(spark, new Path(path))
     schema.fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
-  }
-
-  private def footerSchema(spark: SparkSession, path: Path): Option[StructType] = {
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = path.getFileSystem(conf)
-    val summaries = Set("_common_metadata", "_metadata")
-    def skipped(n: String) =
-      (n.startsWith("_") && !n.contains("=")) || n.startsWith(".") || n.endsWith("._COPYING_")
-    def leaves(s: FileStatus): Seq[FileStatus] =
-      if (!s.isDirectory) Seq(s)
-      else fs.listStatus(s.getPath).toSeq.flatMap { c =>
-        val n = c.getPath.getName
-        if (summaries(n)) Seq(c) else if (skipped(n)) Nil else leaves(c)
-      }
-    val files =
-      try leaves(fs.getFileStatus(path)).sortBy(_.getPath.toString)
-      catch { case _: java.io.FileNotFoundException => Nil }
-    def named(n: String) = files.find(_.getPath.getName == n)
-    val chosen = named("_common_metadata").orElse(named("_metadata"))
-      .orElse(files.find(f => !summaries(f.getPath.getName)))
-    chosen.map { f =>
-      val opts = HadoopReadOptions.builder(conf, f.getPath)
-        .withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS).build()
-      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf), opts)
-      val footer = try reader.getFooter finally reader.close()
-      ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer),
-        new ParquetToSparkSchemaConverter(spark.sessionState.conf))
-    }
   }
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")

@@ -15,6 +15,14 @@ object GraftSqlBridge {
 
   def analyzed(df: DataFrame): LogicalPlan = df.queryExecution.analyzed
 
+  /** A child of `spark` (`cloneSession`, `private[sql]`): a copy of its
+    * session state, conf included, over the same shared state, so a conf
+    * set on the child never reaches `spark` and the two share one
+    * `CacheManager`.
+    */
+  def cloneSession(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
+
   /** Waits until every listener has seen the events of the actions that
     * already ran (the bus is `private[spark]`).
     */

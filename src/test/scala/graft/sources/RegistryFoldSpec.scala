@@ -30,15 +30,20 @@ class RegistryFoldSpec extends graft.SparkSpec {
     Files.createTempDirectory(prefix).toString
 
   // rows [from, until) in two service partitions; each of the `files`
-  // write tasks leaves one file per partition
-  private def append(root: String, from: Long, until: Long, files: Int = 2): Unit =
-    spark.range(from, until, 1, files).select(
+  // write tasks leaves one file per partition. `lake` writes them as
+  // the lake writers do (µs timestamps, footer-statted), else as a
+  // plain session write (INT96).
+  private def append(root: String, from: Long, until: Long, files: Int = 2,
+                     lake: Boolean = false): Unit = {
+    val rows = spark.range(from, until, 1, files).select(
       timestamp_millis(lit(1700000000000L) + col("id") * 60000).as("timestamp"),
       when(col("id") % 2 === 0, "a").otherwise("b").as("service_name"),
       lit("INFO").as("severity_text"),
       concat(lit("s"), col("id")).as("span_id"),
       lit("x").as("body"))
-      .write.mode("append").partitionBy("service_name").parquet(root)
+    (if (lake) LogWriter.lakeWriter(rows) else rows.write)
+      .mode("append").partitionBy("service_name").parquet(root)
+  }
 
   /** The recursive-listing rule `listDataFiles` replaced, verbatim. */
   private def recursiveRule(dir: String): Seq[String] = {
@@ -207,20 +212,21 @@ class RegistryFoldSpec extends graft.SparkSpec {
 
   test("a follower's repeat poll starts no job; a one-file sync starts the measured jobs") {
     val root = tmp("graft_jobs")
-    append(root, 0, 10)
+    append(root, 0, 10, lake = true)
     LogSync.sync(spark, root)
     LogSync.highWaterMark(spark, root) // collects the registry once
     assert(jobsOf(LogSync.highWaterMark(spark, root)).isEmpty)
-    append(root, 10, 11, files = 1)
+    append(root, 10, 11, files = 1, lake = true)
     val jobs = jobsOf(assert(LogSync.sync(spark, root) == 1))
     // The registry reads, the fresh diff, nextSeq and highWaterMark fold
-    // over the warm driver-held rows and start none. What is left is the
-    // new file's registration:
-    //  1. statsFor's footer schema read of the new file (parallelize);
-    //  2. statsFor's stats aggregate: scan, partial aggregate, shuffle;
-    //  3. the stats broadcast AQE plans for freshManifestRows' left join;
-    //  4. appendManifestAtomic's repartition(1) shuffle;
-    //  5. appendManifestAtomic's write of the one manifest part.
-    assert(jobs.length == 5, jobs.mkString("\n", "\n", ""))
+    // over the warm driver-held rows and start none, and the new file's
+    // stats come from its footer on the driver. What is left is the
+    // write of the one manifest part (a LocalRelation through
+    // coalesce(1)).
+    assert(jobs.length == 1, jobs.mkString("\n", "\n", ""))
+    // the sync wrote its rows through to the held registry: the next
+    // watermark poll folds them without collecting the manifest again
+    val polled = jobsOf(LogSync.highWaterMark(spark, root))
+    assert(polled.isEmpty, polled.mkString("\n", "\n", ""))
   }
 }
