@@ -122,6 +122,17 @@ object SessionCaches {
   private[graft] def cacheOnce(df: DataFrame): DataFrame =
     if (df.storageLevel == StorageLevel.NONE) df.cache() else df
 
+  /** Runs `f` over `df` cached and then releases the cache, unless the
+    * plan was cached already: its owner keeps it, and it is neither
+    * cached twice nor released here.
+    */
+  private[graft] def cachedDuring[A](df: DataFrame)(f: DataFrame => A): A =
+    if (df.storageLevel != StorageLevel.NONE) f(df)
+    else {
+      df.cache()
+      try f(df) finally df.unpersist()
+    }
+
   /** A bounded, thread-safe LRU map for VALUE-keyed memo caches whose
     * key space grows with history (delete-file path sets, chain file
     * sets): every rewrite mints fresh keys, so an unbounded

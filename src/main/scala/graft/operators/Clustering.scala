@@ -91,9 +91,7 @@ object Clustering {
   def centroidsOf(spark: SparkSession, vectors: DataFrame, k: Int,
                   iters: Int = 5): Array[(Int, Seq[Double])] = {
     VectorFunctions.register(spark)
-    val e = vectors.select(col("vec_id"), col("v"))
-      .cache()
-    try {
+    graft.SessionCaches.cachedDuring(vectors.select(col("vec_id"), col("v"))) { e =>
       // element type is float for raw embeddings, double for derived
       // working sets (e.g. OPQ-rotated vectors) — accept both
       var cents: Array[Seq[Double]] = e.orderBy(col("vec_id")).limit(k).collect()
@@ -118,7 +116,7 @@ object Clustering {
         cents = cents.indices.map(i => updated.getOrElse(i, cents(i))).toArray
       }
       cents.zipWithIndex.map { case (c, i) => (i, c) }
-    } finally e.unpersist()
+    }
   }
 
   def kmeansAssign(spark: SparkSession, dir: String, k: Int = 8, iters: Int = 5): DataFrame = {
@@ -152,34 +150,36 @@ object Clustering {
     */
   def inertia(spark: SparkSession, dir: String, k: Int = 8, iters: Int = 5): Double = {
     VectorFunctions.register(spark)
-    val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding").as("v"))
-      .cache() // scanned twice per iteration (inertia + update)
-    var centroids: Array[Seq[Double]] = e.orderBy(col("vec_id")).limit(k).collect()
-      .map(_.getSeq[Float](1).map(_.toDouble))
-    var total = Double.MaxValue
-    (0 until iters).foreach { _ =>
-      val dists = array(centroids.map { c =>
-        val cNorm2 = c.map(x => x * x).sum
-        call_function("graft_dot", col("v"), col("v")) -
-          call_function("graft_dot", col("v"), typedLit(c)) * 2.0 + lit(cNorm2)
-      }: _*)
-      val cur = e.withColumn("d2", array_min(dists))
-        .withColumn("cluster",
-          (array_position(array(centroids.indices.map(i => element_at(dists, i + 1)): _*),
-            col("d2")) - 1).cast("int"))
-      total = cur.agg(sum(col("d2"))).collect()(0).getDouble(0)
-      val updated = cur
-        .select(col("cluster"), posexplode(col("v")).as(Seq("dim", "x")))
-        .groupBy(col("cluster"), col("dim"))
-        .agg(avg(col("x").cast("double")).as("c"))
-        .collect()
-        .groupBy(_.getAs[Int]("cluster"))
-        .map { case (cl, rows) =>
-          cl -> rows.sortBy(_.getAs[Int]("dim")).map(_.getAs[Double]("c")).toSeq
-        }
-      centroids = centroids.indices
-        .map(i => updated.getOrElse(i, centroids(i))).toArray
+    // scanned twice per iteration (inertia + update)
+    graft.SessionCaches.cachedDuring(
+        Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding").as("v"))) { e =>
+      var centroids: Array[Seq[Double]] = e.orderBy(col("vec_id")).limit(k).collect()
+        .map(_.getSeq[Float](1).map(_.toDouble))
+      var total = Double.MaxValue
+      (0 until iters).foreach { _ =>
+        val dists = array(centroids.map { c =>
+          val cNorm2 = c.map(x => x * x).sum
+          call_function("graft_dot", col("v"), col("v")) -
+            call_function("graft_dot", col("v"), typedLit(c)) * 2.0 + lit(cNorm2)
+        }: _*)
+        val cur = e.withColumn("d2", array_min(dists))
+          .withColumn("cluster",
+            (array_position(array(centroids.indices.map(i => element_at(dists, i + 1)): _*),
+              col("d2")) - 1).cast("int"))
+        total = cur.agg(sum(col("d2"))).collect()(0).getDouble(0)
+        val updated = cur
+          .select(col("cluster"), posexplode(col("v")).as(Seq("dim", "x")))
+          .groupBy(col("cluster"), col("dim"))
+          .agg(avg(col("x").cast("double")).as("c"))
+          .collect()
+          .groupBy(_.getAs[Int]("cluster"))
+          .map { case (cl, rows) =>
+            cl -> rows.sortBy(_.getAs[Int]("dim")).map(_.getAs[Double]("c")).toSeq
+          }
+        centroids = centroids.indices
+          .map(i => updated.getOrElse(i, centroids(i))).toArray
+      }
+      total
     }
-    total
   }
 }

@@ -126,11 +126,11 @@ object Multimodal {
       .select(col("doc_id"), call_function("graft_simhash", shingles).as("bits"))
     val bandVal = (k: Int) =>
       call_function("shiftrightunsigned", col("bits"), lit(k * 16)).bitwiseAND(lit(0xffffL))
-    val buckets = sigs.select(col("doc_id"), col("bits"),
+    // self-joined below
+    val buckets = graft.SessionCaches.cacheOnce(sigs.select(col("doc_id"), col("bits"),
         explode(array((0 until 4).map(k =>
           struct(lit(k).as("band"), bandVal(k).as("bv"))): _*)).as("bb"))
-      .select(col("doc_id"), col("bits"), col("bb.band").as("band"), col("bb.bv").as("bv"))
-      .cache() // self-joined below
+      .select(col("doc_id"), col("bits"), col("bb.band").as("band"), col("bb.bv").as("bv")))
     val hamming = bit_count(col("a.bits").bitwiseXOR(col("b.bits")))
     buckets.as("a")
       .join(buckets.as("b"),

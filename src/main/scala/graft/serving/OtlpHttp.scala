@@ -1,6 +1,7 @@
 package graft.serving
 
 import java.net.InetSocketAddress
+import java.nio.ByteBuffer
 import java.util.concurrent.{ConcurrentLinkedQueue, Executors, TimeUnit}
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
@@ -70,8 +71,11 @@ import graft.sources.{LogSync, LogWriter, OtlpLogs, OtlpMetrics, OtlpTraces}
   *
   * Scale honesty: this is the SINGLE-NODE listening edge, exactly what
   * the reference runs (one collector container) — the buffer is
-  * driver-resident and bounded by flush cadence × arrival rate, and
-  * flush cost is one Spark job over that buffer. A 100 TB/day
+  * driver-resident and bounded by flush cadence × arrival rate. A
+  * flush that lands rows starts 3 Spark jobs per signal: the
+  * partitioned write's shuffle map stage, the write itself and sync's
+  * manifest part; a flush with rejects adds the quarantine write.
+  * Classifying the payloads and counting the rows start none. A 100 TB/day
   * deployment runs a fleet of collectors in front and lands files for
   * [[LogSync.sync]] instead; this endpoint exists so a stock OTLP
   * exporter can point at a graft lake with no extra moving parts.
@@ -225,11 +229,12 @@ object OtlpHttp {
       (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)
 
     /** One signal's drain, BOTH transports (logs, traces, metrics all
-      * share this shape now): parse each transport's batch through its
-      * quarantining parser, union the valid rows behind the signal's
-      * one flatten, write + sync against the signal's own lake root
-      * and sync-heal flag — the 200-ack durability contract held per
-      * signal.
+      * share this shape now): classify each transport's payloads on the
+      * driver with its quarantining parser, quarantine the rejects,
+      * parse only the valid payloads and union them behind the
+      * signal's one flatten, write, and sync when the write landed
+      * rows, against the signal's own lake root and sync-heal flag —
+      * the 200-ack durability contract held per signal.
       */
     private def flushSignal(jq: ConcurrentLinkedQueue[String],
         pq: ConcurrentLinkedQueue[Array[Byte]], signalRoot: String,
@@ -256,35 +261,45 @@ object OtlpHttp {
       // plan construction inside the try: an analysis failure (or a
       // session racing shutdown) must hit the re-enqueue path — these
       // payloads are already 200-acked
-      var valid: org.apache.spark.sql.DataFrame = null
       try {
-        val parsed = Seq(
-          if (js.nonEmpty) Some(jsonParser(js.toDF("payload"), col("payload")))
+        // each transport's shape-invalid envelopes, classified on the
+        // driver: the parser's reject frame over the drained payloads'
+        // LocalRelation is folded into one by Spark's
+        // ConvertToLocalRelation, so this collect starts no job
+        val badJs = if (js.isEmpty) Set.empty[String]
+          else jsonParser(js.toDF("payload"), col("payload"))._2
+            .collect().map(_.getString(0)).toSet
+        val badPs = if (ps.isEmpty) Set.empty[ByteBuffer]
+          else protoParser(ps.toDF("bin"), col("bin"))._2
+            .collect().map(r => ByteBuffer.wrap(r.getAs[Array[Byte]](0))).toSet
+        val (rejectJs, okJs) = js.partition(badJs)
+        val (rejectPs, okPs) = ps.partition(p => badPs(ByteBuffer.wrap(p)))
+        // quarantined as their raw bytes, the batch intake's
+        // no-silent-drop rule. Ordered BEFORE the valid-row commit so a
+        // failure-retry can at worst duplicate raw bytes in the forensic
+        // bin, never lake rows.
+        val quarantined = (rejectJs.length + rejectPs.length).toLong
+        if (quarantined > 0)
+          (rejectJs.map(_.getBytes("UTF-8")) ++ rejectPs).map(Tuple1(_)).toDF("payload")
+            .write.mode(SaveMode.Append).parquet(s"$signalRoot/_quarantine/http")
+        val valid = Seq(
+          if (okJs.nonEmpty) Some(jsonParser(okJs.toDF("payload"), col("payload"))._1)
           else None,
-          if (ps.nonEmpty) Some(protoParser(ps.toDF("bin"), col("bin")))
+          if (okPs.nonEmpty) Some(protoParser(okPs.toDF("bin"), col("bin"))._1)
           else None).flatten
-        valid = parsed.map(_._1).reduce(_ unionByName _).cache()
-        val nValid = valid.count()
-        // shape-invalid envelopes first: quarantined as their raw
-        // bytes, the batch intake's no-silent-drop rule. Ordered
-        // BEFORE the valid-row commit so a failure-retry can at worst
-        // duplicate raw bytes in the forensic bin, never lake rows.
-        val badN = parsed.map { case (_, bad) =>
-          val badBin = bad.select(
-            (if (bad.schema("payload").dataType == org.apache.spark.sql.types.StringType)
-               encode(col("payload"), "UTF-8") else col("payload")).as("payload"))
-          val n = badBin.count()
-          if (n > 0)
-            badBin.write.mode(SaveMode.Append).parquet(s"$signalRoot/_quarantine/http")
-          n
-        }.sum
-        if (nValid > 0) {
-          LogWriter.write(valid, signalRoot, layout = LogWriter.DailyLayout)
+        if (valid.isEmpty) (0L, quarantined)
+        else {
+          val committed = LogWriter.commit(valid.reduce(_ unionByName _), signalRoot,
+            layout = LogWriter.DailyLayout)
           rowsDurable = true
-          try LogSync.sync(spark, signalRoot)
-          catch { case t: Throwable => setPending(true); throw t }
+          // the rows landed, from the write job's own observed count;
+          // a registration left undone heals on the next flush
+          try {
+            val rows = LogWriter.observedRows(committed)
+            if (rows > 0) LogSync.sync(spark, signalRoot)
+            (rows, quarantined)
+          } catch { case t: Throwable => setPending(true); throw t }
         }
-        (nValid, badN)
       } catch {
         case t: Throwable =>
           if (!rowsDurable) {
@@ -298,8 +313,7 @@ object OtlpHttp {
             pendingBytes.addAndGet(released)
           }
           throw t
-      } finally if (valid != null) valid.unpersist() // also on
-      // failure — retries must not accumulate cached copies
+      }
     }
 
     /** Close the socket WAITING for in-flight handlers (a payload the

@@ -1855,7 +1855,8 @@ object IcebergExport {
     val dataNames = cur.schemaFields.map(_.name).toSet --
       cur.partFields.map(_.name).toSet
     if (!dataNames.subsetOf(fast.columns.toSet)) return None
-    val preDf = prePaths.toDF("__pre_path")
+    // `__src` is the scanned file's URI-form identity
+    val preDf = prePaths.map(LogSync.registeredKeyStr).toDF("__pre_path")
     val sizedPre =
       if (pre.files.length <= LogSync.seqBroadcastRowCap(spark)) broadcast(preDf)
       else preDf

@@ -60,7 +60,7 @@ object LakeDml {
   private def tableWithSrc(spark: SparkSession, root: String,
                            withPos: Boolean = false): DataFrame = {
     val paths = LogSync.activeManifest(spark, root)
-      .select(LogSync.normPath(col("path")).as("__registered_path"))
+      .select(LogSync.registeredKey(col("path")).as("__registered_path"))
     // an evolved lake's DML scan reads through the same request-schema
     // + alias-fold shape as [[LogSync.table]] (a predicate naming the
     // renamed column must match pre-rename rows); `_metadata`-derived
@@ -172,7 +172,7 @@ object LakeDml {
     try {
     val affected = before
       .filter(col("removed_at").isNull &&
-        LogSync.normPath(col("path")).isin(affectedSrcs: _*))
+        LogSync.registeredKey(col("path")).isin(affectedSrcs: _*))
       .select("path").as[String].collect()
 
     val layout = LogCompact.inferLayout(spark, root)
@@ -310,7 +310,7 @@ object LakeDml {
     val manifestCols = fresh.columns.toSeq
     def buildNext(base: DataFrame): DataFrame = base
       .withColumn("removed_at",
-        when(LogSync.normPath(col("path")).isin(affectedSrcs: _*) &&
+        when(LogSync.registeredKey(col("path")).isin(affectedSrcs: _*) &&
           col("removed_at").isNull, current_timestamp())
           .otherwise(col("removed_at")))
       .select(manifestCols.map(col): _*)
@@ -983,7 +983,7 @@ object LakeDml {
       val explicitCap = spark.conf
         .getOption("graft.lake.convertExplicitPathCap").map(_.toLong)
         .getOrElse(DefaultMaxRewriteFiles.toLong)
-      val delSeqRel = files.map(e => (LogSync.normPathStr(e.path), e.seq))
+      val delSeqRel = files.map(e => (LogSync.registeredKeyStr(e.path), e.seq))
         .toDF("__eqd_file", "__eq_seq")
       val delRows = spark.read.parquet(files.map(_.path): _*)
         .withColumn("__eqd_src", LogSync.normPath(col("_metadata.file_path")))
@@ -996,13 +996,13 @@ object LakeDml {
         else if (candCount <= explicitCap) {
           val rows = cand.collect()
           val seqRel = rows.map(r =>
-              (LogSync.normPathStr(r.getString(0)), r.getLong(1))).toSeq
+              (LogSync.registeredKeyStr(r.getString(0)), r.getLong(1))).toSeq
             .toDF("__seq_src", "__data_seq")
           Some(scanOf(Some(rows.map(_.getString(0)).toSeq))
             .join(broadcast(seqRel), col("__src") === col("__seq_src")))
         } else {
           val candRel = cand.select(
-            LogSync.normPath(col("path")).as("__seq_src"), col("__data_seq"))
+            LogSync.registeredKey(col("path")).as("__seq_src"), col("__data_seq"))
           val sized =
             if (candCount <= LogSync.seqBroadcastRowCap(spark))
               broadcast(candRel)
@@ -1045,7 +1045,7 @@ object LakeDml {
     val entries = LogSync.posDeleteEntries(spark, root)
     if (entries.isEmpty) return 0
     val active = LogSync.activeManifest(spark, root)
-      .select(LogSync.normPath(col("path")).as("__active"))
+      .select(LogSync.registeredKey(col("path")).as("__active"))
     // the semi-join's build side is FILE-cardinality (one row per
     // active registered file) — size-guarded like every other
     // manifest-derived relation: broadcast under the row cap, shuffle
@@ -1057,9 +1057,9 @@ object LakeDml {
         LogSync.normPath(col("_metadata.file_path")).as("__del"))
       .join(sizedActive, col("__target") === col("__active"), "left_semi")
       .select(col("__del")).distinct().as[String].collect().toSet
-    val dead = entries.map(e => LogSync.normPathStr(e.path)).toSet -- live
+    val dead = entries.map(_.path).filterNot(p => live(LogSync.registeredKeyStr(p)))
     if (dead.isEmpty) return 0
-    LogSync.tombstoneDeleteEntries(spark, root, dead.toSeq)
+    LogSync.tombstoneDeleteEntries(spark, root, dead)
     dead.size
   }
 

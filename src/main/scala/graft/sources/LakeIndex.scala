@@ -68,7 +68,7 @@ object LakeIndex {
                           todo: Array[String], blooms: DataFrame): Unit = {
     import spark.implicits._
     todo.toSeq.toDF("path")
-      .join(blooms, LogSync.normPath(col("path")) === col("norm"), "left")
+      .join(blooms, LogSync.registeredKey(col("path")) === col("norm"), "left")
       .select(col("path"), col("bloom"))
       .write.mode(SaveMode.Append).parquet(indexPath(root, idxName))
   }

@@ -3,8 +3,9 @@ package graft.sources
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.execution.datasources.graft.PartitionBridge
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructField, StructType, TimestampType}
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType, TimestampType}
 
 /** Incremental file registration — the reference's log-sync service
   * (scripts/sync-logs.sh): scan the lake for parquet files, diff
@@ -1322,7 +1323,7 @@ object LogSync {
       // resolution turns ambiguous the moment a lake holds an
       // equality delete.
       val m = manifestRows(spark, root)
-      val seqRel = registryDf(spark, m).select(normPath(col("path")).as("__seq_src"),
+      val seqRel = registryDf(spark, m).select(registeredKey(col("path")).as("__seq_src"),
         coalesce(col("seq"), lit(0L)).as("__data_seq"))
       // size-guarded like every other join in this path: the attach
       // relation has manifest cardinality — broadcast under the row
@@ -1344,7 +1345,7 @@ object LogSync {
       import spark.implicits._
       val applied = eqs.groupBy(_.eqCols).foldLeft(withSeq) {
         case (acc, (cols, files)) =>
-          val delSeqRel = files.map(e => (normPathStr(e.path), e.seq))
+          val delSeqRel = files.map(e => (registeredKeyStr(e.path), e.seq))
             .toDF("__eqd_file", "__eq_seq")
           val delRows = spark.read.parquet(files.map(_.path): _*)
             .withColumn("__eqd_src", normPath(col("_metadata.file_path")))
@@ -1391,6 +1392,25 @@ object LogSync {
     */
   private[graft] def normPath(c: Column): Column =
     regexp_replace(c, "^[a-zA-Z0-9.+-]+:/+", "/")
+
+  /** The key a manifest or delete-registry path joins a scanned row's
+    * `normPath(_metadata.file_path)` on: [[normPath]], then the URI
+    * spelling. The registries keep the Hadoop path string, the scan its
+    * URI, which %-escapes `%`, spaces and every other character a URI
+    * path may not hold (`a%2Fb` is `a%252Fb`, `x y` is `x%20y`). Every
+    * comparison of a registered path with a scanned file's identity
+    * goes through this key; it is applied to registry-sized relations,
+    * never per data row.
+    */
+  private[graft] def registeredKey(c: Column): Column = uriForm(normPath(c))
+
+  /** [[registeredKey]] for driver-side strings. */
+  private[graft] def registeredKeyStr(p: String): String = uriFormStr(normPathStr(p))
+
+  private def uriFormStr(p: String): String =
+    if (p == null || !p.startsWith("/")) p else new java.net.URI("f", null, p, null).getRawPath
+
+  private val uriForm = udf((p: String) => uriFormStr(p))
 
   /** [[normPath]] for driver-side strings (same canonical form). */
   private[graft] def normPathStr(p: String): String =
@@ -2142,8 +2162,10 @@ object LogSync {
         else s
       },
       evolved = evo.isDefined)
+    // the keep-set holds manifest paths, the scan URI-form identities
+    val keep = paths.select(registeredKey(col("__registered_path")).as("__registered_path"))
     val kept = scan
-      .join(sizedKeepSet(spark, manifest, paths),
+      .join(sizedKeepSet(spark, manifest, keep),
         col("__src") === col("__registered_path"), "left_semi")
     // the alias fold runs BEFORE the delete anti-joins: an equality
     // delete committed after a rename binds the NEW name, and must
@@ -2213,22 +2235,103 @@ object LogSync {
     * it (the bytes stay on disk until vacuum, exactly like time
     * travel, so the consumer-lag horizon IS the vacuum retention).
     * This is the surface an incremental ETL job polls: each round it
-    * processes `tableSince(lastMark)` and advances its mark — cost ∝
-    * arrival rate, never lake size.
+    * processes `tableSince(lastMark)` and advances its mark.
+    *
+    * The read costs ∝ arrival rate, not lake size: the held manifest
+    * rows fold on the driver into the qualifying paths, and exactly
+    * those files are read, under the schema [[table]]'s root scan
+    * resolves ([[rootScanSchema]]), so no listing, inference or
+    * keep-set job runs; a poll right after a sync is one job, none
+    * without new files. The driver's fold and the schema derivation
+    * (once per sync) still pass over every registered file. The root
+    * scan and its keep-set semi-join ([[keepOnly]]) still serve the
+    * poll when the registry is past the driver cap,
+    * when the lake is evolved ([[LakeEvolve]]'s request schema and
+    * alias fold), and when that schema cannot be derived from the
+    * registered files.
     */
   def tableSince(spark: SparkSession, root: String, since: java.sql.Timestamp): DataFrame = {
     require(hasManifest(spark, root), s"no manifest under $root — run sync first")
     val m = manifestRows(spark, root)
-    val paths = registryDf(spark, m)
-      .filter(col("registered_at") > lit(since) &&
-        (col("op").isNull || col("op") === "append"))
-      .select(normPath(col("path")).as("__registered_path"))
     // MOR position deletes are deliberately NOT applied: this surface
     // reads APPEND commits only (delete commits are skipped the same
     // way rewrites are — Iceberg's incremental-append default), so a
     // consumer sees each appended row exactly once even if it is
     // later deleted
-    keepOnly(spark, root, m, paths)
+    val byPath = m match {
+      case Left((schema, rows)) if since != null && schema.fieldNames.contains("op") &&
+          LakeEvolve.stateAt(spark, root, None).isEmpty =>
+        rootScanSchema(spark, root, schema, rows).map { case (read, visible) =>
+          val (reg, op, path) = (schema.fieldIndex("registered_at"), schema.fieldIndex("op"),
+            schema.fieldIndex("path"))
+          val fresh = rows.iterator.filter(r => !r.isNullAt(reg) &&
+              r.getTimestamp(reg).after(since) &&
+              (r.isNullAt(op) || r.getString(op) == "append"))
+            .map(_.getString(path)).filter(visible).toSeq
+          if (fresh.isEmpty)
+            spark.createDataFrame(java.util.Collections.emptyList[Row](), read)
+          else readPathsGrouped(spark, root, fresh, _.schema(read))
+            .select(read.fieldNames.map(n => col(s"`${n.replace("`", "``")}`")): _*)
+        }
+      case _ => None
+    }
+    byPath.getOrElse {
+      val paths = registryDf(spark, m)
+        .filter(col("registered_at") > lit(since) &&
+          (col("op").isNull || col("op") === "append"))
+        .select(normPath(col("path")).as("__registered_path"))
+      keepOnly(spark, root, m, paths)
+    }
+  }
+
+  // (held manifest rows, session conf, derived schema) per (session, root)
+  private val rootSchemas = graft.SessionCaches.memo[String,
+    (Array[Row], Map[String, String], Option[(StructType, String => Boolean)])]()
+
+  /** The schema [[table]]'s root scan resolves, derived from the held
+    * manifest `rows` without a listing, with the test deciding whether
+    * a registered path is one the root scan lists at all (no name
+    * below the root that Spark's listing skips,
+    * [[PartitionBridge.hiddenName]]). The data columns come from the
+    * footer of the registered file whose path string sorts first:
+    * Spark's non-merging parquet inference reads the first data file
+    * ordered by `Path.toString`, the Hadoop form the manifest keeps.
+    * The partition columns come from Spark's own inference over the
+    * registered files' directories. None, so the caller takes the root
+    * scan, when the directories do not form one layout (a layout flip
+    * or a stray key), when a partition column types as anything but a
+    * string, int or long (the by-path read's cast would have to match
+    * inference exactly), or with schema merging on. The registered
+    * files stand for the files on disk, as they do once every append
+    * is synced. Derived once per registry state and session conf, on
+    * the driver: one footer read plus a pass over every registered
+    * path and its directory, so this part of a poll grows with the
+    * lake's file count, once per sync.
+    */
+  private def rootScanSchema(spark: SparkSession, root: String, schema: StructType,
+                             rows: Array[Row]): Option[(StructType, String => Boolean)] = {
+    val conf = spark.conf.getAll
+    rootSchemas.refresh(spark, root)(e => (e._1 eq rows) && e._2 == conf) {
+      val hadoop = spark.sessionState.newHadoopConf()
+      val base = new Path(root).getFileSystem(hadoop).makeQualified(new Path(root))
+      val prefix = normPathStr(base.toString) + "/"
+      val visible = (p: String) => {
+        val n = normPathStr(p)
+        n.startsWith(prefix) &&
+          !n.stripPrefix(prefix).split('/').exists(PartitionBridge.hiddenName)
+      }
+      val i = schema.fieldIndex("path")
+      val paths = rows.iterator.map(_.getString(i)).filter(visible).toSeq
+      val derived =
+        if (paths.isEmpty || spark.sessionState.conf.isParquetSchemaMergingEnabled) None
+        else for {
+          data <- Footers.schema(spark, new Path(paths.min))
+          parts <- scala.util.Try(PartitionBridge.partitionSchema(
+            spark, base, paths.map(p => new Path(p).getParent).distinct)).toOption
+          if parts.forall(f => Seq(StringType, IntegerType, LongType).contains(f.dataType))
+        } yield (PartitionBridge.relationSchema(spark, data, parts), visible)
+      (rows, conf, derived)
+    }._3
   }
 
   /** The newest registration instant — the mark an incremental
@@ -2377,7 +2480,10 @@ object LogSync {
       // spanning a layout flip group per generation, and the over-cap
       // root scan re-plans through scanRoot's per-generation fallback
       val raw0 = (if (nTargets <= explicitCap) {
+        // a delete row names its target by the scan's URI; the read
+        // takes the Hadoop path that URI decodes to
         val targets = targetRel.as[String].collect().toSeq
+          .map(t => new Path(new java.net.URI(t)).toString)
         readPathsGrouped(spark, root, targets, shaped, metad)
       } else {
         scanRoot(spark, root,

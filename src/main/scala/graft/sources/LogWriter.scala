@@ -1,6 +1,11 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SaveMode, SparkSession}
+import java.util.concurrent.TimeUnit
+
+import scala.concurrent.Await
+import scala.concurrent.duration.Duration
+
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Observation, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.GraftSqlBridge
 import org.apache.spark.sql.internal.SQLConf
@@ -39,9 +44,28 @@ object LogWriter {
     */
   val DailyLayout: Seq[String] = Seq("service_name", "year", "month", "day")
 
+  /** Appends `logs` to the lake at `path`, partitioned by `layout`, and
+    * returns the rows written. Rows are repartitioned by the layout
+    * columns into `min(spark.sql.shuffle.partitions, default
+    * parallelism)` tasks, a count AQE does not coalesce, so the write
+    * uses every core and no more tasks than there are cores (both are
+    * the core count under [[graft.GraftSession]], the only setting
+    * measured). All rows of one partition directory
+    * still meet in one task, so each directory gets one file per write,
+    * capped at `maxRecordsPerFile` rows. The row count is observed by
+    * the write job itself, so counting starts no job.
+    */
   def write(logs: DataFrame, path: String,
             maxRecordsPerFile: Long = DefaultMaxRecordsPerFile,
-            layout: Seq[String] = HourlyLayout): Unit = {
+            layout: Seq[String] = HourlyLayout): Long =
+    observedRows(commit(logs, path, maxRecordsPerFile, layout))
+
+  /** [[write]]'s commit: returns once the batch's files are committed,
+    * with the observation its row count arrives on ([[observedRows]]).
+    */
+  private[graft] def commit(logs: DataFrame, path: String,
+                            maxRecordsPerFile: Long = DefaultMaxRecordsPerFile,
+                            layout: Seq[String] = HourlyLayout): Observation = {
     // a LAYOUT-RENAMED lake keeps its physical directory keys forever
     // (the rename is a read-side alias — LakeEvolve `layout` entries);
     // a producer naturally holds the CURRENT logical name, so resolve
@@ -60,13 +84,22 @@ object LogWriter {
       .withColumn("hour", hour(col("timestamp")))
       // co-locate each partition's rows so one task writes one file per
       // partition dir instead of every task writing to every dir
-      .repartition(physLayout.map(col): _*)
-    lakeWriter(partitioned)
+      .repartition(math.min(spark.sessionState.conf.numShufflePartitions,
+        spark.sparkContext.defaultParallelism), physLayout.map(col): _*)
+    val observed = Observation()
+    lakeWriter(partitioned, Some(observed))
       .mode(SaveMode.Append)
       .option("maxRecordsPerFile", maxRecordsPerFile)
       .partitionBy(physLayout: _*)
       .parquet(path)
+    observed
   }
+
+  /** The row count a [[commit]] observed. Its metrics arrive through the
+    * listener bus right after the write job ends.
+    */
+  private[graft] def observedRows(observed: Observation): Long =
+    Await.result(observed.future, Duration(10, TimeUnit.MINUTES)).getLong(0)
 
   /** `df.write` for a lake data file: the write runs in a child session
     * of `df`'s session that sets only
@@ -77,10 +110,15 @@ object LogWriter {
     * compares as INT96 `TIMESTAMP`). The frame is rebuilt from its
     * analyzed plan, so a plan the caller cached is still read from the
     * shared cache. One child per session, re-cloned when the caller's
-    * conf has changed since.
+    * conf has changed since. `observed` counts the rows the write job
+    * writes: it is attached to the frame the child session runs, whose
+    * listeners complete it.
     */
-  private[sources] def lakeWriter(df: DataFrame): DataFrameWriter[Row] =
-    GraftSqlBridge.ofRows(microsSession(df.sparkSession), GraftSqlBridge.analyzed(df)).write
+  private[sources] def lakeWriter(df: DataFrame,
+                                  observed: Option[Observation] = None): DataFrameWriter[Row] = {
+    val child = GraftSqlBridge.ofRows(microsSession(df.sparkSession), GraftSqlBridge.analyzed(df))
+    observed.fold(child)(o => child.observe(o, count(lit(1)).as("rows"))).write
+  }
 
   // (the caller's conf when cloned, the child) per caller session
   private val microsSessions =

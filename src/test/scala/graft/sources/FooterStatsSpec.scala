@@ -133,10 +133,10 @@ class FooterStatsSpec extends graft.SparkSpec {
 
   test("a sync writes its rows through to the held registry, and a foreign change is re-read") {
     val root = tmp("graft_fstat_wt")
-    // service names a URI leaves as they are (see CHANGES.md on escaped
-    // directory values in table reads)
+    // service directory values URI escaping changes, beside plain ones
+    val svcs = Seq("a/b", "x y", "k=v", "e%", "e", "f")
     def rows(from: Long, until: Long, files: Int = 2) =
-      FooterStatsSpec.this.rows(from, until, Seq("a", "b", "c", "d", "e", "f"), files = files)
+      FooterStatsSpec.this.rows(from, until, svcs, files = files)
     def truth: Seq[Row] = {
       val dir = LogSync.manifestPath(spark, root)
       LogSync.readRegistryParts(spark, dir).collect().toSeq
@@ -170,7 +170,14 @@ class FooterStatsSpec extends graft.SparkSpec {
     sameRows(held, truth)
     LogWriter.write(rows(62, 68, files = 1), root, layout = LogWriter.DailyLayout)
     syncAndCheck(expect = 6, served = true)
+    // every read returns every row, whatever its directory is named
+    val now = new java.sql.Timestamp(System.currentTimeMillis())
+    val (from, until) = ("2000-01-01", "2100-01-01")
     assert(LogSync.table(spark, root).count() == 68)
+    assert(LogSync.tableAsOf(spark, root, now).count() == 68)
+    assert(LogSync.tableBetween(spark, root, from, until).count() == 68)
+    assert(svcs.map(LogSync.tableFor(spark, root, _, from, until).count()).sum == 68)
+    assert(LogSync.tableSince(spark, root, new java.sql.Timestamp(0L)).count() == 68)
   }
 
   test("lake files store µs timestamps with statistics; the session's own writes keep INT96") {

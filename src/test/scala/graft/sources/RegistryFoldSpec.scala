@@ -229,4 +229,21 @@ class RegistryFoldSpec extends graft.SparkSpec {
     val polled = jobsOf(LogSync.highWaterMark(spark, root))
     assert(polled.isEmpty, polled.mkString("\n", "\n", ""))
   }
+
+  test("a follower's first poll after a sync reads the new files in one job") {
+    val root = tmp("graft_jobs_since")
+    append(root, 0, 10, lake = true)
+    LogSync.sync(spark, root)
+    val mark = LogSync.highWaterMark(spark, root).get
+    LogSync.tableSince(spark, root, mark).collect() // a follower holds the registry
+    append(root, 10, 13, files = 1, lake = true)
+    LogSync.sync(spark, root)
+    // The held rows fold into the two new paths and the root scan's
+    // schema is derived on the driver, so no listing, inference or
+    // keep-set job runs: the one job is the read of the new files.
+    val (ids, jobs) = graft.SparkJobs.during(spark)(
+      LogSync.tableSince(spark, root, mark).select("span_id").collect().map(_.getString(0)))
+    assert(ids.sorted.toSeq == Seq("s10", "s11", "s12"))
+    assert(jobs.length == 1, jobs.mkString("\n", "\n", ""))
+  }
 }
