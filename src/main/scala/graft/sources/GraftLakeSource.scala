@@ -135,7 +135,7 @@ private[graft] class GraftLakeSource(spark: SparkSession, root: String,
       .getOrElse(windowed)
     val keep = bounded.select(
       LogSync.normPath(col("path")).as("__registered_path"))
-    GraftSqlBridge.asStreaming(LogSync.tableForPaths(spark, root, keep))
+    GraftSqlBridge.asStreaming(LogSync.tableForKeep(spark, root, keep))
   }
 
   override def commit(end: OffsetV1): Unit = () // the WAL is the store

@@ -1803,9 +1803,7 @@ object IcebergExport {
       LogSync.DeleteEntry(d.uri, 0L, p.getFileSystem(conf).getFileStatus(p).getLen)
     }
     val files = chain.files.map(_.uri)
-    val fast = LogSync.tableForPaths(spark, root,
-      files.toDF("path").select(LogSync.normPath(col("path")).as("__registered_path")),
-      deletes = delEntries)
+    val fast = LogSync.tableForPaths(spark, root, files, deletes = delEntries)
     // the lake-scan's sampled schema can MISS a late-added column on
     // a schema-evolved chain (inference reads one footer; older files
     // predate the column) — the metadata's declared schema is
@@ -1846,9 +1844,7 @@ object IcebergExport {
     val curPaths = cur.files.map(f => LogSync.normPathStr(fileUri(f.uri)))
     val prePaths = pre.files.map(f => LogSync.normPathStr(fileUri(f.uri)))
     if (!prePaths.toSet.subsetOf(curPaths.toSet)) return None
-    val fast = LogSync.tableForPaths(spark, root,
-      curPaths.toDF("path").select(col("path").as("__registered_path")),
-      keepSrc = true)
+    val fast = LogSync.tableForPaths(spark, root, curPaths, keepSrc = true)
     // the lake scan must serve every declared data column (the same
     // eligibility readTable's fast path checks) — otherwise the chain
     // reader with its completed schema is required and we fall back

@@ -3,9 +3,12 @@ package graft.sources
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-import org.apache.spark.sql.execution.datasources.graft.PartitionBridge
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
+import org.apache.spark.sql.execution.datasources.graft.{PartitionBridge, RegistryFileIndex}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType, TimestampType}
+import org.apache.spark.unsafe.types.UTF8String
+import scala.jdk.CollectionConverters._
 
 /** Incremental file registration — the reference's log-sync service
   * (scripts/sync-logs.sh): scan the lake for parquet files, diff
@@ -782,8 +785,8 @@ object LogSync {
         Option(r.getString(i(6))).getOrElse("delete"))
     deleteManifestRows(spark, root) match {
       case Left((schema, rows)) =>
-        val live = activeAt(rows, schema.fieldIndex("registered_at"),
-          schema.fieldIndex("removed_at"), asOf)
+        val (reg, rem) = (schema.fieldIndex("registered_at"), schema.fieldIndex("removed_at"))
+        val live = rows.filter(liveAt(_, reg, rem, asOf))
         if (capped && cap > 0 && live.length > cap) refuse()
         val i = cols.map(schema.fieldIndex)
         live.map(entry(_, i)).toSeq
@@ -1101,18 +1104,97 @@ object LogSync {
                                      (read: => DataFrame): DataFrame =
     registryDf(spark, registryRows(spark, dirStr)(read))
 
-  /** The held rows live at `asOf` (registered by then and not removed
-    * by then), or the untombstoned rows when `asOf` is None — the
-    * filter the DataFrame reads apply. Held stamps sit on Spark's
-    * microsecond grid, so plain `Timestamp` order matches Spark's
-    * comparison against a finer-grained `asOf`.
+  /** Whether a held row is live at `asOf` (registered by then and not
+    * removed by then), or untombstoned when `asOf` is None — the filter
+    * the DataFrame reads apply. Held stamps sit on Spark's microsecond
+    * grid, so plain `Timestamp` order matches Spark's comparison against
+    * a finer-grained `asOf`.
     */
-  private def activeAt(rows: Array[Row], reg: Int, rem: Int,
-                       asOf: Option[java.sql.Timestamp]): Array[Row] = asOf match {
-    case None => rows.filter(_.isNullAt(rem))
-    case Some(ts) => rows.filter(r => !r.isNullAt(reg) && !r.getTimestamp(reg).after(ts) &&
-      (r.isNullAt(rem) || r.getTimestamp(rem).after(ts)))
+  private def liveAt(r: Row, reg: Int, rem: Int, asOf: Option[java.sql.Timestamp]): Boolean =
+    asOf match {
+      case None => r.isNullAt(rem)
+      case Some(ts) => !r.isNullAt(reg) && !r.getTimestamp(reg).after(ts) &&
+        (r.isNullAt(rem) || r.getTimestamp(rem).after(ts))
+    }
+
+  /** Field access into rows of one data-manifest schema, for the
+    * predicates a keep-set is folded by ([[keepWhere]]): the same
+    * predicate reads held rows on the driver and, past the registry
+    * cap, the distributed registry's rows inside a UDF.
+    */
+  private final case class ManifestFields(schema: StructType) {
+    private val Seq(path, reg, rem, op, seq, minTs, maxTs, minSvc, maxSvc) =
+      Seq("path", "registered_at", "removed_at", "op", "seq", "min_ts", "max_ts", "min_svc",
+        "max_svc").map(schema.fieldIndex)
+
+    def pathOf(r: Row): String = r.getString(path)
+
+    def registeredMicros(r: Row): Long =
+      if (r.isNullAt(reg)) Long.MinValue
+      else DateTimeUtils.fromJavaTimestamp(r.getTimestamp(reg))
+
+    /** Part of the table at `asOf` (registered by then, not removed by
+      * then), or untombstoned when `asOf` is None.
+      */
+    def live(r: Row, asOf: Option[java.sql.Timestamp] = None): Boolean = liveAt(r, reg, rem, asOf)
+
+    def registeredAfter(r: Row, since: java.sql.Timestamp): Boolean =
+      since != null && !r.isNullAt(reg) && r.getTimestamp(reg).after(since)
+
+    /** The commit kind; null (pre-upgrade manifests) reads as append. */
+    def opOf(r: Row): String = if (r.isNullAt(op)) "append" else r.getString(op)
+
+    def seqOf(r: Row): Long = if (r.isNullAt(seq)) 0L else r.getLong(seq)
+
+    /** The file's µs `[min_ts, max_ts]`, when both are known. */
+    def zone(r: Row): Option[(Long, Long)] =
+      if (r.isNullAt(minTs) || r.isNullAt(maxTs)) None
+      else Some((DateTimeUtils.fromJavaTimestamp(r.getTimestamp(minTs)),
+        DateTimeUtils.fromJavaTimestamp(r.getTimestamp(maxTs))))
+
+    /** Whether the file's time values may meet `[from, until)` (µs): the
+      * zone-map rule the scan prunes by ([[RegistryFileIndex.mayMatch]]).
+      */
+    def mayHoldWindow(r: Row, from: Long, until: Long): Boolean = zone(r).forall { case (lo, hi) =>
+      RegistryFileIndex.mayMatch(RegistryFileIndex.Ge, from, lo, hi) &&
+        RegistryFileIndex.mayMatch(RegistryFileIndex.Lt, until, lo, hi)
+    }
+
+    /** Whether the file's `[min_svc, max_svc]` may contain `service`,
+      * ordered as Spark orders strings; a file without both stats may.
+      */
+    def mayHoldService(r: Row, service: String): Boolean =
+      r.isNullAt(minSvc) || r.isNullAt(maxSvc) || {
+        val s = UTF8String.fromString(service)
+        s.compareTo(UTF8String.fromString(r.getString(minSvc))) >= 0 &&
+          s.compareTo(UTF8String.fromString(r.getString(maxSvc))) <= 0
+      }
   }
+
+  /** A keep-set: registered paths in [[normPath]] form, held on the
+    * driver, or a one-column `__registered_path` relation.
+    */
+  private type KeepSet = Either[Seq[String], DataFrame]
+
+  /** The keep-set of the data-manifest rows `keep` accepts: folded on
+    * the driver over held rows (no job); past the registry cap the same
+    * predicate filters the distributed registry as a UDF.
+    */
+  private def keepWhere(m: Registry)(keep: (ManifestFields, Row) => Boolean): KeepSet = m match {
+    case Left((schema, rows)) =>
+      val f = ManifestFields(schema)
+      Left(rows.iterator.filter(keep(f, _)).map(r => normPathStr(f.pathOf(r))).toSeq)
+    case Right(df) =>
+      val f = ManifestFields(df.schema)
+      val accepts = udf((r: Row) => keep(f, r))
+      Right(df.filter(accepts(struct(df.columns.map(c => col(s"`$c`")): _*)))
+        .select(normPath(col("path")).as("__registered_path")))
+  }
+
+  /** Number of files in a keep-set: the driver list's length, one
+    * count job for a relation.
+    */
+  private def keepCount(k: KeepSet): Long = k.fold(_.length.toLong, _.count())
 
   /** The newest `registered_at` of a resolved registry: a driver fold
     * over held rows (a follower's repeat poll starts no Spark job), one
@@ -1363,16 +1445,24 @@ object LogSync {
     }
   }
 
-  /** [[keepOnly]] for cross-package CDC readers: the lake scan
-    * restricted to a `__registered_path` keep-set.
+  /** [[keepOnly]] for cross-package readers: the lake rows of the
+    * registered files in `paths`, a driver list of manifest paths.
     */
   private[graft] def tableForPaths(spark: SparkSession, root: String,
-                                   keep: DataFrame,
+                                   paths: Seq[String],
                                    deletes: Seq[DeleteEntry] = Seq.empty,
                                    keepSrc: Boolean = false
                                   ): DataFrame =
-    keepOnly(spark, root, manifestRows(spark, root), keep, deletes = deletes,
-      keepSrc = keepSrc)
+    keepOnly(spark, root, manifestRows(spark, root), Left(paths.map(normPathStr)),
+      deletes = deletes, keepSrc = keepSrc)
+
+  /** [[tableForPaths]] over a `__registered_path` keep-set relation (a
+    * CDC reader's increment): folded on the driver where [[keepOnly]]
+    * can, else applied as a semi-join.
+    */
+  private[graft] def tableForKeep(spark: SparkSession, root: String, keep: DataFrame,
+                                  deletes: Seq[DeleteEntry] = Seq.empty): DataFrame =
+    keepOnly(spark, root, manifestRows(spark, root), Right(keep), deletes = deletes)
 
   /** Manifest rows that are part of the table NOW (no tombstone). */
   private[sources] def activeManifest(spark: SparkSession, root: String): DataFrame =
@@ -1994,23 +2084,27 @@ object LogSync {
     activeManifest(spark, root).select(col("path"))
   }
 
-  /** Registered files as a DataFrame filtered to a snapshot bound —
-    * the pruning side of [[table]]/[[tableAsOf]].
+  /** [[registeredDataPaths]] folded on the driver over the held
+    * manifest: None past the registry cap.
     */
-  private def registeredPaths(spark: SparkSession, manifest: Registry,
-                              asOf: Option[java.sql.Timestamp]): DataFrame = {
-    val m = registryDf(spark, manifest)
-    // a snapshot sees the files registered by then and not yet replaced
-    // by then — tombstones make time travel survive compaction/DML (the
-    // replaced files are still on disk until vacuum, which is the
-    // travel horizon)
-    val bounded = asOf match {
-      case Some(ts) => m.filter(col("registered_at") <= lit(ts) &&
-        (col("removed_at").isNull || col("removed_at") > lit(ts)))
-      case None => m.filter(col("removed_at").isNull)
+  private[sources] def heldDataPaths(spark: SparkSession, root: String): Option[Seq[String]] = {
+    require(hasManifest(spark, root), s"no manifest under $root — run sync first")
+    manifestRows(spark, root) match {
+      case Left((schema, rows)) =>
+        val f = ManifestFields(schema)
+        Some(rows.iterator.filter(f.live(_)).map(f.pathOf).toSeq)
+      case Right(_) => None
     }
-    bounded.select(normPath(col("path")).as("__registered_path"))
   }
+
+  /** Registered files filtered to a snapshot bound — the keep-set of
+    * [[table]]/[[tableAsOf]]. A snapshot sees the files registered by
+    * then and not yet replaced by then — tombstones make time travel
+    * survive compaction/DML (the replaced files are still on disk until
+    * vacuum, which is the travel horizon).
+    */
+  private def registeredPaths(manifest: Registry, asOf: Option[java.sql.Timestamp]): KeepSet =
+    keepWhere(manifest)((f, r) => f.live(r, asOf))
 
   /** The distinct directory-key signatures (ordered `k` names of the
     * `k=v` path segments) across EVERY manifest row, tombstones
@@ -2106,21 +2200,28 @@ object LogSync {
       .reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
-  /** The shared read shape: scan the lake ROOT (partition
-    * discovery/pruning intact; underscore dirs skipped by the source)
-    * with `paths` — a one-column `__registered_path` keep-set —
-    * applied as a semi-join on the scan's file identity (broadcast
-    * under [[seqBroadcastRowCap]] via [[sizedKeepSet]], which sizes it
-    * by `manifest`, the caller's resolved data manifest; shuffled past
-    * it), so non-kept files are invisible without any driver-side
-    * path list.
-    * The identity comes from the DETERMINISTIC `_metadata.file_path`
-    * column — `input_file_name()` is nondeterministic, and a
-    * nondeterministic projection blocks partition/predicate pushdown
-    * past it, un-pruning every reader.
+  /** The shared read shape: the lake rows of exactly the files in the
+    * keep-set `keep`, with the row-level `deletes` applied.
+    *
+    * On a held registry the kept files are read through a
+    * [[RegistryFileIndex]] ([[registryScan]]): no root listing, no
+    * schema inference, no keep-set join, and only the files whose zone
+    * map may satisfy the query's time predicates are opened. Otherwise
+    * — the registry past its driver cap, an evolved lake ([[LakeEvolve]]'s
+    * request schema and alias fold), `mergeSchema`, or a root scan
+    * schema that cannot be derived from the registered files — the lake
+    * ROOT is scanned (partition discovery/pruning intact; underscore
+    * dirs skipped by the source) and the keep-set applies as a
+    * semi-join on the scan's file identity (broadcast under
+    * [[seqBroadcastRowCap]] via [[sizedKeepSet]], which sizes it by
+    * `manifest`, the caller's resolved data manifest; shuffled past
+    * it). The identity comes from the DETERMINISTIC
+    * `_metadata.file_path` column — `input_file_name()` is
+    * nondeterministic, and a nondeterministic projection blocks
+    * partition/predicate pushdown past it, un-pruning every reader.
     */
   private def keepOnly(spark: SparkSession, root: String, manifest: Registry,
-                       paths: DataFrame,
+                       keep: KeepSet,
                        mergeSchema: Boolean = false,
                        deletes: Seq[DeleteEntry] = Seq.empty,
                        evoAsOf: Option[java.sql.Timestamp] = None,
@@ -2141,32 +2242,40 @@ object LogSync {
     // not survive the multi-generation union); the row ordinal only
     // when a position delete will consume it — it must never leak
     // into the output of a lake with no deletes
-    val scan = scanRoot(spark, root,
-      reader = p => evo match {
-        case Some(st) => spark.read.option("basePath", root)
-          .schema(LakeEvolve.requestSchema(spark, root, st)).parquet(p)
-        case None if mergeSchema => spark.read.option("basePath", root)
-          .option("mergeSchema", "true").parquet(p)
-        case None =>
-          // resolved scan from the signature-keyed relation cache:
-          // skips the per-read footer/listing inference job AND the
-          // per-read root re-listing; the resulting scan is identical
-          // (the cached relation IS a prior resolution over the same
-          // registered state)
-          cachedRootScan(spark, root, p)
-      },
-      materialize = df => {
-        val s = df.withColumn("__src", normPath(col("_metadata.file_path")))
-        if (evo.isEmpty && deletes.exists(!_.isEq))
-          s.withColumn("__pos", col("_metadata.row_index"))
-        else s
-      },
-      evolved = evo.isDefined)
-    // the keep-set holds manifest paths, the scan URI-form identities
-    val keep = paths.select(registeredKey(col("__registered_path")).as("__registered_path"))
-    val kept = scan
-      .join(sizedKeepSet(spark, manifest, keep),
+    val withPos = evo.isEmpty && deletes.exists(!_.isEq)
+    def materialize(df: DataFrame): DataFrame = {
+      val s = df.withColumn("__src", normPath(col("_metadata.file_path")))
+      if (withPos) s.withColumn("__pos", col("_metadata.row_index")) else s
+    }
+    val indexed =
+      if (evo.isDefined || mergeSchema) None
+      else registryScan(spark, root, manifest, keep, materialize, withPos)
+    val kept = indexed.getOrElse {
+      val scan = scanRoot(spark, root,
+        reader = p => evo match {
+          case Some(st) => spark.read.option("basePath", root)
+            .schema(LakeEvolve.requestSchema(spark, root, st)).parquet(p)
+          case None if mergeSchema => spark.read.option("basePath", root)
+            .option("mergeSchema", "true").parquet(p)
+          case None =>
+            // resolved scan from the signature-keyed relation cache:
+            // skips the per-read footer/listing inference job AND the
+            // per-read root re-listing; the resulting scan is identical
+            // (the cached relation IS a prior resolution over the same
+            // registered state)
+            cachedRootScan(spark, root, p)
+        },
+        materialize = materialize,
+        evolved = evo.isDefined)
+      // the keep-set holds manifest paths, the scan URI-form identities
+      val paths = keep.fold(ps => {
+        import spark.implicits._
+        ps.toDF("__registered_path")
+      }, identity)
+      val k = paths.select(registeredKey(col("__registered_path")).as("__registered_path"))
+      scan.join(sizedKeepSet(spark, manifest, k),
         col("__src") === col("__registered_path"), "left_semi")
+    }
     // the alias fold runs BEFORE the delete anti-joins: an equality
     // delete committed after a rename binds the NEW name, and must
     // match pre-rename files' rows through the coalesce (their values
@@ -2191,12 +2300,84 @@ object LogSync {
     if (keepSrc) applied else applied.drop("__src")
   }
 
+  // per (session, qualified root): FileStatus per "registered
+  // path@registered_at µs". A registered file is immutable under its
+  // name, so one stat serves every read of it; a re-registered path is
+  // statted again. Entries of files no longer registered are dropped
+  // once they make up half the map.
+  private val registeredStatus = graft.SessionCaches.memo[String,
+    java.util.concurrent.ConcurrentHashMap[String, FileStatus]]()
+
+  /** [[keepOnly]]'s base scan on a held registry: the kept files that
+    * the root scan would list (visible under the root, on disk) as a
+    * [[RegistryFileIndex]] relation under the root scan's schema, with
+    * `materialize`'s file identities; the scan opens only the files
+    * whose registry zone map may satisfy its time predicates. The
+    * keep-set folds on the driver: a driver list as is, a relation that
+    * optimizes to a LocalRelation with no job, any other relation with
+    * one collect where [[sizedKeepSet]] would broadcast it. Each kept
+    * file is statted once per registration on the driver; a registered
+    * file missing on disk is left out, as the root listing leaves it
+    * out. No Spark job, whatever the file count. None, so the caller
+    * takes the root scan, when the registry is not held, the keep-set
+    * would not broadcast, [[rootScanSchema]] cannot derive the schema,
+    * or the kept directories do not form one layout.
+    */
+  private def registryScan(spark: SparkSession, root: String, manifest: Registry,
+                           keep: KeepSet, materialize: DataFrame => DataFrame,
+                           withPos: Boolean): Option[DataFrame] = manifest match {
+    case Left((schema, rows)) =>
+      for {
+        rs <- rootScanSchema(spark, root, schema, rows)
+        paths <- keep match {
+          case Left(ps) => Some(ps)
+          case Right(df) if df.queryExecution.optimizedPlan.isInstanceOf[
+              org.apache.spark.sql.catalyst.plans.logical.LocalRelation] ||
+              registryRowCount(manifest) <= seqBroadcastRowCap(spark) =>
+            Some(df.select(col("__registered_path")).collect().map(_.getString(0)).toSeq)
+          case Right(_) => None
+        }
+        fs = rs.base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        stats = registeredStatus(spark, rs.base.toString)(new java.util.concurrent.ConcurrentHashMap())
+        files = paths.iterator.map(normPathStr).filter(rs.visible).distinct.flatMap { n =>
+          val reg = rs.byPath.get(n)
+          val p = reg.fold(n)(_.path)
+          try Some(stats.computeIfAbsent(s"$p@${reg.fold(0L)(_.registeredAt)}",
+            _ => fs.getFileStatus(new Path(p))) -> reg.flatMap(_.zone))
+          catch { case _: java.io.FileNotFoundException => None }
+        }.toSeq
+        _ = if (stats.size > 2 * rs.byPath.size)
+          stats.keySet.retainAll(rs.byPath.valuesIterator.map(r => s"${r.path}@${r.registeredAt}")
+            .toSet.asJava)
+        scan <-
+          if (files.isEmpty) {
+            // no file to scan: an empty relation, so the read runs no job
+            val extra = StructField("__src", StringType) +:
+              (if (withPos) Seq(StructField("__pos", LongType)) else Nil)
+            Some(spark.createDataFrame(java.util.Collections.emptyList[Row](),
+              StructType(rs.read.fields ++ extra)))
+          } else scala.util.Try {
+            val index = new RegistryFileIndex(spark, rs.base, files.map(_._1),
+              files.collect { case (st, Some(z)) => st.getPath -> z }.toMap,
+              LakeEvolve.timeAxisOf(None), rs.read)
+            val df = materialize(RegistryFileIndex.scan(spark, index))
+            // partition columns come last in the relation; a directory
+            // key that is also a data column keeps its data position
+            val names = rs.read.fieldNames.toSeq
+            if (df.columns.take(names.length).toSeq == names) df
+            else df.select((names ++ df.columns.drop(names.length))
+              .map(n => col(s"`${n.replace("`", "``")}`")): _*)
+          }.toOption
+      } yield scan
+    case Right(_) => None
+  }
+
   private def filteredTable(spark: SparkSession, root: String,
                             asOf: Option[java.sql.Timestamp],
                             mergeSchema: Boolean = false): DataFrame = {
     require(hasManifest(spark, root), s"no manifest under $root — run sync first")
     val m = manifestRows(spark, root)
-    keepOnly(spark, root, m, registeredPaths(spark, m, asOf), mergeSchema,
+    keepOnly(spark, root, m, registeredPaths(m, asOf), mergeSchema,
       deletes = deleteEntries(spark, root, asOf), evoAsOf = asOf)
   }
 
@@ -2239,16 +2420,14 @@ object LogSync {
     *
     * The read costs ∝ arrival rate, not lake size: the held manifest
     * rows fold on the driver into the qualifying paths, and exactly
-    * those files are read, under the schema [[table]]'s root scan
-    * resolves ([[rootScanSchema]]), so no listing, inference or
-    * keep-set job runs; a poll right after a sync is one job, none
-    * without new files. The driver's fold and the schema derivation
-    * (once per sync) still pass over every registered file. The root
-    * scan and its keep-set semi-join ([[keepOnly]]) still serve the
-    * poll when the registry is past the driver cap,
-    * when the lake is evolved ([[LakeEvolve]]'s request schema and
-    * alias fold), and when that schema cannot be derived from the
-    * registered files.
+    * those files are read through [[keepOnly]]'s registry-backed scan,
+    * so no listing, inference or keep-set job runs; a poll right after
+    * a sync is one job, none without new files. The driver's fold and
+    * the schema derivation (once per sync) still pass over every
+    * registered file, and each new file is statted once. The root scan
+    * and its keep-set semi-join serve the poll where [[keepOnly]] falls
+    * back to them (registry past the driver cap, evolved lake, schema
+    * not derivable).
     */
   def tableSince(spark: SparkSession, root: String, since: java.sql.Timestamp): DataFrame = {
     require(hasManifest(spark, root), s"no manifest under $root — run sync first")
@@ -2258,41 +2437,40 @@ object LogSync {
     // way rewrites are — Iceberg's incremental-append default), so a
     // consumer sees each appended row exactly once even if it is
     // later deleted
-    val byPath = m match {
-      case Left((schema, rows)) if since != null && schema.fieldNames.contains("op") &&
-          LakeEvolve.stateAt(spark, root, None).isEmpty =>
-        rootScanSchema(spark, root, schema, rows).map { case (read, visible) =>
-          val (reg, op, path) = (schema.fieldIndex("registered_at"), schema.fieldIndex("op"),
-            schema.fieldIndex("path"))
-          val fresh = rows.iterator.filter(r => !r.isNullAt(reg) &&
-              r.getTimestamp(reg).after(since) &&
-              (r.isNullAt(op) || r.getString(op) == "append"))
-            .map(_.getString(path)).filter(visible).toSeq
-          if (fresh.isEmpty)
-            spark.createDataFrame(java.util.Collections.emptyList[Row](), read)
-          else readPathsGrouped(spark, root, fresh, _.schema(read))
-            .select(read.fieldNames.map(n => col(s"`${n.replace("`", "``")}`")): _*)
-        }
-      case _ => None
-    }
-    byPath.getOrElse {
-      val paths = registryDf(spark, m)
-        .filter(col("registered_at") > lit(since) &&
-          (col("op").isNull || col("op") === "append"))
-        .select(normPath(col("path")).as("__registered_path"))
-      keepOnly(spark, root, m, paths)
-    }
+    keepOnly(spark, root, m,
+      keepWhere(m)((f, r) => f.registeredAfter(r, since) && f.opOf(r) == "append"))
   }
 
-  // (held manifest rows, session conf, derived schema) per (session, root)
+  /** A registered file as [[keepOnly]]'s registry-backed scan needs it:
+    * its manifest path, newest registration (µs) and time zone map.
+    */
+  private final case class Registered(path: String, registeredAt: Long,
+                                      zone: Option[(Long, Long)])
+
+  /** The root scan's schema `read` and the registered files it would
+    * list, keyed by [[normPathStr]], under the qualified root `base`.
+    */
+  private final case class RootScan(read: StructType, base: Path,
+                                    byPath: Map[String, Registered]) {
+    private lazy val prefix = normPathStr(base.toString) + "/"
+
+    def visible(n: String): Boolean = visibleUnder(prefix)(n)
+  }
+
+  /** Whether the root scan lists `n` ([[normPathStr]] form) at all:
+    * below the root `prefix`, with no name Spark's listing skips
+    * ([[PartitionBridge.hiddenName]]).
+    */
+  private def visibleUnder(prefix: String)(n: String): Boolean =
+    n.startsWith(prefix) && !n.stripPrefix(prefix).split('/').exists(PartitionBridge.hiddenName)
+
+  // (held manifest rows, session conf, derived root scan) per (session, root)
   private val rootSchemas = graft.SessionCaches.memo[String,
-    (Array[Row], Map[String, String], Option[(StructType, String => Boolean)])]()
+    (Array[Row], Map[String, String], Option[RootScan])]()
 
   /** The schema [[table]]'s root scan resolves, derived from the held
-    * manifest `rows` without a listing, with the test deciding whether
-    * a registered path is one the root scan lists at all (no name
-    * below the root that Spark's listing skips,
-    * [[PartitionBridge.hiddenName]]). The data columns come from the
+    * manifest `rows` without a listing, with the registered files that
+    * scan would list. The data columns come from the
     * footer of the registered file whose path string sorts first:
     * Spark's non-merging parquet inference reads the first data file
     * ordered by `Path.toString`, the Hadoop form the manifest keeps.
@@ -2300,28 +2478,30 @@ object LogSync {
     * registered files' directories. None, so the caller takes the root
     * scan, when the directories do not form one layout (a layout flip
     * or a stray key), when a partition column types as anything but a
-    * string, int or long (the by-path read's cast would have to match
-    * inference exactly), or with schema merging on. The registered
+    * string, int or long (the registry-backed read's typing would have
+    * to match inference exactly), or with schema merging on. The registered
     * files stand for the files on disk, as they do once every append
     * is synced. Derived once per registry state and session conf, on
     * the driver: one footer read plus a pass over every registered
-    * path and its directory, so this part of a poll grows with the
+    * path and its directory, so this part of a read grows with the
     * lake's file count, once per sync.
     */
   private def rootScanSchema(spark: SparkSession, root: String, schema: StructType,
-                             rows: Array[Row]): Option[(StructType, String => Boolean)] = {
+                             rows: Array[Row]): Option[RootScan] = {
     val conf = spark.conf.getAll
     rootSchemas.refresh(spark, root)(e => (e._1 eq rows) && e._2 == conf) {
       val hadoop = spark.sessionState.newHadoopConf()
       val base = new Path(root).getFileSystem(hadoop).makeQualified(new Path(root))
-      val prefix = normPathStr(base.toString) + "/"
-      val visible = (p: String) => {
-        val n = normPathStr(p)
-        n.startsWith(prefix) &&
-          !n.stripPrefix(prefix).split('/').exists(PartitionBridge.hiddenName)
-      }
-      val i = schema.fieldIndex("path")
-      val paths = rows.iterator.map(_.getString(i)).filter(visible).toSeq
+      val f = ManifestFields(schema)
+      val visible = visibleUnder(normPathStr(base.toString) + "/") _
+      val byPath = rows.iterator
+        .map(r => Registered(f.pathOf(r), f.registeredMicros(r), f.zone(r)))
+        .filter(e => visible(normPathStr(e.path)))
+        .foldLeft(Map.empty[String, Registered]) { (acc, e) =>
+          val n = normPathStr(e.path)
+          if (acc.get(n).exists(_.registeredAt >= e.registeredAt)) acc else acc.updated(n, e)
+        }
+      val paths = byPath.valuesIterator.map(_.path).toSeq
       val derived =
         if (paths.isEmpty || spark.sessionState.conf.isParquetSchemaMergingEnabled) None
         else for {
@@ -2329,7 +2509,7 @@ object LogSync {
           parts <- scala.util.Try(PartitionBridge.partitionSchema(
             spark, base, paths.map(p => new Path(p).getParent).distinct)).toOption
           if parts.forall(f => Seq(StringType, IntegerType, LongType).contains(f.dataType))
-        } yield (PartitionBridge.relationSchema(spark, data, parts), visible)
+        } yield RootScan(PartitionBridge.relationSchema(spark, data, parts), base, byPath)
       (rows, conf, derived)
     }._3
   }
@@ -2367,10 +2547,8 @@ object LogSync {
                    since: java.sql.Timestamp): DataFrame = {
     require(hasManifest(spark, root), s"no manifest under $root — run sync first")
     val m = manifestRows(spark, root)
-    val paths = registryDf(spark, m)
-      .filter(col("registered_at") > lit(since) && col("op") === "upsert")
-      .select(normPath(col("path")).as("__registered_path"))
-    keepOnly(spark, root, m, paths)
+    keepOnly(spark, root, m,
+      keepWhere(m)((f, r) => f.registeredAfter(r, since) && f.opOf(r) == "upsert"))
   }
 
   /** CHANGELOG READ (opt-in): the rows RETRACTED by row-level delete
@@ -2580,11 +2758,7 @@ object LogSync {
       // the snapshot by the same seq rule (strictly below this one),
       // never this delete itself.
       val m = manifestRows(spark, root)
-      val keepPaths = registryDf(spark, m)
-        .filter(col("registered_at") <= lit(ts) &&
-          (col("removed_at").isNull || col("removed_at") > lit(ts)) &&
-          coalesce(col("seq"), lit(0L)) < lit(delSeq))
-        .select(normPath(col("path")).as("__registered_path"))
+      val keepPaths = keepWhere(m)((f, r) => f.live(r, Some(ts)) && f.seqOf(r) < delSeq)
       val snapshot = keepOnly(spark, root, m, keepPaths,
         deletes = deleteEntries(spark, root, Some(ts)).filter(_.seq < delSeq))
       // a key recorded under a retired name matches the snapshot's
@@ -2612,99 +2786,93 @@ object LogSync {
   /** Registered rows with `timestamp` in `[fromIso, untilIso)`
     * (ISO dates, UTC), with FILE-LEVEL pruning from the manifest's
     * zone-map stats: files whose [min_ts, max_ts] cannot intersect the
-    * window never join the semi-join pruning set. This is data
-    * skipping beyond directory partitioning — it works on
+    * window are never opened — they leave the keep-set, and the
+    * registry-backed scan skips them again by the row filter's bounds.
+    * This is data skipping beyond directory partitioning — it works on
     * unpartitioned lakes and inside partitions (Iceberg manifest
-    * min/max semantics); stat-less files (null min_ts) are kept, so
+    * min/max semantics); files without both stats are kept, so
     * pruning is always sound. The row-level filter still applies on
     * top for files that straddle the boundary.
     */
-  private def isoTs(iso: String): Column = {
-    // parse driver-side as a UTC INSTANT — a string cast(TimestampType)
+  private def isoInstant(iso: String): java.time.Instant =
+    // parsed driver-side as a UTC INSTANT — a string cast(TimestampType)
     // binds the literal to the session zone, silently shifting the
     // documented UTC window boundaries on any non-UTC session
-    val inst = java.time.LocalDate.parse(iso)
-      .atStartOfDay(java.time.ZoneOffset.UTC).toInstant
-    lit(java.sql.Timestamp.from(inst))
-  }
+    java.time.LocalDate.parse(iso).atStartOfDay(java.time.ZoneOffset.UTC).toInstant
 
-  /** Zone-map keep predicate, shared by the actual read path and the
-    * pruning observable so the spec can never certify a predicate the
-    * scan doesn't use: a file survives when its [min_ts, max_ts] may
-    * intersect [from, until), and stat-less files always survive.
+  /** The keep-set of active files whose zone maps may meet the window
+    * `[fromIso, untilIso)` and, given a service, whose service range may
+    * contain it — one driver rule shared by the reads and the prune
+    * counts, so the counts can never certify pruning the read doesn't do.
     */
-  private def zoneMapKeep(from: Column, until: Column): Column =
-    col("min_ts").isNull || (col("max_ts") >= from && col("min_ts") < until)
+  private def zoneKeep(m: Registry, fromIso: String, untilIso: String,
+                       service: Option[String]): KeepSet = {
+    val (from, until) = (DateTimeUtils.instantToMicros(isoInstant(fromIso)),
+      DateTimeUtils.instantToMicros(isoInstant(untilIso)))
+    keepWhere(m)((f, r) => f.live(r) && f.mayHoldWindow(r, from, until) &&
+      service.forall(f.mayHoldService(r, _)))
+  }
 
   def tableBetween(spark: SparkSession, root: String,
                    fromIso: String, untilIso: String): DataFrame = {
-    val (from, until) = (isoTs(fromIso), isoTs(untilIso))
+    val (from, until) = (lit(java.sql.Timestamp.from(isoInstant(fromIso))),
+      lit(java.sql.Timestamp.from(isoInstant(untilIso))))
     require(hasManifest(spark, root), s"no manifest under $root — run sync first")
     val m = manifestRows(spark, root)
-    val paths = registryDf(spark, m).filter(col("removed_at").isNull)
-      .filter(zoneMapKeep(from, until))
-      .select(normPath(col("path")).as("__registered_path"))
     // the row filter binds the time axis's CURRENT name (the zone map
     // is the field's; a rename moved only the name)
     val ts = col(LakeEvolve.timeAxis(spark, root))
-    keepOnly(spark, root, m, paths, deletes = deleteEntries(spark, root))
+    keepOnly(spark, root, m, zoneKeep(m, fromIso, untilIso, None),
+        deletes = deleteEntries(spark, root))
       .filter(ts >= from && ts < until)
   }
 
   /** How many registered files [[tableBetween]] would scan vs. the
     * total registered — the observable for zone-map pruning
-    * assertions and for capacity planning.
+    * assertions and for capacity planning. A driver fold over a held
+    * registry (no job).
     */
   def statsPruneCounts(spark: SparkSession, root: String,
                        fromIso: String, untilIso: String): (Long, Long) = {
-    val m = activeManifest(spark, root)
-    val kept = m.filter(zoneMapKeep(isoTs(fromIso), isoTs(untilIso))).count()
-    (kept, m.count())
+    val m = manifestRows(spark, root)
+    (keepCount(zoneKeep(m, fromIso, untilIso, None)), keepCount(registeredPaths(m, None)))
   }
-
-  /** Service-equality keep predicate over the service zone map: a file
-    * whose [min_svc, max_svc] range cannot contain `service` never
-    * reaches the scan. On a (service, timestamp)-clustered lake
-    * ([[LogCompact.compact]] `clusterBy`) each file covers ~one
-    * service, so this prunes like a partition directory would — without
-    * the directory.
-    */
-  private def svcKeep(service: Column): Column =
-    col("min_svc").isNull || (service >= col("min_svc") && service <= col("max_svc"))
 
   /** Registered rows for ONE service in a time window, file-pruned by
     * BOTH manifest zone maps (service min/max AND timestamp min/max)
-    * before the scan semi-join — the two-dimensional data-skipping
-    * read. Row-level filters still apply on top (files can straddle
-    * either boundary), so pruning is sound by construction: it only
-    * ever removes files the row filter would empty anyway.
+    * before the scan — the two-dimensional data-skipping read: a file
+    * whose ranges cannot contain the service or meet the window is
+    * never opened. On a (service, timestamp)-clustered lake
+    * ([[LogCompact.compact]] `clusterBy`) each file covers ~one
+    * service, so this prunes like a partition directory would — without
+    * the directory. Row-level filters still apply on top (files can
+    * straddle either boundary), so pruning is sound by construction: it
+    * only ever removes files the row filter would empty anyway.
     */
   def tableFor(spark: SparkSession, root: String, service: String,
                fromIso: String, untilIso: String): DataFrame = {
-    val (from, until) = (isoTs(fromIso), isoTs(untilIso))
+    val (from, until) = (lit(java.sql.Timestamp.from(isoInstant(fromIso))),
+      lit(java.sql.Timestamp.from(isoInstant(untilIso))))
     require(hasManifest(spark, root), s"no manifest under $root — run sync first")
     val m = manifestRows(spark, root)
-    val paths = registryDf(spark, m).filter(col("removed_at").isNull)
-      .filter(zoneMapKeep(from, until) && svcKeep(lit(service)))
-      .select(normPath(col("path")).as("__registered_path"))
     // both row filters bind their axis's CURRENT name (one state
     // resolution for the pair)
     val evoSt = LakeEvolve.state(spark, root)
     val ts = col(LakeEvolve.timeAxisOf(evoSt))
     val svc = col(LakeEvolve.svcAxisOf(evoSt))
-    keepOnly(spark, root, m, paths, deletes = deleteEntries(spark, root))
+    keepOnly(spark, root, m, zoneKeep(m, fromIso, untilIso, Some(service)),
+        deletes = deleteEntries(spark, root))
       .filter(svc === service && ts >= from && ts < until)
   }
 
   /** (kept, total) registered files [[tableFor]] would scan — the
-    * two-dimensional pruning observable.
+    * two-dimensional pruning observable, folded like [[statsPruneCounts]].
     */
   def forPruneCounts(spark: SparkSession, root: String, service: String,
                      fromIso: String, untilIso: String): (Long, Long) = {
-    val m = activeManifest(spark, root)
-    val kept = m.filter(zoneMapKeep(isoTs(fromIso), isoTs(untilIso)) &&
-      svcKeep(lit(service))).count()
-    (kept, m.count())
+    val m = manifestRows(spark, root)
+    (keepCount(zoneKeep(m, fromIso, untilIso, Some(service))),
+      keepCount(registeredPaths(m, None)))
   }
 
   /** Create (or overwrite) a named BRANCH: a ZERO-COPY pin of the
@@ -2809,7 +2977,7 @@ object LogSync {
             Option(r.getString(5)).map(_.split(',').toSeq).getOrElse(Seq.empty)))
           .toSeq
       }
-    keepOnly(spark, root, manifestRows(spark, root), paths, deletes = deletes)
+    keepOnly(spark, root, manifestRows(spark, root), Right(paths), deletes = deletes)
   }
 
   /** Delete a branch — releases its pin; the files it alone was

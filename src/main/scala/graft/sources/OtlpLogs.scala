@@ -82,11 +82,17 @@ object OtlpLogs {
 
   /** Parse a column of OTLP/JSON envelopes into flattened log rows. */
   def parse(df: DataFrame, jsonCol: Column): DataFrame = {
-    val rattrs = col("rl.resource.attributes")
+    val rattrs = col("rattrs")
+    // each exploded row carries only the resource attributes and the
+    // scope: the arrays are projected out as their own columns before
+    // they are exploded, so no output row copies its envelope's whole
+    // scope and record arrays
     df.select(from_json(jsonCol, otlpSchema).as("o"))
       .select(explode(col("o.resourceLogs")).as("rl"))
-      .select(col("rl"), explode(col("rl.scopeLogs")).as("sl"))
-      .select(col("rl"), col("sl"), explode(col("sl.logRecords")).as("lr"))
+      .select(col("rl.resource.attributes").as("rattrs"), col("rl.scopeLogs").as("sls"))
+      .select(rattrs, explode(col("sls")).as("sl"))
+      .select(rattrs, col("sl.scope").as("scope"), col("sl.logRecords").as("lrs"))
+      .select(rattrs, col("scope"), explode(col("lrs")).as("lr"))
       .select(
         timestamp_micros(expr("CAST(lr.timeUnixNano AS BIGINT) div 1000")).as("timestamp"),
         col("lr.observedTimeUnixNano").cast("long").as("observed_timestamp"),
@@ -100,9 +106,9 @@ object OtlpLogs {
         col("lr.spanId").as("span_id"),
         attrsJson(rattrs).as("resource_attributes"),
         attrsJson(col("lr.attributes")).as("log_attributes"),
-        col("sl.scope.name").as("scope_name"),
-        col("sl.scope.version").as("scope_version"),
-        attrsJson(col("sl.scope.attributes")).as("scope_attributes"))
+        col("scope.name").as("scope_name"),
+        col("scope.version").as("scope_version"),
+        attrsJson(col("scope.attributes")).as("scope_attributes"))
   }
 
   /** Parse with a quarantine: returns (valid rows, rejected payloads).

@@ -122,20 +122,35 @@ object OtlpMetrics {
     * data-point rows (kind ∈ gauge | sum | histogram).
     */
   def parse(df: DataFrame, jsonCol: Column): DataFrame = {
+    // each exploded row carries only the resource attributes, the
+    // scope name and its metric's own fields: the arrays are projected
+    // out as their own columns before they are exploded, so no output
+    // row copies its envelope's whole scope, metric and point arrays
     val exploded = df.select(from_json(jsonCol, otlpSchema).as("o"))
       .select(explode(col("o.resourceMetrics")).as("rm"))
-      .select(col("rm"), explode(col("rm.scopeMetrics")).as("sm"))
-      .select(col("rm"), col("sm"), explode(col("sm.metrics")).as("m"))
+      .select(col("rm.resource.attributes").as("rattrs"), col("rm.scopeMetrics").as("sms"))
+      .select(col("rattrs"), explode(col("sms")).as("sm"))
+      .select(col("rattrs"), col("sm.scope.name").as("scope_name"), col("sm.metrics").as("ms"))
+      .select(col("rattrs"), col("scope_name"), explode(col("ms")).as("m"))
+
+    // the data points of one metric kind, `metricCols` read off the
+    // metric before its point array is exploded
+    def pointsOf(field: String, metricCols: Column*) = exploded
+      .filter(col(s"m.$field.dataPoints").isNotNull)
+      .select(Seq(col("rattrs"), col("scope_name"), col("m.name").as("metric_name"),
+        col("m.unit").as("unit")) ++ metricCols :+ col(s"m.$field.dataPoints").as("dps"): _*)
+      .select(col("*"), explode(col("dps")).as("dp"))
+      .drop("dps")
 
     def base(kind: String) = Seq(
       timestamp_micros(expr("CAST(dp.timeUnixNano AS BIGINT) div 1000")).as("timestamp"),
-      coalesce(resourceAttr(col("rm.resource.attributes"), "service.name"),
+      coalesce(resourceAttr(col("rattrs"), "service.name"),
         lit("unknown")).as("service_name"),
-      col("m.name").as("metric_name"),
-      col("m.unit").as("unit"),
+      col("metric_name"),
+      col("unit"),
       lit(kind).as("kind"),
-      col("sm.scope.name").as("scope_name"),
-      attrsJson(col("rm.resource.attributes")).as("resource_attributes"))
+      col("scope_name"),
+      attrsJson(col("rattrs")).as("resource_attributes"))
 
     // the data point's EXEMPLARS — the metrics→traces hop carried on
     // the wire — land as one canonical JSON array (null when absent),
@@ -149,19 +164,18 @@ object OtlpMetrics {
           coalesce(e.getField("asDouble"),
             e.getField("asInt").cast("double")).as("value")))))
 
-    def numberRows(field: String, kind: String) = exploded
-      .filter(col(s"m.$field.dataPoints").isNotNull)
-      .select(col("rm"), col("sm"), col("m"),
-        explode(col(s"m.$field.dataPoints")).as("dp"))
-      .select(base(kind) ++ Seq(
-        coalesce(col("dp.asDouble"), col("dp.asInt").cast("double")).as("value"),
+    def numberRows(field: String, kind: String) = pointsOf(field,
         (if (kind == "sum") coalesce(col("m.sum.isMonotonic"), lit(false))
          else lit(null).cast("boolean")).as("is_monotonic"),
         // temporality decides whether rate() needs reset correction
         // (cumulative=2) or a plain sum (delta=1) — irrecoverable
         // after ingest, so it must land (gauges have none)
         (if (kind == "sum") temporalityOf(col("m.sum.aggregationTemporality"))
-         else lit(null).cast("int")).as("temporality"),
+         else lit(null).cast("int")).as("temporality"))
+      .select(base(kind) ++ Seq(
+        coalesce(col("dp.asDouble"), col("dp.asInt").cast("double")).as("value"),
+        col("is_monotonic"),
+        col("temporality"),
         lit(null).cast("long").as("point_count"),
         lit(null).cast("double").as("point_sum"),
         lit(null).cast("string").as("bucket_counts"),
@@ -169,14 +183,12 @@ object OtlpMetrics {
         exemplarsJson(col("dp.exemplars")).as("exemplars"),
         attrsJson(col("dp.attributes")).as("attributes")): _*)
 
-    val histRows = exploded
-      .filter(col("m.histogram.dataPoints").isNotNull)
-      .select(col("rm"), col("sm"), col("m"),
-        explode(col("m.histogram.dataPoints")).as("dp"))
+    val histRows = pointsOf("histogram",
+        temporalityOf(col("m.histogram.aggregationTemporality")).as("temporality"))
       .select(base("histogram") ++ Seq(
         lit(null).cast("double").as("value"),
         lit(null).cast("boolean").as("is_monotonic"),
-        temporalityOf(col("m.histogram.aggregationTemporality")).as("temporality"),
+        col("temporality"),
         col("dp.count").cast("long").as("point_count"),
         col("dp.sum").as("point_sum"),
         to_json(col("dp.bucketCounts")).as("bucket_counts"),
@@ -191,14 +203,12 @@ object OtlpMetrics {
     // `bucket_counts` — no lake schema evolution, and consumers
     // re-read it with [[expStructSchema]]; `explicit_bounds` is null
     // (an exponential histogram has none)
-    val expRows = exploded
-      .filter(col("m.exponentialHistogram.dataPoints").isNotNull)
-      .select(col("rm"), col("sm"), col("m"),
-        explode(col("m.exponentialHistogram.dataPoints")).as("dp"))
+    val expRows = pointsOf("exponentialHistogram",
+        temporalityOf(col("m.exponentialHistogram.aggregationTemporality")).as("temporality"))
       .select(base("exp_histogram") ++ Seq(
         lit(null).cast("double").as("value"),
         lit(null).cast("boolean").as("is_monotonic"),
-        temporalityOf(col("m.exponentialHistogram.aggregationTemporality")).as("temporality"),
+        col("temporality"),
         col("dp.count").cast("long").as("point_count"),
         col("dp.sum").as("point_sum"),
         to_json(struct(
@@ -221,10 +231,7 @@ object OtlpMetrics {
     // array in `bucket_counts` (re-read with [[summaryQuantileSchema]]).
     // Summaries define no temporality (always cumulative-style
     // snapshots) and no bounds.
-    val summaryRows = exploded
-      .filter(col("m.summary.dataPoints").isNotNull)
-      .select(col("rm"), col("sm"), col("m"),
-        explode(col("m.summary.dataPoints")).as("dp"))
+    val summaryRows = pointsOf("summary")
       .select(base("summary") ++ Seq(
         lit(null).cast("double").as("value"),
         lit(null).cast("boolean").as("is_monotonic"),

@@ -67,11 +67,17 @@ object OtlpTraces {
     * the span lake shares [[LogWriter]]'s time-partitioned layouts.
     */
   def parse(df: DataFrame, jsonCol: Column): DataFrame = {
-    val rattrs = col("rs.resource.attributes")
+    val rattrs = col("rattrs")
+    // each exploded row carries only the resource attributes and the
+    // scope: the arrays are projected out as their own columns before
+    // they are exploded, so no output row copies its envelope's whole
+    // scope and span arrays
     df.select(from_json(jsonCol, otlpSchema).as("o"))
       .select(explode(col("o.resourceSpans")).as("rs"))
-      .select(col("rs"), explode(col("rs.scopeSpans")).as("ss"))
-      .select(col("rs"), col("ss"), explode(col("ss.spans")).as("sp"))
+      .select(col("rs.resource.attributes").as("rattrs"), col("rs.scopeSpans").as("sss"))
+      .select(rattrs, explode(col("sss")).as("ss"))
+      .select(rattrs, col("ss.scope").as("scope"), col("ss.spans").as("sps"))
+      .select(rattrs, col("scope"), explode(col("sps")).as("sp"))
       .select(
         timestamp_micros(expr("CAST(sp.startTimeUnixNano AS BIGINT) div 1000")).as("timestamp"),
         (col("sp.endTimeUnixNano").cast("long") -
@@ -84,8 +90,8 @@ object OtlpTraces {
         coalesce(col("sp.kind"), lit(0)).as("span_kind"),
         coalesce(col("sp.status.code"), lit(0)).as("status_code"),
         col("sp.status.message").as("status_message"),
-        col("ss.scope.name").as("scope_name"),
-        col("ss.scope.version").as("scope_version"),
+        col("scope.name").as("scope_name"),
+        col("scope.version").as("scope_version"),
         attrsJson(rattrs).as("resource_attributes"),
         attrsJson(col("sp.attributes")).as("span_attributes"),
         // SPAN EVENTS (the in-span log records OTel SDKs attach —

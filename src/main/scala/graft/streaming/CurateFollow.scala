@@ -45,7 +45,7 @@ object CurateFollow {
   private def signalsFor(spark: SparkSession, root: String,
                          paths: DataFrame): DataFrame =
     Curation.curateSignalsOf(
-      LogSync.tableForPaths(spark, root, paths).select(col("doc_id"), col("text")))
+      LogSync.tableForKeep(spark, root, paths).select(col("doc_id"), col("text")))
 
   private def keepersOf(sig: DataFrame): DataFrame =
     sig.groupBy(col("fp")).agg(min(col("doc_id")).as("keeper"))

@@ -53,7 +53,7 @@ object DedupFollow {
   private def shinglesFor(spark: SparkSession, root: String,
                           paths: DataFrame): DataFrame =
     Dedup.docShinglesOf(
-      LogSync.tableForPaths(spark, root, paths).select(col("doc_id"), col("text")))
+      LogSync.tableForKeep(spark, root, paths).select(col("doc_id"), col("text")))
 
   /** The consumed corpus' shingles, reusing and extending the store.
     *

@@ -170,10 +170,8 @@ object LakeFollow {
       .as[String].collect().toSeq
     if (freshPaths.isEmpty) None
     else {
-      val keep = freshPaths.toDF("path")
-        .select(LogSync.normPath(col("path")).as("__registered_path"))
       Some(Increment(committedVersion(spark, marksDir) + 1, freshPaths,
-        LogSync.tableForPaths(spark, root, keep)))
+        LogSync.tableForPaths(spark, root, freshPaths)))
     }
   }
 

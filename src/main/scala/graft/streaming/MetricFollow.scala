@@ -69,7 +69,7 @@ object MetricFollow {
 
   private def pointsFor(spark: SparkSession, root: String,
                         paths: DataFrame, metricName: String): DataFrame =
-    pointsOf(LogSync.tableForPaths(spark, root, paths), metricName)
+    pointsOf(LogSync.tableForKeep(spark, root, paths), metricName)
 
   /** Newest sample per series: max by (ts, value) — the same
     * tiebreak order as the batch window.

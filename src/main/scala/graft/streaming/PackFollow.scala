@@ -49,7 +49,7 @@ object PackFollow {
 
   private def toksFor(spark: SparkSession, root: String,
                       paths: DataFrame): DataFrame =
-    TrainPrep.docToksOf(LogSync.tableForPaths(spark, root, paths)
+    TrainPrep.docToksOf(LogSync.tableForKeep(spark, root, paths)
       .select(col("doc_id"), col("source"), col("text")))
 
   private def cumOf(df: DataFrame): DataFrame =

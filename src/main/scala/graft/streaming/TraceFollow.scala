@@ -69,7 +69,7 @@ object TraceFollow {
 
   private def spansFor(spark: SparkSession, root: String,
                        paths: DataFrame): DataFrame =
-    spansOf(LogSync.tableForPaths(spark, root, paths))
+    spansOf(LogSync.tableForKeep(spark, root, paths))
 
   private def childrenOf(spans: DataFrame): DataFrame =
     spans.filter(col("parent_span_id").isNotNull &&

@@ -56,7 +56,7 @@ class LakeSpec extends SparkSpec {
     assert(q.collect().nonEmpty)
   }
 
-  test("LogSync: many-file lake syncs via anti-join; table plan is root-scan + semi-join") {
+  test("LogSync: many-file lake syncs via anti-join; table plan scans only the registered files") {
     val root = Files.createTempDirectory("graft_manyfiles").toString
     // ~40 files per batch: enough to exercise the distributed diff
     Tables.events(spark, sf).limit(400)
@@ -69,8 +69,8 @@ class LakeSpec extends SparkSpec {
     val t = LogSync.table(spark, root)
     assert(t.count() == 400)
     val plan = planString(t)
-    assert(plan.contains("LeftSemi"),
-      s"table() must prune via a manifest semi-join, not a path vararg:\n$plan")
+    assert(plan.contains("RegistryFileIndex") && !plan.contains("LeftSemi"),
+      s"table() must scan the registered files, with no keep-set semi-join:\n$plan")
     // unregistered files stay invisible until the next sync
     Tables.events(spark, sf).limit(100)
       .select(col("ts").as("timestamp"), lit("s9").as("service_name"),

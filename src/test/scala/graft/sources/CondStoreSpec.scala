@@ -145,7 +145,7 @@ class CondStoreSpec extends graft.SparkSpec {
     withCondStrategy(latencyMs = 5) {
       val fs = new Path("cond:/tmp").getFileSystem(
         spark.sparkContext.hadoopConfiguration)
-      val dir = Files.createTempDirectory("graft_cond").toString
+      val dir = tempDir("graft_cond")
       (1 to 20).foreach { round =>
         val claim = new Path(s"cond:$dir/claim_$round")
         val gate = new java.util.concurrent.CountDownLatch(1)
@@ -171,7 +171,7 @@ class CondStoreSpec extends graft.SparkSpec {
       spark.conf.set("graft.lake.claimGraceMs", "500")
       spark.conf.set("graft.lake.dmlLeaseWaitMs", "600")
       try {
-        val local = Files.createTempDirectory("graft_condfz").toString
+        val local = tempDir("graft_condfz")
         val root = s"cond:$local/lake"
         val fs = new Path(root).getFileSystem(
           spark.sparkContext.hadoopConfiguration)
@@ -215,7 +215,7 @@ class CondStoreSpec extends graft.SparkSpec {
 
   test("claim/lease races hold on the conditional-create store: concurrent equality deletes") {
     withCondStrategy() {
-      val local = Files.createTempDirectory("graft_condlake").toString
+      val local = tempDir("graft_condlake")
       val root = s"cond:$local/lake"
       import spark.implicits._
       Tables.events(spark, sf).limit(60)

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import scala.concurrent._
 import scala.concurrent.duration._
 import scala.concurrent.ExecutionContext.Implicits.global
@@ -29,7 +27,7 @@ class DmlConcurrencySpec extends graft.SparkSpec {
 
   /** Events-shaped lake with `n` rows, ids 0 until n. */
   private def seeded(n: Int): String = {
-    val root = Files.createTempDirectory("graft_dmlrace").toString
+    val root = tempDir("graft_dmlrace")
     Tables.events(spark, sf).limit(n)
       .select(col("ts").as("timestamp"), lit("svc").as("service_name"),
         col("event_type").as("severity_text"), col("event_id"),
@@ -299,7 +297,7 @@ class DmlConcurrencySpec extends graft.SparkSpec {
   }
 
   test("a LIVE holder outlasting claimGraceMs keeps the DML lease (heartbeat); the waiter enters only after release") {
-    val root = Files.createTempDirectory("graft_leasebeat").toString
+    val root = tempDir("graft_leasebeat")
     spark.conf.set("graft.lake.claimGraceMs", "400")
     spark.conf.set("graft.lake.dmlLeaseWaitMs", "20000")
     try {
@@ -403,7 +401,7 @@ class DmlConcurrencySpec extends graft.SparkSpec {
   }
 
   test("retireStaleClaim re-verifies staleness after winning the rename: a freshened claim is restored, not retired") {
-    val dir = Files.createTempDirectory("graft_retire").toString
+    val dir = tempDir("graft_retire")
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     def residue(): Seq[String] =

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
@@ -21,8 +19,6 @@ import org.apache.spark.sql.functions._
   * the caller session's conf.
   */
 class FooterStatsSpec extends graft.SparkSpec {
-
-  private def tmp(prefix: String): String = Files.createTempDirectory(prefix).toString
 
   private def jobsOf(f: => Any): Seq[String] = graft.SparkJobs.during(spark)(f)._2
 
@@ -64,22 +60,22 @@ class FooterStatsSpec extends graft.SparkSpec {
     val sometimesNull = (id: Column) => id % 3 === 0
     // hourly and daily layouts, with null timestamps and escaped
     // service directory values
-    val hourly = tmp("graft_fstat_hourly")
+    val hourly = tempDir("graft_fstat_hourly")
     LogWriter.write(rows(0, 120, nullTs = sometimesNull), hourly)
-    val daily = tmp("graft_fstat_daily")
+    val daily = tempDir("graft_fstat_daily")
     LogWriter.write(rows(0, 3000, nullTs = sometimesNull, files = 3), daily,
       layout = LogWriter.DailyLayout)
     // a file whose timestamps are all null, beside ordinary ones
-    val allNull = tmp("graft_fstat_null")
+    val allNull = tempDir("graft_fstat_null")
     lakeWrite(rows(0, 20, svcs = Seq("n"), nullTs = _ => lit(true), files = 1), allNull,
       "service_name")
     lakeWrite(rows(20, 40), allNull, "service_name")
     // service as a data column: its min/max from the footer's UTF8 stats
-    val flat = tmp("graft_fstat_flat")
+    val flat = tempDir("graft_fstat_flat")
     lakeWrite(rows(0, 50, nullTs = sometimesNull), flat)
     // several row groups in one file, folded in UTF-8 byte order: U+FFFD
     // sorts below U+1D11E there, above it in Java's UTF-16 order
-    val groups = tmp("graft_fstat_groups")
+    val groups = tempDir("graft_fstat_groups")
     LogWriter.lakeWriter(rows(0, 3000, svcs = Seq("\uFFFD"), files = 1)
         .withColumn("service_name", when(col("span_id") >= "s2", "\uD834\uDD1E")
           .otherwise(col("service_name"))).orderBy("span_id").coalesce(1))
@@ -102,7 +98,7 @@ class FooterStatsSpec extends graft.SparkSpec {
   test("renames, numeric service values, a layout flip and INT96 files take the scan") {
     // a service directory value Spark types as a number reads as a null
     // string; beside a non-numeric value the same dirs type as strings
-    val numeric = tmp("graft_fstat_num")
+    val numeric = tempDir("graft_fstat_num")
     lakeWrite(rows(0, 20, svcs = Seq("123", "4.5")), numeric, "service_name")
     assert(agree(numeric).nonEmpty)
     assert(LogSync.scanStats(spark, numeric, LogSync.listParquet(spark, numeric))
@@ -111,17 +107,17 @@ class FooterStatsSpec extends graft.SparkSpec {
     assert(agree(numeric).nonEmpty)
     // one round over two layout generations: the µs group from its
     // footers, the INT96 group by the scan
-    val flipped = tmp("graft_fstat_flip")
+    val flipped = tempDir("graft_fstat_flip")
     lakeWrite(rows(0, 30), flipped, "service_name")
     int96Write(rows(30, 60).withColumn("day", lit(1)), flipped, "day", "service_name")
     assert(agree(flipped).nonEmpty)
     // INT96 and µs files in one directory-key group
-    val mixed = tmp("graft_fstat_mix")
+    val mixed = tempDir("graft_fstat_mix")
     lakeWrite(rows(0, 30), mixed, "service_name")
     int96Write(rows(30, 60), mixed, "service_name")
     assert(agree(mixed).nonEmpty)
     // a time-axis and a service-axis rename: one round may mix names
-    val renamed = tmp("graft_fstat_rename")
+    val renamed = tempDir("graft_fstat_rename")
     lakeWrite(rows(0, 30), renamed, "service_name")
     LogSync.sync(spark, renamed)
     LakeEvolve.renameColumn(spark, renamed, "service_name", "service")
@@ -132,7 +128,7 @@ class FooterStatsSpec extends graft.SparkSpec {
   }
 
   test("a sync writes its rows through to the held registry, and a foreign change is re-read") {
-    val root = tmp("graft_fstat_wt")
+    val root = tempDir("graft_fstat_wt")
     // service directory values URI escaping changes, beside plain ones
     val svcs = Seq("a/b", "x y", "k=v", "e%", "e", "f")
     def rows(from: Long, until: Long, files: Int = 2) =
@@ -203,7 +199,7 @@ class FooterStatsSpec extends graft.SparkSpec {
       .withColumn("n", counted(col("span_id").substr(2, 9).cast("long"))).cache()
     cached.count()
     val before = evaluated.value
-    val lake = tmp("graft_fstat_enc")
+    val lake = tempDir("graft_fstat_enc")
     LogWriter.write(cached, lake)
     assert(evaluated.value == before, "the lake write recomputed a cached frame")
     cached.unpersist()
@@ -218,7 +214,7 @@ class FooterStatsSpec extends graft.SparkSpec {
     assert(stats.exists(s => !s.hasNonNullValue && s.getNumNulls > 0))
     assert(spark.conf.getOption(key) == confBefore)
     // the session's own parquet writes are untouched
-    val plain = tmp("graft_fstat_plain")
+    val plain = tempDir("graft_fstat_plain")
     rows(0, 10).write.mode("overwrite").parquet(plain)
     assert(timeColumn(plain)._1.map(_.getPrimitiveTypeName) == Seq(PrimitiveTypeName.INT96))
     // a conf the caller sets later reaches the lake writes
@@ -226,7 +222,7 @@ class FooterStatsSpec extends graft.SparkSpec {
     val codecBefore = spark.conf.getOption(codec)
     spark.conf.set(codec, "gzip")
     try {
-      val gz = tmp("graft_fstat_gzip")
+      val gz = tempDir("graft_fstat_gzip")
       LogWriter.write(rows(0, 10), gz)
       val (types, _, codecs) = timeColumn(gz)
       assert(codecs == Seq("GZIP"))

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.sources.{LakeDml, LogSync, Tables}
@@ -18,7 +16,7 @@ import graft.sources.{LakeDml, LogSync, Tables}
 class ManifestCasSpec extends graft.SparkSpec {
 
   private def seeded(): String = {
-    val root = Files.createTempDirectory("graft_cas").toString
+    val root = tempDir("graft_cas")
     Tables.events(spark, sf).limit(50)
       .select(col("ts").as("timestamp"), lit("svc").as("service_name"),
         col("event_type").as("severity_text"),
@@ -107,7 +105,7 @@ class ManifestCasSpec extends graft.SparkSpec {
     // stamp, so the SQL poll loop (watermark FIRST, then changes since
     // the stored mark, then store the watermark) is exact.
     graft.GraftTableFunctions.ensureRegistered(spark)
-    val root = Files.createTempDirectory("graft_pollrace").toString
+    val root = tempDir("graft_pollrace")
     val all = Tables.events(spark, sf).orderBy(col("event_id")).limit(240)
       .select(col("ts").as("timestamp"), lit("svc").as("service_name"),
         col("event_type").as("severity_text"),

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.streaming.LakeFollow
@@ -34,8 +32,8 @@ class SelfHealFollowSpec extends graft.SparkSpec {
       .coalesce(1).write.mode("append").parquet(root)
 
   test("a batch consumed BEFORE its registration is lost is NOT re-emitted after the heal (exactly-once by path)") {
-    val root = Files.createTempDirectory("graft_healfollow").toString
-    val marks = Files.createTempDirectory("graft_healfollow_marks").toString
+    val root = tempDir("graft_healfollow")
+    val marks = tempDir("graft_healfollow_marks")
     writeRows(root, 50, 0)
     LogSync.sync(spark, root)
     def drain(): Long = LakeFollow.poll(spark, root, marks).map { inc =>
@@ -70,8 +68,8 @@ class SelfHealFollowSpec extends graft.SparkSpec {
   }
 
   test("a batch lost BEFORE the follower ever saw it surfaces exactly once after the heal") {
-    val root = Files.createTempDirectory("graft_healfollow2").toString
-    val marks = Files.createTempDirectory("graft_healfollow2_marks").toString
+    val root = tempDir("graft_healfollow2")
+    val marks = tempDir("graft_healfollow2_marks")
     writeRows(root, 50, 0)
     LogSync.sync(spark, root)
     val first = LakeFollow.poll(spark, root, marks).get

@@ -28,7 +28,7 @@ class TablesSchemaSpec extends graft.SparkSpec {
   }
 
   private def tableDir(): (String, Path) = {
-    val dir = Files.createTempDirectory("graft_tables")
+    val dir = java.nio.file.Paths.get(tempDir("graft_tables"))
     (dir.toString, dir.resolve("t.parquet"))
   }
 
