@@ -56,7 +56,10 @@ class LakeSpec extends SparkSpec {
     assert(q.collect().nonEmpty)
   }
 
-  test("LogSync: many-file lake syncs via anti-join; table plan scans only the registered files") {
+  // The name predates the registry-backed file index; it is kept so the
+  // test's history lines up. The plan is now an index scan over exactly
+  // the registered files, with no root scan and no keep-set semi-join.
+  test("LogSync: many-file lake syncs via anti-join; table plan is root-scan + semi-join") {
     val root = Files.createTempDirectory("graft_manyfiles").toString
     // ~40 files per batch: enough to exercise the distributed diff
     Tables.events(spark, sf).limit(400)
